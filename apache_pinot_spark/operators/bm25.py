@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 
 from apache_pinot_spark.operators.dedup import _spread
 from apache_pinot_spark.operators.dsir import _tokens
+from apache_pinot_spark.session import local_frame
 
 
 def query_terms(query: str) -> list[str]:
@@ -210,7 +211,7 @@ def bm25_scores_multi(
         F.log(F.lit(1.0) + (F.lit(float(n_docs)) - F.col("df") + 0.5)
               / (F.col("df") + 0.5)).alias("idf"))
     spark = corpus.sparkSession
-    qmap = spark.createDataFrame(qt, "query_id string, term string")
+    qmap = local_frame(spark, qt, "query_id string, term string")
 
     scored = (hits.join(F.broadcast(idf), "term")
               .join(F.broadcast(qmap), "term")

@@ -33,6 +33,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from apache_pinot_spark.session import local_frame
+
 
 def connected_components(
     edges: DataFrame,
@@ -82,8 +84,8 @@ def connected_components(
         out = [(k, find(k)) for k in parent]
         spark = edges.sparkSession
         key_type = e.schema["a"].dataType.simpleString()
-        return spark.createDataFrame(
-            out, schema=f"key {key_type}, component {key_type}"
+        return local_frame(
+            spark, out, schema=f"key {key_type}, component {key_type}"
         )
     sym = materialize_release(
         e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b")))

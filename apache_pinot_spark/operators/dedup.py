@@ -43,23 +43,32 @@ def _plan_has_nodes(plan: str, names: tuple) -> bool:
 
 
 def _spread(df: DataFrame) -> DataFrame:
-    """Small-file inputs arrive as ONE scan partition; hash-heavy per-row
-    pipelines must fan out across cores first. One cheap shuffle of the
-    raw rows buys full parallelism for the expensive projection that
-    follows (at cluster scale the input is already many partitions and
-    this is a near-no-op rebalance).
+    """Fan ``df`` out before a per-row-heavy pass (an Arrow/mapInPandas
+    pass or a hash-heavy explode): small-file inputs arrive as ONE scan
+    partition and would otherwise run the pass on one core.
 
-    The partition-count probe (`df.rdd.getNumPartitions()`) is metadata-
-    only for NARROW plans (scan/filter/project), but on a plan with a
-    shuffle upstream (join/aggregate/window) `.rdd` materializes the AQE
-    query stages — a full extra execution of the upstream, thrown away
+    Sizing rule: the fan-out is a ``rebalance`` hint, so AQE's partition
+    coalescing (on in ``session.RUNTIME_CONFS``) sizes the shuffle from
+    the bytes that actually arrived: with the default parallelism-first
+    mode each task gets about max(1 MiB, input bytes / defaultParallelism)
+    and no more than the advisory partition size (64 MiB; larger
+    partitions are split). A 500-vector input runs its pass as ONE task;
+    a 100 TB input still fills the cluster. A fixed
+    ``repartition(defaultParallelism)`` instead started one Python worker
+    task per core whatever the input size, and each Python worker task
+    costs 0.25-0.5 CPU-s before it touches a row (measured with PySpark
+    4.1.2 on a 4-core host; most of it is worker start-up re-scanning
+    ``pyspark.zip``): five such passes at 4 partitions each were 20 of
+    the 36 Python tasks of one sim_ann_family call.
+
+    An input that is already parallel is returned as is. The partition-
+    count probe (`df.rdd.getNumPartitions()`) is metadata-only for
+    NARROW plans (scan/filter/project), but on a plan with a shuffle
+    upstream (join/aggregate/window) `.rdd` materializes the AQE query
+    stages — a full extra execution of the upstream, thrown away
     (measured: +1.5 s per call at bench scale; a wasted corpus pass at
-    100 TB). Worse, AQE coalesces small post-shuffle outputs to a handful
-    of partitions, so the probe would mandate the repartition anyway. So:
-    shuffle-upstream plans skip the probe and repartition unconditionally
-    (one extra rebalance of rows that already rode a shuffle); narrow
-    plans keep the free probe and repartition only when under-parallel."""
-    target = df.sparkSession.sparkContext.defaultParallelism
+    100 TB). So shuffle-upstream plans skip the probe and always
+    rebalance; narrow plans rebalance only when under-parallel."""
     try:
         plan = df._jdf.queryExecution().analyzed().toString()
     except Exception:
@@ -68,9 +77,10 @@ def _spread(df: DataFrame) -> DataFrame:
                "Generate", "Union", "Sort", "Distinct", "Intersect",
                "Except", "Expand", "CoGroup", "FlatMapCoGroups",
                "Rebalance", "LateralJoin", "Unpivot")
-    if _plan_has_nodes(plan, shuffly):
-        return df.repartition(target)
-    return df.repartition(target) if df.rdd.getNumPartitions() < target else df
+    if (not _plan_has_nodes(plan, shuffly) and df.rdd.getNumPartitions()
+            >= df.sparkSession.sparkContext.defaultParallelism):
+        return df
+    return df.hint("rebalance")
 
 # --------------------------------------------------------------------------
 # Shingling

@@ -227,15 +227,18 @@ def _assemble_kn_lm(
             F.sum("cnt").alias("den"),
             F.count(F.lit(1)).alias("v"),
         ).collect()}
-        den1 = float(by_k[1]["den"] or 0)
-        v = int(by_k[1]["v"] or 0)
+        # an order with no rows (empty reference, short documents)
+        # collects no group: its stats are all zero
+        zero = {"n1": 0, "n2": 0, "den": 0, "v": 0}
+        den1 = float(by_k.get(1, zero)["den"] or 0)
+        v = int(by_k.get(1, zero)["v"] or 0)
         if den1 <= 0:
             raise ValueError("reference corpus has no bigram types to "
                              "train continuation counts on")
         discounts: dict[int, float] = {}
         for k in range(1, order + 1):
-            n1 = float(by_k[k]["n1"] or 0)
-            n2 = float(by_k[k]["n2"] or 0)
+            n1 = float(by_k.get(k, zero)["n1"] or 0)
+            n2 = float(by_k.get(k, zero)["n2"] or 0)
             discounts[k] = (n1 / (n1 + 2.0 * n2)) if (n1 + 2.0 * n2) > 0 \
                 else 0.5
 
@@ -401,14 +404,17 @@ def train_kn_bigram_lm(
     # separate NULL-h rows, so non-NULL counts are untouched)
     raw_tbl = all_tbl.where(F.col("h").isNotNull())
     # both assemblies are EAGER (bounded model tables materialize via
-    # localCheckpoint), so the shared count cache can be dropped here;
-    # the first assembly's first action populates it, everything after
-    # reads it.
-    bigram = _assemble_bigram_lm(pw, vocab_size, bigram_size, backoff,
-                                 quantize)
-    kn = _assemble_kn_lm(raw_tbl, order, prune, ctx_prune, quantize,
-                         own_raw=False)
-    all_tbl.unpersist()
+    # localCheckpoint), so the shared count cache can be dropped after
+    # them, on every path (an empty reference raises in the KN
+    # assembly); the first assembly's first action populates it,
+    # everything after reads it.
+    try:
+        bigram = _assemble_bigram_lm(pw, vocab_size, bigram_size, backoff,
+                                     quantize)
+        kn = _assemble_kn_lm(raw_tbl, order, prune, ctx_prune, quantize,
+                             own_raw=False)
+    finally:
+        all_tbl.unpersist()
     return kn, bigram
 
 

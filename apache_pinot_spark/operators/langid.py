@@ -42,6 +42,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from apache_pinot_spark.operators.dedup import _spread
+from apache_pinot_spark.session import local_frame
 
 #: fastText-langid-style defaults: char 1..3-grams over a 4096-bucket
 #: hash space, first 512 chars of the document
@@ -128,7 +129,7 @@ class LangIdModel:
     def weights_df(self, spark) -> DataFrame:
         cols = ", ".join(f"`w_{i}` double" for i in range(len(self.classes)))
         rows = [(k, *[float(x) for x in v]) for k, v in self.weights.items()]
-        return spark.createDataFrame(rows, f"bucket string, {cols}")
+        return local_frame(spark, rows, f"bucket string, {cols}")
 
 
 def train_lang_id(

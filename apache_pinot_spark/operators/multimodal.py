@@ -37,6 +37,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from apache_pinot_spark.operators.dedup import _spread
+
 IMAGE_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType()),
@@ -240,13 +242,10 @@ def extract_image_features(
                 }
             )
 
-    src = df.select(id_col, content_col)
     # single-file inputs scan as ONE partition — fan out so Arrow batches
-    # stream to every core (at cluster scale this is a cheap rebalance)
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if src.rdd.getNumPartitions() < target:
-        src = src.repartition(target)
-    return src.mapInPandas(run, schema=out_schema)
+    # stream to the cores the input's size warrants
+    return _spread(df.select(id_col, content_col)).mapInPandas(
+        run, schema=out_schema)
 
 
 def resize_images(
@@ -500,11 +499,8 @@ def extract_audio_features(
                 }
             )
 
-    src = df.select(id_col, content_col)
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if src.rdd.getNumPartitions() < target:
-        src = src.repartition(target)
-    return src.mapInPandas(run, schema=out_schema)
+    return _spread(df.select(id_col, content_col)).mapInPandas(
+        run, schema=out_schema)
 
 
 def chunk_audio(

@@ -182,15 +182,18 @@ def curate_corpus(
     bloom_ref: tuple | None = None,
 ) -> dict[str, DataFrame]:
     """Run the staged curation plan. Returns {stage_name: DataFrame} in
-    stage order — every entry is the corpus AS OF that stage (same
-    schema as the input, plus a ``split`` column on the final stage),
-    fully lazy. ``benchmark`` feeds decontamination; ``reference``
-    feeds the lm/dsir selection stage; ``blocked_domains`` (a `domain`
-    frame) feeds the UT1 gate, ``word_blocklist`` (a `word` frame) the
-    C4 gate, ``quality_model`` (operators/quality_clf.QualityModel) the
-    trained quality gate, ``bloom_ref`` ((filter_df, meta) from
-    operators/bloomdedup) the cross-snapshot dedup stage — each
-    required only when its stage is
+    stage order — every entry is the corpus AS OF that stage, fully
+    lazy. Its schema is the input's, plus a ``split`` column on the
+    final stage; with ``drop_spent_columns`` each stage after a gate
+    column's last consumer also lacks that column (``url_col`` after
+    url_dedup, ``source_col`` after the domain blocklist, or after
+    source_cap when ``max_source_share`` is set). ``benchmark`` feeds
+    decontamination; ``reference`` feeds the lm/dsir selection stage;
+    ``blocked_domains`` (a `domain` frame) feeds the UT1 gate,
+    ``word_blocklist`` (a `word` frame) the C4 gate, ``quality_model``
+    (operators/quality_clf.QualityModel) the trained quality gate,
+    ``bloom_ref`` ((filter_df, meta) from operators/bloomdedup) the
+    cross-snapshot dedup stage — each required only when its stage is
     enabled."""
     from apache_pinot_spark.operators import curation, dedup, redaction
     from apache_pinot_spark.operators import textanalysis as tx

@@ -53,6 +53,7 @@ from apache_pinot_spark.operators.similarity import (
     cosine_expr,
     ivf_assign,
 )
+from apache_pinot_spark.session import local_frame
 
 
 @dataclass(frozen=True)
@@ -350,8 +351,8 @@ def ivfpq_query(
         for c in np.argsort(-sim)[:nprobe]:
             probe_rows.append((r["query_id"], qn.tolist(), int(c)))
     spark = queries.sparkSession
-    probes = spark.createDataFrame(
-        probe_rows, schema=f"query_id {q_id_type}, qn ARRAY<DOUBLE>, cluster INT"
+    probes = local_frame(
+        spark, probe_rows, schema=f"query_id {q_id_type}, qn ARRAY<DOUBLE>, cluster INT"
     )
 
     cand = index.join(F.broadcast(probes), on="cluster").filter(
@@ -401,7 +402,8 @@ def ivfpq_query(
     # exact refinement: survivors (<= refine_factor*k per query) are the
     # broadcast side; the base table supplies true vectors once
     base = idx.base
-    qdf = spark.createDataFrame(
+    qdf = local_frame(
+        spark,
         [(r["query_id"], list(map(float, r["qv"]))) for r in qrows],
         schema=f"query_id {q_id_type}, qv ARRAY<DOUBLE>",
     )

@@ -41,6 +41,7 @@ from pyspark.sql import functions as F
 
 from apache_pinot_spark.operators.dedup import _spread
 from apache_pinot_spark.operators.dsir import _buckets
+from apache_pinot_spark.session import local_frame
 
 _SCORE_DECIMAL = "DECIMAL(38,12)"
 
@@ -60,7 +61,7 @@ class QualityModel:
     def weights_df(self, spark) -> DataFrame:
         key_type = "string" if self.bucket_hash == "md5" else "bigint"
         rows = [(k, float(v)) for k, v in self.weights.items()]
-        return spark.createDataFrame(rows, f"bucket {key_type}, w double")
+        return local_frame(spark, rows, f"bucket {key_type}, w double")
 
 
 def _tf_features(df: DataFrame, text_col: str, id_col: str, n: int,

@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from apache_pinot_spark.session import local_frame
+
 
 def _to_double(vec: Column) -> Column:
     return F.transform(vec, lambda x: x.cast("double"))
@@ -350,7 +352,8 @@ def lsh_topk(
         for i, r in enumerate(qrows):
             for t in range(num_tables):
                 q_rows.append((r["query_id"], int(t), int(buckets[i, t])))
-    qs = queries.sparkSession.createDataFrame(
+    qs = local_frame(
+        queries.sparkSession,
         q_rows,
         schema=f"query_id {dict(queries.dtypes)[id_col]}, tbl INT, bucket INT",
     )
@@ -829,7 +832,8 @@ def ivf_topk(
     spark = corpus.sparkSession
     # query_id carries the queries frame's native id dtype (r10: a pinned
     # BIGINT here broke string-keyed corpora)
-    probes = spark.createDataFrame(
+    probes = local_frame(
+        spark,
         probe_rows,
         schema=f"query_id {dict(queries.dtypes)[id_col]}, qv ARRAY<DOUBLE>, "
                "cluster INT",

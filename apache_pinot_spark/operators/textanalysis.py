@@ -234,9 +234,9 @@ def winnow_fingerprints(
     parquet arrives as one partition)."""
     from pyspark.sql import Window
 
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        df = df.repartition(target)
+    from apache_pinot_spark.operators.dedup import _spread
+
+    df = _spread(df)
     toks = whitespace_tokens(F.lower(F.col(text_col)))
     sh = F.transform(
         F.sequence(F.lit(1), F.greatest(F.size(toks) - (shingle_n - 1), F.lit(0))),

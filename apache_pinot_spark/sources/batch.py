@@ -39,6 +39,7 @@ from pyspark.sql import functions as F
 
 from apache_pinot_spark.functions.text import DEFAULT_STOP_WORDS, tokens_expr
 from apache_pinot_spark.plans.schema import Granularity, PinotSchema
+from apache_pinot_spark.session import local_frame
 
 
 @dataclass
@@ -539,8 +540,8 @@ def purge_records(
             f"purge_records key set exceeds max_purge_keys={max_purge_keys}; "
             "chunk the purge keys or raise the bound explicitly"
         )
-    purge_keys = spark.createDataFrame(
-        [(k,) for k in keys], purge_keys.select(key_column).schema
+    purge_keys = local_frame(
+        spark, [(k,) for k in keys], purge_keys.select(key_column).schema
     )
     df = spark.read.parquet(table_path)
     if TIME_BUCKET_COL not in df.columns:
@@ -586,8 +587,10 @@ def purge_records(
         return 0
     n_before = sum(r["__total"] for r in hit)
     n_after = sum(r["__kept"] for r in hit)
-    hit_tuples = spark.createDataFrame(
-        [tuple(r[c] for c in part_cols) for r in hit], df.select(*part_cols).schema
+    hit_tuples = local_frame(
+        spark,
+        [tuple(r[c] for c in part_cols) for r in hit],
+        df.select(*part_cols).schema,
     )
     kept = df.join(F.broadcast(hit_tuples), on=part_cols, how="leftsemi").join(
         F.broadcast(purge_keys), on=key_column, how="left_anti"

@@ -77,6 +77,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from apache_pinot_spark.session import local_frame
+
 _LOG_DIR = "_delta_log"
 #: protocol surface this module implements (reader 1 = classic parquet
 #: + log; writer 2 = appendOnly-aware invariants-free writes)
@@ -605,7 +607,7 @@ def read_delta(spark: SparkSession, table: str, *,
         typed.append((af, vals))
 
     if not typed:
-        return spark.createDataFrame([], snap.schema)
+        return local_frame(spark, [], snap.schema)
 
     logical_data = T.StructType(
         [f for f in snap.schema.fields if f.name not in part_cols])
@@ -652,8 +654,8 @@ def read_delta(spark: SparkSession, table: str, *,
                 T.StructField("__delta_pos", T.LongType(), False)]))
         if len(del_pdf) <= 8_000_000:  # ~96 MB of (int, long) pairs
             dels = F.broadcast(dels)
-        fid_map = spark.createDataFrame(
-            [(p, i) for p, i in fid_of.items()],
+        fid_map = local_frame(
+            spark, [(p, i) for p, i in fid_of.items()],
             schema=T.StructType([
                 T.StructField("__delta_file", T.StringType(), False),
                 T.StructField("__delta_fid", T.IntegerType(), False)]))
@@ -675,7 +677,7 @@ def read_delta(spark: SparkSession, table: str, *,
         map_schema = T.StructType(
             [T.StructField("__delta_file", T.StringType(), False)]
             + [T.StructField(c, by_name[c], True) for c in part_cols])
-        fmap = spark.createDataFrame(map_rows, map_schema)
+        fmap = local_frame(spark, map_rows, map_schema)
         df = guarded_file_map_join(
             df, fmap, "__delta_file", "read_delta partition reconstitution")
     if part_cols or dv_files:
@@ -987,7 +989,7 @@ def _write_checkpoint(spark: SparkSession, table: str, version: int) -> None:
                   "sizeInBytes", "cardinality")}
                 if af.deletion_vector else None),
         }})
-    df = spark.createDataFrame(rows, _CHECKPOINT_SCHEMA).coalesce(1)
+    df = local_frame(spark, rows, _CHECKPOINT_SCHEMA).coalesce(1)
     out_dir = os.path.join(_log_path(table), f".cp-{time.time_ns()}")
     df.write.mode("overwrite").parquet(out_dir)
     part = next(p for p in sorted(os.listdir(out_dir))
@@ -1286,7 +1288,7 @@ def compact_delta(spark: SparkSession, table: str, *,
             + [T.StructField(c, snap.schema[c].dataType, True)
                for c in part_cols])
         df = guarded_file_map_join(
-            df, spark.createDataFrame(fmap_rows, map_schema),
+            df, local_frame(spark, fmap_rows, map_schema),
             "__delta_file", "compact_delta partition reattach"
         ).drop("__delta_file")
     elif dv_files:
@@ -1452,7 +1454,7 @@ def delete_where(spark: SparkSession, table: str, condition) -> int | None:
             [T.StructField("__delta_file", T.StringType(), False)]
             + [T.StructField(c, by_name[c], True) for c in part_cols])
         df = guarded_file_map_join(
-            df, spark.createDataFrame(map_rows, map_schema),
+            df, local_frame(spark, map_rows, map_schema),
             "__delta_file", "delete_where partition reconstitution")
     if cm:
         exprs = [

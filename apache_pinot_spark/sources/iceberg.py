@@ -57,6 +57,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from apache_pinot_spark.session import local_frame
 from apache_pinot_spark.sources import avroio
 from apache_pinot_spark.sources.delta import (decoded_file_path,
                                               guarded_file_map_join)
@@ -508,7 +509,7 @@ def read_iceberg(spark: SparkSession, table: str, *,
             f for f in snap.data_files
             if not _bounds_exclude(fields, f, data_filters)]
     if not snap.data_files:
-        return spark.createDataFrame([], snap.schema)
+        return local_frame(spark, [], snap.schema)
     cols = [f.name for f in snap.schema.fields]
     fields_json = _current_schema(snap.metadata).get("fields", [])
     nmap = _parse_name_mapping(snap.metadata)
@@ -529,7 +530,8 @@ def read_iceberg(spark: SparkSession, table: str, *,
 
     # attach each row's manifest path + data sequence number through the
     # (tiny, broadcast) file map — needed by both delete kinds
-    fmap = spark.createDataFrame(
+    fmap = local_frame(
+        spark,
         [{"__ib_file": loc, "__ib_path": f.path, "__ib_seq": f.seq}
          for loc, f in zip(data_locals, snap.data_files)],
         T.StructType([T.StructField("__ib_file", T.StringType(), False),
@@ -544,7 +546,8 @@ def read_iceberg(spark: SparkSession, table: str, *,
             T.StructField("pos", T.LongType())])
         pd_locals = [os.path.realpath(f.local)
                      for f in snap.position_delete_files]
-        seq_map = spark.createDataFrame(
+        seq_map = local_frame(
+            spark,
             [{"__pd_file": loc, "__pd_seq": f.seq}
              for loc, f in zip(pd_locals, snap.position_delete_files)],
             T.StructType([T.StructField("__pd_file", T.StringType(), False),
@@ -568,7 +571,8 @@ def read_iceberg(spark: SparkSession, table: str, *,
         eq_cols = [snap.schema.fields[i].name for i in eq_idx]
         eq_fields_json = [fields_json[i] for i in eq_idx]
         ed_locals = [os.path.realpath(f.local) for f in files]
-        seq_map = spark.createDataFrame(
+        seq_map = local_frame(
+            spark,
             [{"__ed_file": loc, "__ed_seq": f.seq}
              for loc, f in zip(ed_locals, files)],
             T.StructType([T.StructField("__ed_file", T.StringType(), False),

@@ -49,6 +49,7 @@ from apache_pinot_spark.functions.json import (
     json_match_sql,
 )
 from apache_pinot_spark.functions.text import text_contains_sql, text_match_sql
+from apache_pinot_spark.session import local_frame
 
 # --------------------------------------------------------------------------
 # Call-aware SQL text utilities (quote- and paren-safe; no sqlglot in the
@@ -2970,8 +2971,8 @@ class PinotEngine:
             parent = stack[-1][1] if stack else -1
             stack.append((depth, node_id))
             rows.append((stripped.rstrip(), node_id, parent))
-        return self.spark.createDataFrame(
-            rows, "Operator string, Operator_Id int, Parent_Id int"
+        return local_frame(
+            self.spark, rows, "Operator string, Operator_Id int, Parent_Id int"
         )
 
     def _maybe_gapfill(self, sql: str) -> DataFrame | None:

@@ -56,6 +56,7 @@ from apache_pinot_spark.operators.qclf_frozen import (
 from apache_pinot_spark.operators.textanalysis import gopher_quality_oracle_sql
 from apache_pinot_spark.operators.urls import canonical_url_oracle_sql
 from apache_pinot_spark.querysuite import df_query
+from apache_pinot_spark.session import local_frame
 
 _SALT = "v1"
 _SPLITS = {"train": 0.98, "val": 0.01, "test": 0.01}
@@ -121,9 +122,9 @@ def _gates_accounting(spark: SparkSession, sf_dir: str):
     # nothing downstream reads it; keep it out of every checkpointed
     # stage frame and the normalize Arrow pass (r14, guide §5/§6)
     docs = docs.drop("source")
-    bl = spark.createDataFrame([("vector",)], "word string")
-    blocked = spark.createDataFrame(
-        [(d,) for d in _BLOCKED_DOMAINS], "domain string")
+    bl = local_frame(spark, [("vector",)], "word string")
+    blocked = local_frame(
+        spark, [(d,) for d in _BLOCKED_DOMAINS], "domain string")
     cfg = CurationConfig(
         url_dedup=True,
         block_domains=True,

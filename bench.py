@@ -73,6 +73,36 @@ BENCH_QUERIES = [
 ]
 
 
+def _clock_ticks() -> float:
+    """Kernel clock ticks per second (the unit of /proc/stat); 100, the
+    Linux default, when sysconf fails or reports a non-positive value."""
+    try:
+        hz = os.sysconf("SC_CLK_TCK")
+    except (OSError, ValueError):
+        return 100.0
+    return float(hz) if hz > 0 else 100.0
+
+
+def _steal_jiffies(path: str = "/proc/stat") -> int | None:
+    """Host steal jiffies (field 9 of the aggregate cpu line), or None
+    when the read failed."""
+    try:
+        with open(path) as fh:
+            return int(fh.readline().split()[8])
+    except (OSError, ValueError, IndexError):
+        return None
+
+
+def _steal_pct(j0: int | None, t0: float, j1: int | None, t1: float,
+               hz: float, ncpu: float) -> float | None:
+    """Steal jiffies as % of total host CPU capacity over [t0, t1]; None
+    when either read failed (a failed read is not zero steal)."""
+    if j0 is None or j1 is None:
+        return None
+    dt = max(1e-9, t1 - t0)
+    return round((j1 - j0) / (dt * hz * ncpu) * 100.0, 2)
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     from apache_pinot_spark.session import get_spark
@@ -268,31 +298,6 @@ def main() -> None:
         except OSError:
             return 0
 
-    # r14 (verdict ask #1b): report host CPU STEAL alongside the calib
-    # pair so the artifact self-labels co-tenant contamination instead of
-    # the judge reverse-engineering it from calib drift. Field 9 of the
-    # aggregate /proc/stat cpu line is steal jiffies; the r13 diagnosis
-    # showed the co-tenant contends only under saturation (7-20% steal
-    # phases invisible to single-threaded probes), and the bench's own
-    # parallel timed region IS saturated, so a passive before/after delta
-    # over each run captures exactly the contention the run experienced.
-    # Reported metadata only — nothing in the timing path changes.
-    _HZ = float(os.sysconf("SC_CLK_TCK") or 100)
-    _NCPU = float(os.cpu_count() or 1)
-
-    def _steal_jiffies() -> int:
-        try:
-            with open("/proc/stat") as fh:
-                f = fh.readline().split()
-            return int(f[8]) if len(f) > 8 else 0
-        except OSError:
-            return 0
-
-    def _steal_pct(j0: int, t0: float, j1: int, t1: float) -> float:
-        """Steal jiffies as % of total host CPU capacity over [t0, t1]."""
-        dt = max(1e-9, t1 - t0)
-        return round((j1 - j0) / (dt * _HZ * _NCPU) * 100.0, 2)
-
     stalls: dict[str, dict[str, int]] = {}
 
     def run_suite(tag: str) -> dict[str, float]:
@@ -332,13 +337,23 @@ def main() -> None:
     # run 2 demonstrates stability — a suite whose numbers move several-x
     # between adjacent runs can't support any perf conclusion (bit us in
     # round 3; the round-5 heap-cap fix addressed the root cause).
+    # r14 (verdict ask #1b): report host CPU STEAL alongside the calib
+    # pair so the artifact self-labels co-tenant contamination instead of
+    # the judge reverse-engineering it from calib drift. Field 9 of the
+    # aggregate /proc/stat cpu line is steal jiffies; the r13 diagnosis
+    # showed the co-tenant contends only under saturation (7-20% steal
+    # phases invisible to single-threaded probes), and the bench's own
+    # parallel timed region IS saturated, so a passive before/after delta
+    # over each run captures exactly the contention the run experienced.
+    # Reported metadata only — nothing in the timing path changes.
     sj0, st0 = _steal_jiffies(), time.perf_counter()
     timings = run_suite("r1")
     sj1, st1 = _steal_jiffies(), time.perf_counter()
     timings2 = run_suite("r2")
     sj2, st2 = _steal_jiffies(), time.perf_counter()
-    steal_pct_run1 = _steal_pct(sj0, st0, sj1, st1)
-    steal_pct_run2 = _steal_pct(sj1, st1, sj2, st2)
+    hz, ncpu = _clock_ticks(), float(os.cpu_count() or 1)
+    steal_pct_run1 = _steal_pct(sj0, st0, sj1, st1, hz, ncpu)
+    steal_pct_run2 = _steal_pct(sj1, st1, sj2, st2, hz, ncpu)
     calib_after = _calib_point()
     calib_drift = round(
         (calib_after["cpu_sec"] + calib_after["spark_sec"])

@@ -363,3 +363,23 @@ def test_fused_training_validation(spark):
         K.train_kn_bigram_lm(ref, order=3, vocab_size=0)
     with pytest.raises(ValueError, match="backoff"):
         K.train_kn_bigram_lm(ref, order=3, backoff=0.0)
+
+
+def test_fused_training_releases_count_cache_on_error(spark):
+    """An empty reference raises in the KN assembly, after the bigram
+    assembly already read the shared count frame: that frame must be
+    unpersisted on the error path too. The bigram model's own checkpoint
+    died with the call and goes with the lifecycle sweep."""
+    import gc
+
+    from apache_pinot_spark.operators.lifecycle import _sweep_dead_results
+
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet().toArray())
+    empty = spark.createDataFrame([], "doc_id bigint, text string")
+    with pytest.raises(ValueError, match="no bigram types"):
+        K.train_kn_bigram_lm(empty, order=3)
+    gc.collect()
+    _sweep_dead_results()
+    # nothing the call persisted is left (the sweep may free older results)
+    assert not set(jsc.getPersistentRDDs().keySet().toArray()) - before

@@ -635,11 +635,18 @@ def test_ivfpq_query_plan_shapes(spark, tables):
     emb = tables["embeddings"]
     idx = pq.ivfpq_index(emb, 64, num_clusters=8, m=8, ksub=16)
     q = emb.filter(F.col("vec_id") % 100 == 7).limit(3)
-    plan = _plan(pq.ivfpq_query(idx, q, k=3, nprobe=4))
+    res = pq.ivfpq_query(idx, q, k=3, nprobe=4)
+    plan = _plan(res)
     assert "CartesianProduct" not in plan and "SortMergeJoin" not in plan
     assert "BatchEvalPython" not in plan  # Arrow only
     assert "MapInPandas" in plan or "ArrowEvalPython" in plan
     assert plan.count("BroadcastHashJoin") >= 2  # probes + survivors/queries
+    # the driver-built probes and query vectors are Arrow local relations,
+    # not Python RDDs: the only RDD leaf is the index's localCheckpoint
+    opt = res._jdf.queryExecution().optimizedPlan().toString()
+    rdds = [ln for ln in opt.splitlines() if "LogicalRDD" in ln]
+    assert len(rdds) == 1 and "codes#" in rdds[0], rdds
+    assert opt.count("LocalRelation") == 2, opt
 
 
 def test_bpe_encode_plan_is_map_side(spark, tables):

@@ -1,10 +1,8 @@
-"""FLAC (Free Lossless Audio Codec) subset codec — the audio sibling of
-the repo's pure-Python image/video decoders (jpeg_codec, png_codec,
-avi/mp4): first-principles implementation of the PUBLIC xiph.org FLAC
-format specification, no codec libraries.
+"""FLAC (Free Lossless Audio Codec) subset codec in pure Python:
+first-principles implementation of the PUBLIC xiph.org FLAC format
+specification, no codec libraries.
 
-Scope (the honest tier, mirroring how jpeg_codec covers baseline +
-progressive but not arithmetic coding):
+Scope:
   * stream walk: 'fLaC' magic, metadata blocks (STREAMINFO parsed —
     sample rate / channels / bits-per-sample / total samples / PCM MD5;
     other blocks skipped by length)
@@ -25,8 +23,7 @@ progressive but not arithmetic coding):
 The matching ``encode_flac`` produces spec-conformant streams (fixed
 block size, CONSTANT / VERBATIM / FIXED-order subframes, single-
 partition Rice residuals, correct CRCs and MD5) — used for golden
-fixtures and round-trip property tests, exactly as jpeg_codec's encoder
-anchors the JPEG tests.
+fixtures and round-trip property tests.
 
 Scale shape: decode is per-row map-side work over the binary column
 (Arrow-batched, zero shuffle); corrupt/unsupported blobs reject to the

@@ -1,6 +1,6 @@
 """MP3 / MPEG audio frame-header walk — the metadata tier for the one
-big audio container the FLAC/WAV decoders don't cover: like
-operators/mp4.py for video, this reads what a data pipeline SCHEDULES on
+big audio container the FLAC/WAV decoders don't cover: this reads what
+a data pipeline SCHEDULES on
 (frame count, sample rate, channel mode, CBR/VBR bitrate, duration)
 straight out of the blob, from the PUBLIC MPEG-1/2/2.5 audio framing
 (ISO/IEC 11172-3 / 13818-3) — no codec library, no payload decode.

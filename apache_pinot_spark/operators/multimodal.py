@@ -6,6 +6,7 @@ Decode is behind a CAPABILITY PROBE (`image_decoder()` / `audio_decoder()`):
 * ``decode_stub=None`` (auto, the default): use a real decoder when one is
   importable — PIL for images; soundfile, else the stdlib ``wave`` module
   (WAV/PCM), for audio — and fall back to the deterministic stub when not.
+  Without PIL, images take the stub.
 * ``decode_stub=True``: force the stub — a deterministic fake derived from
   the content bytes, so schema, partitioning, batch shapes, and UDF
   signatures are testable on any machine with bit-stable output.
@@ -29,11 +30,7 @@ stays in JVM expressions.
 
 from __future__ import annotations
 
-import hashlib
-from collections.abc import Iterator
-
-import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -66,62 +63,15 @@ FEATURE_SCHEMA = T.StructType(
 )
 
 
-def _fake_features(content: bytes, n: int = 8) -> list[float]:
-    """Deterministic stand-in for a real feature extractor: n floats in
-    [0,1) derived from the content digest."""
-    d = hashlib.sha256(content or b"").digest()
-    return [int.from_bytes(d[i * 4 : i * 4 + 4], "big") / 2**32 for i in range(n)]
-
-
 def image_decoder() -> str | None:
-    """Capability probe: "pil" when importable (any format), else
-    "stdlib" — the pure-stdlib codecs (operators/png_codec.py +
-    operators/jpeg_codec.py + operators/gif_codec.py: PNG fully,
-    baseline-sequential AND progressive JPEG, and GIF — together the
-    dominant web-corpus formats), present in every CPython,
-    so the image REAL path is never entirely absent; other formats on
-    that tier flow to the reject stream. Probed on the driver; the
-    result ships in the worker closure."""
+    """Capability probe: "pil" when importable (any format), else None.
+    Probed on the driver; the result ships in the worker closure."""
     try:
         import PIL.Image  # noqa: F401
 
         return "pil"
     except ImportError:
-        return "stdlib"
-
-
-def decode_image_stdlib(data: bytes) -> "object | None":
-    """Magic-dispatched stdlib decode: PNG, JPEG (baseline sequential or
-    progressive), GIF (first frame), uncompressed BMP, baseline TIFF
-    (r10: none/PackBits strips, both byte orders), or lossless WebP
-    (r12: full VP8L — all transforms, color cache, LZ77; lossy VP8
-    stays audit-only) → H×W×C uint8 array; None for anything else
-    (reject stream)."""
-    from apache_pinot_spark.operators.gif_codec import decode_bmp, decode_gif
-    from apache_pinot_spark.operators.jpeg_codec import decode_jpeg
-    from apache_pinot_spark.operators.png_codec import PNG_MAGIC, decode_png
-    from apache_pinot_spark.operators.tiff_codec import decode_tiff
-
-    if not data:
         return None
-    if data.startswith(PNG_MAGIC):
-        return decode_png(data)
-    if data[:2] == b"\xff\xd8":
-        return decode_jpeg(data)
-    if data[:4] == b"GIF8":
-        return decode_gif(data)
-    if data[:2] == b"BM":
-        return decode_bmp(data)
-    if data[:4] in (b"II*\x00", b"MM\x00*"):
-        return decode_tiff(data)
-    if data[:4] == b"RIFF" and data[8:12] == b"WEBP":
-        from apache_pinot_spark.operators.webp import decode_webp
-
-        try:
-            return decode_webp(data)
-        except Exception:
-            return None
-    return None
 
 
 def audio_decoder() -> str | None:
@@ -174,15 +124,6 @@ def extract_image_features(
     """
     decoder = _resolve(decode_stub, image_decoder)
 
-    out_schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType()),
-            T.StructField("n_bytes", T.IntegerType()),
-            T.StructField("digest", T.StringType()),
-            T.StructField("features", T.ArrayType(T.FloatType())),
-        ]
-    )
-
     # The worker function must be SELF-CONTAINED: every import happens
     # inside and no module-level symbol is referenced, so cloudpickle
     # ships it by value and executors never need this package importable.
@@ -209,26 +150,7 @@ def extract_image_features(
             except Exception:
                 return None
 
-        def _stdlib_feats(content, n):
-            # stdlib tier: same contract as the PIL path (n-pixel
-            # grayscale thumbnail in [0,1]; undecodable -> None), box
-            # average instead of PIL's resampling kernel; PNG or
-            # baseline JPEG by magic
-            from apache_pinot_spark.operators.multimodal import (
-                decode_image_stdlib,
-            )
-            from apache_pinot_spark.operators.png_codec import box_resize, luma
-
-            px = decode_image_stdlib(bytes(content or b""))
-            if px is None:
-                return None
-            return [float(v) for v in luma(box_resize(px, n, 1))[0]]
-
-        feats = (
-            _stub_feats
-            if decoder is None
-            else (_stdlib_feats if decoder == "stdlib" else _pil_feats)
-        )
+        feats = _stub_feats if decoder is None else _pil_feats
         for pdf in batches:
             contents = pdf[content_col]
             yield _pd.DataFrame(
@@ -245,7 +167,7 @@ def extract_image_features(
     # single-file inputs scan as ONE partition — fan out so Arrow batches
     # stream to the cores the input's size warrants
     return _spread(df.select(id_col, content_col)).mapInPandas(
-        run, schema=out_schema)
+        run, schema=FEATURE_SCHEMA)
 
 
 def resize_images(
@@ -278,41 +200,14 @@ def resize_images(
     def run(batches):
         import io as _io
 
-        if decoder == "pil":
-            from PIL import Image as _Image
+        from PIL import Image as _Image
 
-            def _resize(b):
-                with _Image.open(_io.BytesIO(b or b"")) as im:
-                    fmt = im.format or "PNG"
-                    out = _io.BytesIO()
-                    im.resize((target_w, target_h)).save(out, format=fmt)
-                return out.getvalue()
-
-        else:  # stdlib tier: decode -> box resize -> re-encode, format-
-            # preserving (PNG stays PNG, JPEG re-encodes baseline JPEG)
-            from apache_pinot_spark.operators.jpeg_codec import encode_jpeg
-            from apache_pinot_spark.operators.multimodal import (
-                decode_image_stdlib,
-            )
-            from apache_pinot_spark.operators.png_codec import (
-                box_resize,
-                encode_png,
-            )
-
-            def _resize(b):
-                raw = bytes(b or b"")
-                px = decode_image_stdlib(raw)
-                if px is None:
-                    raise ValueError("not a decodable PNG/JPEG")
-                small = box_resize(px, target_w, target_h)
-                if raw[:2] == b"\xff\xd8":
-                    if small.shape[2] == 1:
-                        return encode_jpeg(small[:, :, 0])
-                    return encode_jpeg(small[:, :, :3])
-                # gray(+alpha) re-encodes gray; color re-encodes RGB
-                if small.shape[2] <= 2:
-                    return encode_png(small[:, :, 0])
-                return encode_png(small[:, :, :3])
+        def _resize(b):
+            with _Image.open(_io.BytesIO(b or b"")) as im:
+                fmt = im.format or "PNG"
+                out = _io.BytesIO()
+                im.resize((target_w, target_h)).save(out, format=fmt)
+            return out.getvalue()
 
         for pdf in batches:
             new_content, new_w, new_h = [], [], []
@@ -345,10 +240,7 @@ def sample_video_frames(
 ) -> DataFrame:
     """Frame-sampling plan: (media_id, frame_index, timestamp_s) rows from
     duration/fps metadata — pure JVM arithmetic, the decode of the chosen
-    frames is downstream (stubbed). One row per sampled frame via explode.
-    For sampling against a blob's REAL container sample table (stts/stss
-    seek semantics, keyframe snapping, corrupt-blob reject) use
-    operators/mp4.sample_video_frames_from_blobs."""
+    frames is downstream (stubbed). One row per sampled frame via explode."""
     n_samples = F.floor(F.col(duration_col) / F.lit(every_n_seconds)).cast("int")
     idx = F.sequence(F.lit(0), F.greatest(n_samples, F.lit(0)))
     return (
@@ -463,26 +355,8 @@ def extract_audio_features(
             x, _sr = _sf.read(_io.BytesIO(b), dtype="float64", always_2d=True)
             return _np.asarray(x).mean(axis=1)
 
-        def _flac_decode(b):
-            # the repo's own FLAC subset decoder (operators/flac) — a
-            # guarded import so this closure stays usable on executors
-            # without the package installed (it then rejects to NULL,
-            # the same contract as any undecodable blob)
-            from apache_pinot_spark.operators.flac import decode_flac, parse_flac
-
-            import numpy as _np
-
-            info = parse_flac(b)
-            pcm, _sr = decode_flac(b)
-            return pcm.astype(_np.float64).mean(axis=1) / float(
-                1 << (info.bits_per_sample - 1))
-
         def _real_bands(b, n):
             try:
-                # magic-based dispatch: FLAC blobs route to the repo's
-                # verified-CRC decoder even on the stdlib-wave tier
-                if b[:4] == b"fLaC" and decoder != "soundfile":
-                    return _pcm_bands(_flac_decode(b), n)
                 x = _sf_decode(b) if decoder == "soundfile" else _wave_decode(b)
                 return _pcm_bands(x, n)
             except Exception:

@@ -1,9 +1,6 @@
-"""Minimal pure-stdlib PNG codec (zlib + struct) — the in-container
-image tier of the multimodal decode probe.
+"""Minimal pure-stdlib PNG codec (zlib + struct).
 
-The multimodal operators (operators/multimodal.py) need a REAL image
-decode path in environments without PIL; PNG is fully decodable with
-nothing but the standard library (the format is zlib-deflate over
+PNG is fully decodable with nothing but the standard library (the format is zlib-deflate over
 per-scanline filtered samples — RFC 2083). Scope, checked up front and
 rejected with None rather than guessed:
 

@@ -21,9 +21,8 @@ dimension lies before allocation); PackBits expansion is clamped to the
 expected strip size.
 
 Returns numpy arrays shaped (h, w, 1) for grayscale and (h, w, 3) for
-RGB — the H×W×C contract of the sibling codecs (jpeg_codec returns
-grayscale as a 1-channel plane too), so the multimodal featurize/resize
-tier consumes it unchanged.
+RGB — the H×W×C contract of png_codec (grayscale is a 1-channel plane
+there too).
 """
 
 from __future__ import annotations

@@ -28,8 +28,7 @@ VP8L surface implemented (the complete lossless format):
 The neighbor map is GENERATED, not transcribed: the spec's table lists
 the 120 closest (dx, dy) offsets ordered by squared distance, larger dy
 first within a tie, +dx before −dx — the generator reproduces the
-published table (head pinned in tests; the Kraft/golden discipline of
-h264_tables).
+published table (head pinned in tests).
 
 Untrusted-input rules (house contract): dimension/pixel caps before
 allocation, bounded bit reads (truncation raises), incomplete or
@@ -635,8 +634,7 @@ def decode_vp8l(data: bytes, max_pixels: int = _MAX_PIXELS_DEFAULT):
 def parse_webp(blob: bytes,
                max_pixels: int = _MAX_PIXELS_DEFAULT) -> dict[str, Any]:
     """Container audit: kind (lossless/lossy/extended-...), dimensions,
-    flags, chunk inventory — the pre-decode curation columns (the
-    mp4_video_stats shape)."""
+    flags, chunk inventory — the pre-decode curation columns."""
     if len(blob) < 12 or blob[:4] != b"RIFF" or blob[8:12] != b"WEBP":
         raise WebPError("not a WebP (RIFF/WEBP magic missing)")
     riff_size = struct.unpack_from("<I", blob, 4)[0]

@@ -102,6 +102,7 @@ def _stage_accounting(spark: SparkSession, sf_dir: str):
     benchmark = docs.filter(F.col("doc_id") < 5)
     stages = curate_corpus(docs, cfg, benchmark=benchmark)
     parts = []
+    frames = list(stages.values())
     for i, (name, df) in enumerate(stages.items()):
         if name == "exact_dedup":
             # r14 (guide §2.4): the exact-dedup stage is the one uncached
@@ -109,10 +110,13 @@ def _stage_accounting(spark: SparkSession, sf_dir: str):
             # survivor selection per action. Its row count has a closed
             # form — dedupe_exact keeps exactly one row per non-sentinel
             # fingerprint group (keys are unique) plus every sentinel
-            # (NULL-text) row — so ONE map-side aggregate over the input
-            # scan replaces the corpus-scale shuffle+join. Pinned
-            # identical by test_exact_dedup_count_identity; the stage
-            # FRAME (which downstream stages consume) is unchanged.
+            # (NULL-text) row — so ONE map-side aggregate over the
+            # stage's own input scan replaces the corpus-scale
+            # shuffle+join. Pinned identical by
+            # test_exact_dedup_count_identity; the stage FRAME (which
+            # downstream stages consume) is unchanged. curate_corpus
+            # puts "input" first and records only enabled stages, so the
+            # previous entry is exactly what dedupe_exact consumed.
             from apache_pinot_spark.operators.dedup import (
                 NULL_FINGERPRINT,
                 fingerprint_expr,
@@ -120,7 +124,7 @@ def _stage_accounting(spark: SparkSession, sf_dir: str):
 
             fp = fingerprint_expr("text", None)
             parts.append(
-                docs.agg(
+                frames[i - 1].agg(
                     (F.count_distinct(
                         F.when(fp != F.lit(NULL_FINGERPRINT), fp))
                      + F.coalesce(

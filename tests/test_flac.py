@@ -241,22 +241,6 @@ def test_mutation_property_never_hangs_or_misdecodes_silently():
     assert outcomes["reject"] > 150, outcomes
 
 
-def test_generic_audio_featurizer_dispatches_flac(spark):
-    """extract_audio_features (the WAV-tier multimodal operator) routes
-    fLaC-magic blobs to the repo's FLAC decoder — band energies match
-    flac_band_energies for the same blob (r10 integration)."""
-    from apache_pinot_spark.operators.multimodal import extract_audio_features
-
-    blob = FL.encode_flac(_tone(2048, 64, 28000), 8000, 16, 512)
-    df = spark.createDataFrame(
-        [(1, bytearray(blob))], "media_id LONG, content BINARY")
-    via_generic = extract_audio_features(
-        df, n_bands=4, decode_stub=False).collect()[0]
-    via_flac = FL.flac_band_energies(df, n_bands=4).collect()[0]
-    assert via_generic.band_energy == pytest.approx(
-        via_flac.band_energy, rel=1e-12)
-
-
 def test_non_byte_width_md5_skip_and_reserved_guards():
     """r11 ADVICE fixes: (a) 20-bit streams (non-byte sample width) skip
     the PCM MD5 check instead of rejecting valid files with a spurious

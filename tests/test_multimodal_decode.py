@@ -1,8 +1,8 @@
 """Real-decode capability probe for multimodal columns
 (operators/multimodal.py): the stub/auto/real tri-state, the stdlib-WAV
-audio path (runs in any CPython, so it's genuinely green here), and the
-PIL image path (skipif — activates wherever an imaging library exists,
-per the round-4 verdict's capability-probe mandate)."""
+audio path (runs in any CPython), and the PIL image path (skipif —
+activates wherever an imaging library exists). Without PIL, images take
+the stub in auto mode and decode_stub=False raises."""
 
 from __future__ import annotations
 
@@ -30,8 +30,8 @@ def _wav_bytes(x: np.ndarray, sample_rate: int = 8000, channels: int = 1) -> byt
 def test_probe_reports_available_decoders():
     # wave is stdlib: the audio probe can never be None
     assert multimodal.audio_decoder() in ("soundfile", "wave")
-    # png_codec is stdlib: the image probe can never be None either
-    assert multimodal.image_decoder() in ("pil", "stdlib")
+    # images decode only through PIL; without it the probe reports None
+    assert multimodal.image_decoder() in ("pil", None)
 
 
 def test_audio_real_decode_wav_band_energy(spark):
@@ -91,22 +91,24 @@ def test_audio_auto_prefers_real_decode(spark):
     assert row["band_energy"] == pytest.approx([0.0, 0.0], abs=1e-12)
 
 
+@pytest.mark.skipif(
+    multimodal.image_decoder() is not None,
+    reason="PIL present: auto mode decodes (see the PIL tests below)",
+)
 def test_image_auto_decodes_and_stub_stays_forceable(spark):
-    """Auto mode always has a REAL image tier now (stdlib PNG when PIL is
-    absent): garbage bytes flow to the reject stream (features None,
-    digests intact), and decode_stub=True still forces the sha-derived
-    stub for oracle-reproducible pipelines."""
+    """Without an image decoder, auto mode falls back to the sha-derived
+    stub: its output equals the forced decode_stub=True output row for
+    row, so oracle-reproducible pipelines see no difference."""
     rows = [(i, bytes([i]) * 32, ("png", 4, 4)) for i in range(3)]
     df = spark.createDataFrame(rows, multimodal.IMAGE_SCHEMA)
     auto = multimodal.extract_image_features(df).orderBy("media_id").collect()
-    assert all(r["features"] is None for r in auto)  # not decodable anywhere
-    assert all(r["digest"] for r in auto)
     stub = (
         multimodal.extract_image_features(df, decode_stub=True)
         .orderBy("media_id")
         .collect()
     )
-    assert all(r["features"] is not None for r in stub)
+    assert all(r["features"] is not None and r["digest"] for r in stub)
+    assert auto == stub
 
 
 @pytest.mark.skipif(
@@ -115,7 +117,8 @@ def test_image_auto_decodes_and_stub_stays_forceable(spark):
 def test_image_real_decode_thumbnail_features(spark):
     """Activates wherever PIL exists: features are the normalized
     grayscale thumbnail, so a white image maps to ~1.0 everywhere and a
-    black one to 0.0."""
+    black one to 0.0; garbage bytes flow to the reject stream (features
+    None, digest intact)."""
     from PIL import Image
 
     def png(color):
@@ -124,15 +127,20 @@ def test_image_real_decode_thumbnail_features(spark):
         return buf.getvalue()
 
     df = spark.createDataFrame(
-        [(1, png(255), ("png", 16, 16)), (2, png(0), ("png", 16, 16))],
+        [
+            (1, png(255), ("png", 16, 16)),
+            (2, png(0), ("png", 16, 16)),
+            (3, b"xx", ("png", 4, 4)),
+        ],
         multimodal.IMAGE_SCHEMA,
     )
     out = {
-        r["media_id"]: r["features"]
+        r["media_id"]: r
         for r in multimodal.extract_image_features(df, decode_stub=False).collect()
     }
-    assert out[1] == pytest.approx([1.0] * 8, abs=1e-6)
-    assert out[2] == pytest.approx([0.0] * 8, abs=1e-6)
+    assert out[1]["features"] == pytest.approx([1.0] * 8, abs=1e-6)
+    assert out[2]["features"] == pytest.approx([0.0] * 8, abs=1e-6)
+    assert out[3]["features"] is None and out[3]["digest"]
 
 
 @pytest.mark.skipif(

@@ -7,6 +7,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from apache_pinot_spark.operators.multimodal import image_decoder
 from tests.conftest import SF_SMOKE
 
 
@@ -159,17 +160,24 @@ def test_multimodal_feature_extraction(spark):
     assert [r["digest"] for r in again] == [r["digest"] for r in out]
 
 
+@pytest.mark.skipif(
+    image_decoder() is not None,
+    reason="PIL present: garbage goes to the reject stream "
+    "(test_multimodal_decode::test_image_real_decode_thumbnail_features)",
+)
 def test_multimodal_real_path_rejects_garbage(spark):
-    """decode_stub=False always has an image tier now (stdlib PNG when
-    PIL is absent): undecodable bytes land in the reject stream instead
-    of raising mid-scan."""
+    """Without an image decoder, decode_stub=False raises the "no decoder"
+    NotImplementedError at the plug point, for features and resize alike,
+    before any job runs."""
     from apache_pinot_spark.operators import multimodal
 
     df = spark.createDataFrame(
         [(1, b"xx", ("png", 4, 4))], multimodal.IMAGE_SCHEMA
     )
-    (row,) = multimodal.extract_image_features(df, decode_stub=False).collect()
-    assert row["features"] is None and row["digest"]
+    with pytest.raises(NotImplementedError, match="no decoder"):
+        multimodal.extract_image_features(df, decode_stub=False)
+    with pytest.raises(NotImplementedError, match="no decoder"):
+        multimodal.resize_images(df, 8, 8, decode_stub=False)
 
 
 def test_video_frame_sampling(spark):

@@ -1,7 +1,7 @@
 """Pure-stdlib PNG codec (operators/png_codec.py): wire-level decode
 goldens built by hand (independent of the encoder), all five scanline
-filters with hand-computed expectations, round-trips, and the
-multimodal stdlib image tier running end-to-end in this container."""
+filters with hand-computed expectations, round-trips, Adam7, 16-bit and
+tRNS inputs, and JVM ImageIO goldens."""
 
 from __future__ import annotations
 
@@ -11,7 +11,6 @@ import zlib
 import numpy as np
 import pytest
 
-from apache_pinot_spark.operators import multimodal
 from apache_pinot_spark.operators import png_codec as P
 
 
@@ -98,44 +97,6 @@ def test_luma_and_box_resize():
     px[:, 2:, 0] = 200
     small = P.box_resize(px, 2, 1)
     assert small[0, :, 0].tolist() == [0, 200]
-
-
-def test_stdlib_tier_features_end_to_end(spark):
-    """The real image path now runs IN THIS CONTAINER: white PNG -> 1.0
-    features, black -> 0.0, non-PNG -> reject stream — via
-    decode_stub=False, which previously raised without PIL."""
-    white = P.encode_png(np.full((16, 16), 255, dtype=np.uint8))
-    black = P.encode_png(np.zeros((16, 16), dtype=np.uint8))
-    df = spark.createDataFrame(
-        [(1, white, ("png", 16, 16)), (2, black, ("png", 16, 16)),
-         (3, b"\x00garbage", ("png", 1, 1))],
-        multimodal.IMAGE_SCHEMA,
-    )
-    out = {
-        r["media_id"]: r["features"]
-        for r in multimodal.extract_image_features(df, decode_stub=False).collect()
-    }
-    assert out[1] == pytest.approx([1.0] * 8, abs=1e-6)
-    assert out[2] == pytest.approx([0.0] * 8, abs=1e-6)
-    assert out[3] is None
-
-
-def test_stdlib_tier_resize_end_to_end(spark):
-    """resize_images decodes, box-resizes, and re-encodes real PNG bytes
-    with no imaging library; undecodable content passes through."""
-    rgb = np.zeros((32, 32, 3), dtype=np.uint8)
-    rgb[:, :, 0] = 200  # red-ish
-    df = spark.createDataFrame(
-        [(1, P.encode_png(rgb), ("PNG", 32, 32)), (2, b"junk", ("PNG", 9, 9))],
-        multimodal.IMAGE_SCHEMA,
-    )
-    rows = {r["media_id"]: r for r in
-            multimodal.resize_images(df, 8, 8, decode_stub=False).collect()}
-    resized = P.decode_png(bytes(rows[1]["content"]))
-    assert resized.shape == (8, 8, 3) and resized[0, 0].tolist() == [200, 0, 0]
-    assert rows[1]["meta"]["width"] == 8 and rows[1]["meta"]["height"] == 8
-    assert bytes(rows[2]["content"]) == b"junk"  # reject stream: untouched
-    assert rows[2]["meta"]["width"] == 9
 
 
 # --------------------------------------------------------------------------

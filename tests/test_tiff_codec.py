@@ -145,21 +145,3 @@ def test_mutation_property():
             assert got.shape[0] * got.shape[1] <= T._MAX_PIXELS
         except ValueError:
             pass
-
-
-def test_multimodal_tier_dispatches_tiff(spark):
-    from apache_pinot_spark.operators.multimodal import (
-        decode_image_stdlib,
-        extract_image_features,
-    )
-
-    img = _gray(16, 16)
-    blob = T.encode_tiff(img)
-    assert np.array_equal(decode_image_stdlib(blob).squeeze(), img)
-    df = spark.createDataFrame(
-        [(1, bytearray(blob)), (2, bytearray(b"nope"))],
-        "media_id LONG, content BINARY")
-    got = {r.media_id: r for r in
-           extract_image_features(df, decode_stub=False).collect()}
-    assert got[1].features is not None
-    assert got[2].features is None

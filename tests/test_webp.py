@@ -3,7 +3,7 @@ decoder against the subset encoder (bit-exact roundtrips) and against
 HAND-BUILT per-spec bitstreams exercising every transform, the color
 cache, LZ77 backrefs (direct + neighbor-map distances), and meta prefix
 groups; distance-map head pins; bomb/truncation/mutation rejects; the
-Spark audit operator and the decode_image_stdlib dispatch."""
+Spark audit operator."""
 
 from __future__ import annotations
 
@@ -364,11 +364,9 @@ def test_mutation_property_bounded_and_exception_clean():
 
 
 def test_stdlib_dispatch_and_spark_stats(spark, tmp_path):
-    from apache_pinot_spark.operators.multimodal import decode_image_stdlib
-
     img = _rand_img(5, 9, 3, 11)
     blob = W.encode_webp_lossless(img)
-    out = decode_image_stdlib(blob)
+    out = W.decode_webp(blob)
     assert out is not None and (out == img).all()
 
     d = tmp_path / "webp"

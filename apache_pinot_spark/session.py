@@ -77,6 +77,18 @@ def _default_driver_mem() -> str:
     return "8g"
 
 
+# Generated classes Spark keeps compiled per JVM
+# (spark.sql.codegen.cache.maxEntries, default 100). The cache is an LRU
+# keyed by (class loader, generated source), and local mode compiles a
+# plan under two loaders (driver and task). One pass of the 50 declared
+# queries fills 1,096 entries at sf0.001 and 1,092 at sf0.01 (local[4]);
+# one sim_ann_family call alone compiles 109. At 100 the cache thrashed:
+# a second pass of the suite recompiled 1,375 classes, and the JIT then
+# compiled each fresh class again. 2,000 holds the suite with headroom,
+# so a distinct plan compiles once per JVM. It is a static conf: a
+# session built elsewhere and handed to `configure()` keeps Spark's 100.
+CODEGEN_CACHE_ENTRIES = 2000
+
 # Static confs — only settable at session build time.
 _DRIVER_MEM = os.environ.get("SPARK_GRAFT_DRIVER_MEM", _default_driver_mem())
 
@@ -84,6 +96,7 @@ STATIC_CONFS = {
     "spark.sql.parquet.filterPushdown": "true",
     "spark.serializer": "org.apache.spark.serializer.KryoSerializer",
     "spark.driver.memory": _DRIVER_MEM,
+    "spark.sql.codegen.cache.maxEntries": str(CODEGEN_CACHE_ENTRIES),
     # PIN the heap (-Xms == -Xmx, pre-touched). A dynamically-sized heap
     # commits and uncommits pages as G1 grows/shrinks; on this VM that
     # churn intermittently cost 100+ CPU-seconds of *kernel* time
@@ -92,9 +105,10 @@ STATIC_CONFS = {
     # gone (6-round A/B: max 4.0s vs a 15.1s spike). Same reasoning
     # applies to executor JVMs on a real cluster.
     # MetaspaceSize raises the threshold that triggers a metaspace-induced
-    # full GC: whole-stage codegen loads thousands of janino classes per
-    # suite run, and the default ~21 MB high-water mark forces periodic
-    # stop-the-world collections mid-query.
+    # full GC: the codegen class cache keeps about 1,100 Janino classes
+    # loaded (CODEGEN_CACHE_ENTRIES; Metaspace use is about 200 MB after
+    # one pass of the declared queries), and the default ~21 MB high-water
+    # mark forces periodic stop-the-world collections mid-query.
     "spark.driver.extraJavaOptions": (
         f"-Xms{_DRIVER_MEM} -XX:+AlwaysPreTouch -XX:MetaspaceSize=256m"
     ),

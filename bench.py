@@ -5,12 +5,16 @@ JSON line {"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...
 Each query is executed end-to-end (plan + run + collect) the way the engine
 serves it, twice. The warmup phase ingests the shared lifecycle tables and
 runs every declared query once at the smallest SF, so BOTH timed passes
-measure data cost on a warmed engine (plan cache, codegen classes, Python
+measure data cost on a warmed engine (compiled codegen classes, Python
 worker pool, OS page cache) — the timed run-1/run-2 delta is run-to-run
 stability, not cold-start. s1_ingest_roundtrip accordingly measures the
 segment read-back against a shared pre-ingested store, not the ingest
 itself; the one-time warmup ingest duration is reported separately as
-`warmup_ingest_sec`.
+`warmup_ingest_sec`. Timed queries still compile the few classes whose
+generated code embeds values taken from the data or drawn per call;
+`codegen_compiles` in BENCH_DETAIL.json counts Janino compiles per query
+and pass. At the smallest SF itself there is no warmup pass, and run 1
+compiles every class.
 
 The final stdout line is kept compact (run-2 totals + per-query run-1
 map) because the round driver captures only the tail of stdout; the full
@@ -149,79 +153,6 @@ def main() -> None:
         "(SELECT id, CAST(id AS DECIMAL(14,2)) d, id % 7 k FROM range(1000))"
     ).collect()
 
-    # Compile the dedup/ANN expression shapes (md5 signature chains,
-    # banded self-joins, simhash bit-packs) on a 256-row synthetic corpus:
-    # janino caches generated classes by source, so the timed queries at
-    # real SF reuse the compiled classes and the bench measures data cost,
-    # not one-time JIT of the largest expression trees.
-    from pyspark.sql import functions as F
-
-    from apache_pinot_spark.operators import dedup as _dedup
-
-    syn_docs = spark.range(256).select(
-        F.col("id").alias("doc_id"),
-        F.concat_ws(
-            " ",
-            *[F.concat(F.lit(f"w{i}x"), (F.col("id") * (i + 1)) % 13) for i in range(12)],
-        ).alias("text"),
-    )
-    _dedup.lsh_verified_pairs(
-        syn_docs, num_hashes=8, band_size=2, shingle_n=3, threshold=0.02
-    ).count()
-    _dedup.simhash16_portable(syn_docs).groupBy(
-        (F.col("simhash") % 16).alias("b")
-    ).count().collect()
-
-    # ANN-family shapes (r9): the brute/LSH/IVF/PQ legs chain python
-    # passes, SMJ self-joins, window ranks and a 4-branch union — ~7 s of
-    # one-time codegen/warm measured landing on the timed family's run-1.
-    # 64 synthetic vectors compile the same generated classes.
-    from apache_pinot_spark.operators import similarity as _sim
-    from apache_pinot_spark.operators.pq import ivfpq_topk as _pq_topk
-
-    syn_emb = spark.range(64).select(
-        F.col("id").alias("vec_id"),
-        F.transform(
-            F.sequence(F.lit(0), F.lit(63)),
-            lambda i: ((F.col("id") * 31 + i) % 17).cast("double"),
-        ).alias("embedding"),
-    )
-    syn_q = syn_emb.filter(F.col("vec_id") < 2)
-    _sim.brute_force_topk(syn_emb, syn_q, k=3).count()
-    _sim.lsh_topk(syn_emb, syn_q, dim=64, k=3, num_planes=4, num_tables=8).count()
-    _sim.ivf_topk(syn_emb, syn_q, dim=64, k=3, num_clusters=4, nprobe=2).count()
-    _pq_topk(syn_emb, syn_q, dim=64, k=3, num_clusters=4, nprobe=2,
-             m=8, ksub=16, iterations=1, refine_factor=128).count()
-
-    # Frozen-tokenizer BPE accounting shape (r9): the Arrow encode pass +
-    # broadcast per-lang join compile on the synthetic corpus.
-    from apache_pinot_spark.operators.bpe import bpe_token_counts as _bpe_counts
-    from apache_pinot_spark.suites.textanalysis_suite import _BPE_MERGES
-
-    _bpe_counts(syn_docs, [list(m) for m in _BPE_MERGES]).agg(
-        {"n_pieces": "sum"}
-    ).collect()
-
-    # Curation-pipeline shapes (r9): quality/langid expression trees, the
-    # portable-split CASE, the capped band self-join and the
-    # union-of-stage-counts plan all compile here on the 256-doc corpus.
-    from apache_pinot_spark.operators.pipeline import (
-        CurationConfig as _CC,
-        curate_corpus as _curate,
-    )
-
-    _syn_stages = _curate(
-        syn_docs.withColumn("source", F.concat(F.lit("s"),
-                                               F.pmod(F.col("doc_id"), 7))),
-        _CC(boilerplate=False, redact_pii=False, near_num_hashes=4,
-            near_band_size=2, near_shingle_n=3, near_threshold=0.02,
-            decontaminate=False, keep_langs=(), min_quality=0.0,
-            max_source_share=0.3, split_portable=True,
-            cache_stages=("quality_language",)),
-    )
-    for _df in _syn_stages.values():
-        _df.count()
-
     # Shared one-time ingest for the lifecycle queries (s1/s8/st4): the
     # timed queries measure the lifecycle op + read, not the ingest. The
     # ingest cost itself is recorded in the bench output as
@@ -233,38 +164,13 @@ def main() -> None:
     warm_lifecycle_tables(spark, sf_dir)
     warmup_ingest_sec = round(time.perf_counter() - t_ingest, 2)
 
-    # Compile the portable-HLL expression shape (md5 + hex arithmetic +
-    # 64 MAX partials — the largest janino class in the suite) on a tiny
-    # synthetic table so the timed HLL queries measure data cost, not JIT.
-    from apache_pinot_spark.sqlfront import PinotEngine
-
-    weng = PinotEngine(spark)
-    weng.register("__warm_hll", spark.range(512).selectExpr("id AS k"))
-    weng.sql(
-        "SELECT DISTINCTCOUNTHLL(k) AS h, DISTINCTCOUNT(k) AS d "
-        "FROM (SELECT DISTINCT k FROM __warm_hll) u"
-    ).collect()
-    # ... and the JSON_MATCH compiled-predicate shape.
-    weng.register(
-        "__warm_json",
-        spark.range(256).selectExpr(
-            "to_json(named_struct('k', id % 100)) AS props",
-            "CAST(id % 5 AS STRING) AS event_type",
-        ),
-    )
-    weng.sql(
-        "SELECT event_type, COUNT(*) AS cnt FROM __warm_json "
-        "WHERE JSON_MATCH(props, '\"$.k\">=50 AND \"$.k\"<80') "
-        "GROUP BY event_type ORDER BY event_type"
-    ).collect()
-
     # Compile-warm EVERY declared query by running it once at the smallest
-    # SF: the generated wholestage/expression code depends only on the
-    # plan (schemas and expressions are identical across SFs), so janino's
-    # class cache hits when the same query runs at the timed SF — the
-    # timed numbers then measure data cost, not per-plan JIT. Mirrors a
-    # serving engine's warmed plan cache; the timed run still includes
-    # planning/analysis per query.
+    # SF. Generated wholestage/expression code depends on the plan, not on
+    # the data size, and the session's codegen class cache holds every
+    # class one pass of the suite compiles (session.CODEGEN_CACHE_ENTRIES),
+    # so the timed passes reuse these classes and measure data cost, not
+    # Janino compiles plus JIT of fresh classes. The timed run still
+    # includes planning/analysis per query.
     warm_sf = "/root/testdata/sf0.001"
     if warm_sf != sf_dir.rstrip("/") and os.path.isdir(warm_sf):
         warm_lifecycle_tables(spark, warm_sf)
@@ -282,11 +188,16 @@ def main() -> None:
     names = [n for n in BENCH_QUERIES if n in querysuite.REGISTRY]
     extra = [n for n in sorted(querysuite.REGISTRY) if n not in names]
 
-    # Per-query JVM-GC and kernel-time deltas ride along in BENCH_DETAIL:
-    # the round-3/4/5 instability hunts all came down to "which query paid
-    # a stall, and was it GC, kernel reclaim, or real work" — record it
-    # every run instead of re-instrumenting each time.
+    # Per-query JVM-GC, kernel-time and Janino-compile deltas ride along in
+    # BENCH_DETAIL: the round-3/4/5 instability hunts all came down to
+    # "which query paid a stall, and was it GC, kernel reclaim, codegen or
+    # real work" — record it every run instead of re-instrumenting each
+    # time. The compile count is read just outside the timed region.
     gc_beans = spark._jvm.java.lang.management.ManagementFactory.getGarbageCollectorMXBeans()
+    codegen_metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+    def _codegen_compiles() -> int:
+        return codegen_metrics.METRIC_COMPILATION_TIME().getCount()
 
     def _gc_ms() -> int:
         return sum(gc_beans.get(i).getCollectionTime() for i in range(gc_beans.size()))
@@ -304,11 +215,12 @@ def main() -> None:
         timings: dict[str, float] = {}
         for name in names + extra:
             q = querysuite.REGISTRY[name]
-            g0, s0 = _gc_ms(), _sys_jiffies()
+            g0, s0, c0 = _gc_ms(), _sys_jiffies(), _codegen_compiles()
             t0 = time.perf_counter()
             rows = q.fn(spark, sf_dir).collect()
             timings[name] = round(time.perf_counter() - t0, 4)
             stalls[f"{tag}:{name}"] = {
+                "codegen_compiles": _codegen_compiles() - c0,
                 "gc_ms": _gc_ms() - g0,
                 "sys_cs": _sys_jiffies() - s0,
             }
@@ -378,6 +290,10 @@ def main() -> None:
     # pass runs later), best_total is the machine-noise-robust capability
     # number while both raw totals stay published for honesty.
     best_total = round(sum(min(timings[n], timings2[n]) for n in timings), 4)
+    codegen_compiles = [
+        sum(v["codegen_compiles"] for k, v in stalls.items() if k.startswith(f"{tag}:"))
+        for tag in ("r1", "r2")
+    ]
     detail = {
         "sf": sf_val,
         "n": 2,
@@ -389,6 +305,7 @@ def main() -> None:
         "run2_queries": timings2,
         "ratios_run1_vs_run2": ratios,
         "per_query_stalls": stalls,
+        "codegen_compiles": codegen_compiles,
         "max_query_ratio_run1_vs_run2": max(ratios.values()) if ratios else 1.0,
         "worst_ratio_query": worst,
         "calib_before": calib_before,
@@ -416,6 +333,8 @@ def main() -> None:
         "warmup_ingest_sec": warmup_ingest_sec,
         "max_query_ratio_run1_vs_run2": detail["max_query_ratio_run1_vs_run2"],
         "worst_ratio_query": worst,
+        # Janino compiles in [run 1, run 2]; per query in BENCH_DETAIL
+        "codegen_compiles": codegen_compiles,
         # compact [cpu_sec, spark_sec] pairs — the stdout line must fit the
         # driver's ~2000-char tail capture with the 50-query map intact;
         # the labeled dict form is in BENCH_DETAIL.json

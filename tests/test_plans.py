@@ -675,3 +675,22 @@ def test_pipeline_map_stages_fuse_into_one_scan(spark, tables):
     stages = P.curate_corpus(tables["documents"], cfg)
     plan = _plan(stages["splits"])
     assert "Exchange" not in plan and "Join" not in plan, plan[:2000]
+
+
+def test_repeated_plans_reuse_compiled_classes(spark):
+    """A plan the JVM has compiled once is never compiled again while the
+    engine's working set fits the codegen class cache. 150 plans that
+    differ only by an inlined literal fill more than Spark's default 100
+    entries (each compiles under two class loaders in local mode); a
+    second pass over them must hit the cache for every class."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+    def run_pass():
+        for i in range(150):
+            spark.range(100).where(F.col("id") > i).agg(
+                F.sum(F.col("id") * i)).collect()
+
+    run_pass()
+    before = metrics.METRIC_COMPILATION_TIME().getCount()
+    run_pass()
+    assert metrics.METRIC_COMPILATION_TIME().getCount() - before == 0

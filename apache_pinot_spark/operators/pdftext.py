@@ -407,9 +407,9 @@ def _a85(data: bytes) -> bytes:
 # decryption for the owner-password-only PDFs that are world-readable.
 # RC4 and AES-128 are implemented from their public specifications
 # (RC4: the well-known KSA/PRGA; AES: FIPS-197 tables) — no crypto
-# library exists in the dependency set, and both are small, exactly
-# specified, and fixture-verifiable by round-trip with the forward
-# cipher below (the FLAC encoder-anchoring stance).
+# library exists in the dependency set, and both are small and exactly
+# specified. The fixtures are verified by round-trip through the forward
+# cipher in this module.
 # --------------------------------------------------------------------------
 
 #: ISO 32000-1 Table . the 32-byte standard padding string

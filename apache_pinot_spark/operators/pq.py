@@ -47,8 +47,8 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from apache_pinot_spark.operators.dedup import _spread
 from apache_pinot_spark.operators.similarity import (
-    _spread,
     _to_double,
     cosine_expr,
     ivf_assign,

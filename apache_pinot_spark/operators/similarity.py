@@ -17,19 +17,12 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from apache_pinot_spark.operators.dedup import _spread
 from apache_pinot_spark.session import local_frame
 
 
 def _to_double(vec: Column) -> Column:
     return F.transform(vec, lambda x: x.cast("double"))
-
-
-def _spread(df: DataFrame) -> DataFrame:
-    """Fan a single-scan-partition input out across cores before per-row
-    scoring work (plan-aware probe — see operators/dedup._spread)."""
-    from apache_pinot_spark.operators.dedup import _spread as _dedup_spread
-
-    return _dedup_spread(df)
 
 
 def dot_expr(a: Column, b: Column, dim: int | None = None) -> Column:

@@ -1,7 +1,7 @@
 """Delta deletion-vector reads and column mapping (sources/delta.py),
 against fixtures serialized by an INDEPENDENT test-side implementation
 (own Z85 encoder, own roaring array-container serializer, own DV file
-layout per the spec's Deletion Vector Format) — the encrypted-PDF/FLAC
+layout per the spec's Deletion Vector Format) — the encrypted-PDF
 anchoring discipline. Covers inline ('i'), UUID sidecar ('u') with and
 without prefix, absolute-path ('p') descriptors, CRC/cardinality
 rejects, (path, dvId) action reconciliation, DV survival through

@@ -59,7 +59,7 @@ def _manifest_schema(part_fields):
 class Fixture:
     """Builds an Iceberg table directory per the spec, one call per
     layer, with explicit sequence numbers — the independent test-side
-    constructor (the encrypted-PDF/FLAC anchoring discipline)."""
+    constructor (the encrypted-PDF anchoring discipline)."""
 
     def __init__(self, root: str, schema_fields, part_avro_fields=()):
         self.root = str(root)

@@ -257,61 +257,3 @@ def test_rewriter_structural_fuzz_vs_duckdb(spark, duck):
             assert (g is None and (w is None or w != w)) or float(g) == float(w), (
                 f"case {case}: {q!r} -> {col}: {g} vs {w}"
             )
-
-
-# --------------------------------------------------------------------------
-# PNG codec properties: random images through an Adam7 stream decode
-# bit-exactly, and the decoder never raises on mutated bytes
-# (reject-with-None contract).
-# --------------------------------------------------------------------------
-
-
-@settings(max_examples=15, deadline=None)
-@given(st.data())
-def test_png_adam7_roundtrip_property(data):
-    """Random images through an independently-assembled Adam7 stream must
-    decode bit-exactly (PNG is lossless), gray and RGB, any size."""
-    import numpy as np
-
-    from tests.test_png_codec import _adam7_rows, _raw_png_i
-
-    from apache_pinot_spark.operators import png_codec as P
-
-    h = data.draw(st.integers(1, 33), label="h")
-    w = data.draw(st.integers(1, 33), label="w")
-    rng = np.random.default_rng(data.draw(st.integers(0, 2**31 - 1)))
-    if data.draw(st.booleans(), label="gray"):
-        img = rng.integers(0, 256, (h, w), dtype=np.uint8)
-        px = P.decode_png(_raw_png_i(w, h, 0, _adam7_rows(img)))
-        assert px is not None and np.array_equal(px[:, :, 0], img)
-    else:
-        img = rng.integers(0, 256, (h, w, 3), dtype=np.uint8)
-        px = P.decode_png(_raw_png_i(w, h, 2, _adam7_rows(img)))
-        assert px is not None and np.array_equal(px, img)
-
-
-@settings(max_examples=25, deadline=None)
-@given(st.data())
-def test_png_decoder_never_raises_on_mutations(data):
-    import numpy as np
-
-    from apache_pinot_spark.operators import png_codec as P
-
-    rng = np.random.default_rng(data.draw(st.integers(0, 2**31 - 1)))
-    img = rng.integers(0, 256, (12, 12), dtype=np.uint8)
-    blob = bytearray(P.encode_png(img))
-    mode = data.draw(st.sampled_from(["truncate", "flip", "splice"]), label="mode")
-    if mode == "truncate":
-        blob = blob[: data.draw(st.integers(0, len(blob) - 1), label="cut")]
-    elif mode == "flip":
-        for _ in range(data.draw(st.integers(1, 8), label="nflips")):
-            i = data.draw(st.integers(0, len(blob) - 1), label="pos")
-            blob[i] ^= data.draw(st.integers(1, 255), label="xor")
-    else:
-        i = data.draw(st.integers(8, len(blob) - 2), label="at")
-        noise = bytes(
-            data.draw(st.lists(st.integers(0, 255), min_size=1, max_size=16))
-        )
-        blob = blob[:i] + noise + blob[i:]
-    out = P.decode_png(bytes(blob))
-    assert out is None or out.ndim == 3

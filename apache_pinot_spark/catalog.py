@@ -187,17 +187,3 @@ class PinotCatalog:
             else:
                 register_table(self.spark, name, path)
         return names
-
-    def register_lake_table(self, name: str, path: str, fmt: str,
-                            **native_kwargs) -> None:
-        """Register a Delta/Iceberg table as a queryable view — the
-        lakehouse analogue of the parquet segment store (production
-        deployments keep the OFFLINE half of a hybrid table in a lake
-        format; sources/lake.py routes to the connector when its jar is
-        present and to the native protocol readers otherwise).
-        ``native_kwargs`` (version=/snapshot_id=/timestamp_ms=) pin a
-        snapshot for time-travel views."""
-        from apache_pinot_spark.sources.lake import read_lake
-
-        df = read_lake(self.spark, path, fmt, **native_kwargs)
-        df.createOrReplaceTempView(name)

@@ -282,20 +282,10 @@ def serialize(bm: RoaringBitmap32, run_optimize: bool = False) -> bytes:
 
 def deserialize(blob: bytes) -> RoaringBitmap32:
     """Parse a portable-format blob (any container mix) into bitsets."""
-    return deserialize_stream(blob, 0)[0]
-
-
-def deserialize_stream(blob: bytes,
-                       offset: int = 0) -> tuple[RoaringBitmap32, int]:
-    """Parse ONE portable-format bitmap starting at ``offset`` inside a
-    larger buffer; returns (bitmap, end offset). The roaring format is
-    self-describing, so concatenated streams (e.g. the Delta deletion-
-    vector RoaringBitmapArray: one 32-bit bitmap per high-word bucket)
-    parse sequentially."""
-    if len(blob) < offset + 4:
+    if len(blob) < 4:
         raise ValueError("roaring blob too short for a cookie")
-    (cookie,) = struct.unpack_from("<I", blob, offset)
-    pos = offset + 4
+    (cookie,) = struct.unpack_from("<I", blob)
+    pos = 4
     if (cookie & 0xFFFF) == SERIAL_COOKIE:
         size = (cookie >> 16) + 1
         nrun_bytes = (size + 7) // 8
@@ -307,11 +297,11 @@ def deserialize_stream(blob: bytes,
         pos += nrun_bytes
         has_offsets = size >= NO_OFFSET_THRESHOLD
     elif cookie == SERIAL_COOKIE_NO_RUN:
-        if len(blob) < offset + 8:
+        if len(blob) < 8:
             raise ValueError("roaring blob truncated in container count")
-        (size,) = struct.unpack_from("<I", blob, offset + 4)
+        (size,) = struct.unpack_from("<I", blob, 4)
         run_flags = np.zeros(size, dtype=bool)
-        pos = offset + 8
+        pos = 8
         has_offsets = True
     else:
         raise ValueError(f"not a roaring bitmap: cookie {cookie & 0xFFFF}")
@@ -372,7 +362,7 @@ def deserialize_stream(blob: bytes,
         if key in containers:
             raise ValueError(f"roaring blob: duplicate container key {key}")
         containers[int(key)] = rep
-    return RoaringBitmap32(containers), pos
+    return RoaringBitmap32(containers)
 
 
 def blob_to_codes(blob: bytes) -> np.ndarray:

@@ -530,6 +530,12 @@ def _emit_nested_wildcard_sql(var: str, rest: list[object], pred: _Pred) -> str:
     return f"exists({inner_arr}, {v} -> {body})"
 
 
+# Constant-false predicate text. Never a bare ``false``: the caller wraps
+# the predicate in parentheses, and Spark parses ``FROM t WHERE (false)``
+# as the table alias ``WHERE`` with the column list ``(false)``.
+_SQL_FALSE = "1 = 0"
+
+
 def _emit_node_sql(
     node: object, raw: str, parsed: str | None, cfg: JsonIndexConfig | None = None
 ) -> str:
@@ -543,11 +549,11 @@ def _emit_node_sql(
                 else:
                     others.append(ch)
             if cfg is not None and cfg.disable_cross_array_unnest and len(groups) > 1:
-                return "false"
+                return _SQL_FALSE
             conds = []
             for prefix, preds in groups.items():
                 if any(not _path_indexed(p.path, cfg) for p in preds):
-                    conds.append("false")
+                    conds.append(_SQL_FALSE)
                     continue
                 if parsed is None:
                     raise ValueError("JSON_MATCH with [*] paths needs a JSON schema")
@@ -561,7 +567,7 @@ def _emit_node_sql(
         )
     pred: _Pred = node
     if not _path_indexed(pred.path, cfg):
-        return "false"
+        return _SQL_FALSE
     split = _split_at_wildcard(pred.path)
     if split is not None:
         if parsed is None:

@@ -349,7 +349,10 @@ def _emit_sql(node: _Node, toks: str, joined: str, stop_words: frozenset[str]) -
     if node.kind in ("term", "phrase"):
         terms = _norm_terms(node.value, stop_words)
         if not terms:
-            return "true"
+            # stop words only: matches every row. Not a bare ``true``,
+            # which text_match_sql's parentheses would turn into a table
+            # alias column list after ``FROM t WHERE``.
+            return "1 = 1"
         if len(terms) == 1:
             return f"array_contains({toks}, {_sq(terms[0])})"
         if node.kind == "phrase" and node.slop > 0:

@@ -1,13 +1,11 @@
 """Apache Avro object-container files, from scratch — reader AND writer.
 
-Why this exists: (a) Pinot's batch-ingestion surface accepts Avro input
+Why this exists: Pinot's batch-ingestion surface accepts Avro input
 (reference `basics/Architecture.md:192-196` describes the batch ingest
 job over raw source data; the public pinot-input-format catalog lists
-Avro first), and this container ships neither spark-avro nor the
-``avro`` PyPI package, so ``ingest_batch(fmt="avro")`` previously could
-only fail with an artifact hint; (b) Apache Iceberg's table metadata
-(manifest lists and manifests, sources/iceberg.py) IS Avro — a native
-Iceberg reader needs a native Avro decoder first.
+Avro first), and the engine's runtime ships neither spark-avro nor the
+``avro`` PyPI package, so without this module ``ingest_batch(fmt="avro")``
+could only fail with an artifact hint.
 
 Everything here is implemented from the public Apache Avro 1.11
 specification ("Object Container Files" and "Binary Encoding" sections):
@@ -47,7 +45,7 @@ import zlib
 from dataclasses import dataclass, field
 from datetime import date, datetime, timedelta
 from decimal import Decimal
-from typing import Any, Callable, Iterator
+from typing import Any, Callable
 
 MAGIC = b"Obj\x01"
 _SYNC_SIZE = 16
@@ -795,8 +793,3 @@ def _peek_schema(spark, path: str) -> str:
         head = fh.read(1 << 20)  # headers are far smaller; 1 MB bound
     schema_json, _codec = read_header(head)
     return schema_json
-
-
-def iter_container_records(blob: bytes, **kwargs) -> Iterator[Any]:
-    """Convenience iterator over one container's records (Python tier)."""
-    yield from read_container(blob, **kwargs).records

@@ -1317,7 +1317,9 @@ class PinotDialect:
 
                 ints = parse_idset(raw)
                 if ints.size == 0:
-                    return "FALSE"
+                    # never a bare FALSE: Spark parses ``FROM t WHERE (FALSE)``
+                    # as the table alias WHERE with the column list (FALSE)
+                    return "(1 = 0)"
                 if ints.size > 10_000:
                     raise ValueError(
                         f"IN_ID_SET: {ints.size} ids is too large for an "
@@ -1335,7 +1337,7 @@ class PinotDialect:
             ):
                 raise ValueError("IN_ID_SET: blob is not a serialized ID_SET")
             if not values:
-                return "FALSE"
+                return "(1 = 0)"
             if len(values) > 10_000:
                 raise ValueError(
                     f"IN_ID_SET: {len(values)} ids is too large for an "
@@ -2832,15 +2834,6 @@ class PinotEngine:
 
         register_hllplus_udfs(self.spark)
         self._hllplus_columns.add(column)
-
-    def enable_hllplus_raw(self) -> None:
-        """Register the HLL++ UDFs without declaring a column — lets
-        DISTINCTCOUNTRAWHLLPLUS build wire sketches over raw columns."""
-        from apache_pinot_spark.functions.hllplus_wire import (
-            register_hllplus_udfs,
-        )
-
-        register_hllplus_udfs(self.spark)
 
     def theta_set_estimate(
         self,

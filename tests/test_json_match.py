@@ -286,3 +286,33 @@ def test_json_index_config_golden_person_corpus(spark):
         df.filter(json_match("person", '"$.addresses[*].street"=\'main st\'', schema, cfg3)).count()
         == 1
     )
+
+
+def test_unindexed_path_matches_nothing_through_engine(spark):
+    """A JSON_MATCH on a path the engine's index config leaves unindexed
+    folds to a constant; through the SQL front-end that constant must
+    still read as a predicate, not as a table alias column list, on
+    tables of one column and of two."""
+    from apache_pinot_spark.functions.json import JsonIndexConfig
+    from apache_pinot_spark.sqlfront import PinotEngine
+
+    docs = ['{"name": "adam", "age": 20}', '{"name": "bob", "age": 30}']
+    eng = PinotEngine(spark)
+    eng.register("jm_unindexed_one", spark.createDataFrame([(d,) for d in docs], ["person"]))
+    eng.register(
+        "jm_unindexed_two",
+        spark.createDataFrame(list(enumerate(docs, 1)), ["id", "person"]),
+    )
+    eng.set_json_index_config("person", JsonIndexConfig(exclude_paths={"$.age"}))
+
+    one = eng.sql("""SELECT * FROM jm_unindexed_one WHERE JSON_MATCH(person, '"$.age"=20')""")
+    assert one.columns == ["person"]
+    assert one.collect() == []
+    two = eng.sql("""SELECT id FROM jm_unindexed_two WHERE JSON_MATCH(person, '"$.age"=20')""")
+    assert two.collect() == []
+    # an indexed path next to the folded one keeps its own answer
+    got = eng.sql(
+        """SELECT id FROM jm_unindexed_two
+           WHERE JSON_MATCH(person, '"$.name"=''bob'' OR "$.age"=20')"""
+    ).collect()
+    assert [r["id"] for r in got] == [2]

@@ -1,6 +1,8 @@
 """Package layout guard: every module of ``apache_pinot_spark`` is either
 reachable from a declared surface or listed, with its reason, in
-``KEPT_OFF_SURFACE``.
+``KEPT_OFF_SURFACE``; every public method of the catalog, engine and
+broker classes is either used from a reachable module or listed, with its
+reason, in ``UNCALLED_METHODS``.
 
 The walk is static (``ast`` only, no imports, no Spark). It starts from the
 declared surfaces — the query registry and its suites, the session and
@@ -9,6 +11,11 @@ import statement, including the ones inside function bodies, plus the
 parent packages each import runs. A module that nothing reaches must be
 listed below; a listed module that becomes reachable, or no longer exists,
 fails too, so the list stays exact.
+
+A reachable module can still carry a method nothing calls, and through it
+a function-level import of a whole tier; the method walk closes that gap.
+A method counts as used when its name appears as an attribute or a string
+constant in a reachable module.
 """
 
 from __future__ import annotations
@@ -49,6 +56,29 @@ KEPT_OFF_SURFACE = {
     # Standalone media parser: no declared query decodes media bytes, and
     # no package module imports it.
     "operators.ogg": "Ogg page/stream stats; test_ogg",
+}
+
+
+# Module → class whose public methods the method walk checks.
+SURFACE_CLASSES = {
+    "catalog": "PinotCatalog",
+    "sqlfront": "PinotEngine",
+    "server": "PinotHttpServer",
+}
+# Public methods of those classes that no reachable module uses, kept on
+# purpose: each is an entry point for callers outside the package, tested
+# by the module its reason names. Delete an entry when its method is
+# deleted or gets a caller.
+UNCALLED_METHODS = {
+    "PinotCatalog.create_table": "schema + table config batch ingest in one call; test_ingestion",
+    "PinotCatalog.attach_all": "re-register persisted tables in a new session; test_ingestion",
+    "PinotEngine.set_json_index_config": "JSON index flattening config for JSON_MATCH; test_json_match",
+    "PinotEngine.infer_json": "JSON schema for JSON_MATCH [*] paths on a loaded table; test_user_journey",
+    "PinotEngine.theta_set_estimate": "theta-sketch set algebra over filtered subsets; test_theta",
+    "PinotEngine.add_rollup": "rollup (star-tree analogue) registration; test_plans",
+    "PinotEngine.register_upsert_table": "upsert table registration; test_upsert",
+    "PinotEngine.register_dedup_table": "dedup table registration; test_upsert",
+    "PinotHttpServer.stop": "broker shutdown for embedding callers; test_server",
 }
 
 
@@ -147,3 +177,57 @@ def test_kept_modules_are_tested():
         if missing or not any(name in _imports(p, modules) for p in named):
             untested[name] = missing or f"none of {[p.name for p in named]} imports it"
     assert not untested, f"KEPT_OFF_SURFACE entries without their tests: {untested}"
+
+
+def _names_used(path: Path) -> set[str]:
+    """Attribute names and string constants in one module."""
+    used: set[str] = set()
+    for node in ast.walk(ast.parse(path.read_text(), str(path))):
+        if isinstance(node, ast.Attribute):
+            used.add(node.attr)
+        elif isinstance(node, ast.Constant) and isinstance(node.value, str):
+            used.add(node.value)
+    return used
+
+
+def _public_methods(modules: dict[str, Path]) -> set[str]:
+    out = set()
+    for mod, cls in SURFACE_CLASSES.items():
+        tree = ast.parse(modules[mod].read_text(), str(modules[mod]))
+        (body,) = [n.body for n in tree.body if isinstance(n, ast.ClassDef) and n.name == cls]
+        out.update(
+            f"{cls}.{n.name}" for n in body
+            if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
+            and not n.name.startswith("_")
+        )
+    return out
+
+
+def test_every_public_method_is_used_or_listed():
+    modules = _modules()
+    used = set().union(*(_names_used(modules[m]) for m in reachable(modules)))
+    methods = _public_methods(modules)
+    uncalled = {m for m in methods if m.split(".")[1] not in used}
+    unlisted = sorted(uncalled - set(UNCALLED_METHODS))
+    assert not unlisted, (
+        f"used by no module reachable from {SEEDS} and not in UNCALLED_METHODS: "
+        f"{unlisted} — call them from a declared surface, delete them, or "
+        "list them with a reason"
+    )
+    gone = sorted(set(UNCALLED_METHODS) - methods)
+    assert not gone, f"listed in UNCALLED_METHODS but no longer exist: {gone}"
+    now_used = sorted(set(UNCALLED_METHODS) - uncalled)
+    assert not now_used, f"listed in UNCALLED_METHODS but used now: {now_used}"
+
+
+def test_uncalled_methods_are_tested():
+    """Each listed method stays for a tested entry point: the test module
+    its reason names exists and uses the method."""
+    untested = {}
+    for name, reason in UNCALLED_METHODS.items():
+        named = [TESTS / f"{t}.py" for t in re.findall(r"\btest_\w+", reason)]
+        missing = [p.name for p in named if not p.exists()]
+        method = name.split(".")[1]
+        if missing or not any(method in _names_used(p) for p in named):
+            untested[name] = missing or f"none of {[p.name for p in named]} uses it"
+    assert not untested, f"UNCALLED_METHODS entries without their tests: {untested}"

@@ -1271,3 +1271,44 @@ def test_reference_function_surface_fully_handled(spark):
         and t.upper() not in known_non_functions
     )
     assert missing == [], f"reference names functions with no handler: {missing}"
+
+
+def test_constant_folded_match_predicates_stay_predicates(spark):
+    """TEXT_MATCH on stop words only matches every row; a JSON_MATCH
+    conjunction across two arrays under disableCrossArrayUnnest, and
+    IN_ID_SET against an empty set, match none. All fold to constants, and
+    Spark parses a parenthesized bare constant after ``FROM t WHERE`` as a
+    table alias column list; the emitted predicates must filter, on tables
+    of one column and of two."""
+    import base64
+
+    from apache_pinot_spark.functions.json import JsonIndexConfig
+
+    eng = PinotEngine(spark)
+    bodies = ["the cat sat", "a dog ran"]
+    eng.register("tm_const_one", spark.createDataFrame([(b,) for b in bodies], ["body"]))
+    eng.register(
+        "tm_const_two", spark.createDataFrame(list(enumerate(bodies, 1)), ["id", "body"])
+    )
+    one = eng.sql("SELECT * FROM tm_const_one WHERE TEXT_MATCH(body, 'the')")
+    assert one.columns == ["body"]
+    assert sorted(r["body"] for r in one.collect()) == sorted(bodies)
+    two = eng.sql("SELECT id FROM tm_const_two WHERE TEXT_MATCH(body, 'the') ORDER BY id")
+    assert [r["id"] for r in two.collect()] == [1, 2]
+    for blob in (b"[]", b"\x00"):  # empty JSON and empty typed ID_SET
+        empty = base64.b64encode(blob).decode()
+        one = eng.sql(f"SELECT * FROM tm_const_one WHERE (IN_ID_SET(body, '{empty}'))")
+        assert one.columns == ["body"]
+        assert one.collect() == []
+
+    doc = '{"p": [{"x": 1}], "q": [{"y": 2}]}'
+    eng.register("jm_const_one", spark.createDataFrame([(doc,)], ["j"]), json_columns=["j"])
+    eng.register(
+        "jm_const_two", spark.createDataFrame([(1, doc)], ["id", "j"]), json_columns=["j"]
+    )
+    eng.set_json_index_config("j", JsonIndexConfig(disable_cross_array_unnest=True))
+    cross = """JSON_MATCH(j, '"$.p[*].x"=1 AND "$.q[*].y"=2')"""
+    one = eng.sql(f"SELECT * FROM jm_const_one WHERE {cross}")
+    assert one.columns == ["j"]
+    assert one.collect() == []
+    assert eng.sql(f"SELECT id FROM jm_const_two WHERE {cross}").collect() == []

@@ -18,9 +18,9 @@ filtered" recipe, StarCoder appendix):
 
 Comment detection is LINE-prefix based per language family (#, //, --,
 ;, %); block comments (/* */) are approximated by their conventional
-continuation style (leading '*') — a cleaner, not a parser, the same
-stance as latex.py/mediawiki.py, and exactly what the published
-recipes do.
+continuation style (leading '*') — a cleaner, not a parser: a gate needs
+only a per-file comment-line ratio, which line prefixes give without a
+per-language grammar, exactly as the published recipes do.
 """
 
 from __future__ import annotations

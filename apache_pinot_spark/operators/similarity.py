@@ -100,34 +100,6 @@ def brute_force_topk(
     )
 
 
-def near_duplicate_pairs(
-    corpus: DataFrame,
-    threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int | None = None,
-) -> DataFrame:
-    """All pairs with cosine >= threshold (id_a < id_b). The full cross
-    join is for small/blocked inputs — at scale, feed LSH buckets through
-    this instead (see lsh_candidate_pairs)."""
-    v = corpus.select(
-        F.col(id_col).alias("id"), _to_double(F.col(vec_col)).alias("v")
-    ).withColumn("n", norm_expr(F.col("v"), dim))
-    a, b = _spread(v).alias("a"), v.alias("b")
-    return (
-        a.join(b, F.col("a.id") < F.col("b.id"))
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            cosine_expr(
-                F.col("a.v"), F.col("b.v"), F.col("a.n"), F.col("b.n"), dim
-            ).alias("score"),
-        )
-        .filter(F.col("score") >= threshold)
-        .select("id_a", "id_b", F.round("score", 6).alias("score"))
-    )
-
-
 # --------------------------------------------------------------------------
 # LSH (random hyperplanes) — the scale path
 # --------------------------------------------------------------------------

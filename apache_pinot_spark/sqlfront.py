@@ -113,10 +113,7 @@ def rewrite_calls(sql: str, handlers: dict[str, Callable[[list[str]], str]]) -> 
             m = pat.search(text, pos)
             if not m:
                 break
-            # skip matches inside string literals: odd count of unescaped
-            # quotes before the match means we're inside one
-            prefix = text[: m.start()]
-            if (prefix.count("'") - prefix.count("\\'") - 2 * prefix.count("''")) % 2 == 1:
+            if _inside_literal(text[: m.start()]):
                 pos = m.end()
                 continue
             lparen = m.end() - 1
@@ -130,6 +127,32 @@ def rewrite_calls(sql: str, handlers: dict[str, Callable[[list[str]], str]]) -> 
         return "".join(out)
 
     return rewrite(sql)
+
+
+def _inside_literal(prefix: str) -> bool:
+    """Odd count of unescaped quotes before a match: it is inside a literal."""
+    return (prefix.count("'") - prefix.count("\\'") - 2 * prefix.count("''")) % 2 == 1
+
+
+_IN_ID_SET_RE = re.compile(r"\b(?:IN_ID_SET|INIDSET)\s*\(", re.IGNORECASE)
+_EQUALS_0_OR_1_RE = re.compile(r"\s*=\s*([01])(?![\w.])")
+
+
+def _fold_in_id_set_comparisons(sql: str) -> str:
+    """Pinot's IN_ID_SET returns 1/0 and documents ``IN_ID_SET(col, '<blob>')
+    = 1``; here the call is a boolean predicate, which Spark will not compare
+    with an integer, so drop the comparison: ``= 0`` becomes ``NOT`` the
+    call, and a NULL key matches neither form."""
+    out, pos = [], 0
+    for m in _IN_ID_SET_RE.finditer(sql):
+        if m.start() < pos or _inside_literal(sql[: m.start()]):
+            continue
+        end, _ = _scan_call(sql, m.end() - 1)
+        if cmp := _EQUALS_0_OR_1_RE.match(sql, end):
+            negate = cmp.group(1) == "0"
+            out += [sql[pos : m.start()], "NOT " * negate, sql[m.start() : end]]
+            pos = cmp.end()
+    return "".join(out) + sql[pos:]
 
 
 def _split_literals(sql: str) -> list[tuple[bool, str]]:
@@ -1293,6 +1316,7 @@ class PinotDialect:
 
             blob = _unquote(a[1])
             raw = _b64.b64decode(blob) if blob else b"\x00"
+            empty_set = f"(CASE WHEN {a[0]} IS NOT NULL THEN 1 = 0 END)"
             if raw and raw[0] == 3:
                 # BLOOM_FILTER IdSet: approximate membership (false
                 # positives at the filter's configured rate, never false
@@ -1318,8 +1342,9 @@ class PinotDialect:
                 ints = parse_idset(raw)
                 if ints.size == 0:
                     # never a bare FALSE: Spark parses ``FROM t WHERE (FALSE)``
-                    # as the table alias WHERE with the column list (FALSE)
-                    return "(1 = 0)"
+                    # as the table alias WHERE with the column list (FALSE);
+                    # a NULL key stays NULL, as it does against a non-empty set
+                    return empty_set
                 if ints.size > 10_000:
                     raise ValueError(
                         f"IN_ID_SET: {ints.size} ids is too large for an "
@@ -1337,7 +1362,7 @@ class PinotDialect:
             ):
                 raise ValueError("IN_ID_SET: blob is not a serialized ID_SET")
             if not values:
-                return "(1 = 0)"
+                return empty_set
             if len(values) > 10_000:
                 raise ValueError(
                     f"IN_ID_SET: {len(values)} ids is too large for an "
@@ -2497,6 +2522,7 @@ class PinotDialect:
         self._hll_args = []
         self._rewrite_notes: list[str] = []
         sql = self._rewrite_pseudo_columns(sql)
+        sql = _fold_in_id_set_comparisons(sql)
         sql = rewrite_calls(sql, self._handlers())
         sql = self._rewrite_mv_predicates(sql)
         sql = self._rewrite_partition_routing(sql)

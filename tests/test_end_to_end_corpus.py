@@ -1,14 +1,13 @@
 """The whole-story integration: a mixed crawl+books+papers corpus runs
-index → range-read → HTML extraction → documents, merges with EPUB and
-PDF ingests, then through curate_corpus with EVERY r11 gate enabled
-(normalize, URL dedup, domain blocklist, word blocklist, heuristic +
-trained quality, substring dedup) into splits and the audit report —
-one test proving the tiers compose."""
+index → range-read → HTML extraction → documents, merges with book and
+paper document rows, then through curate_corpus with EVERY r11 gate
+enabled (normalize, URL dedup, domain blocklist, word blocklist,
+heuristic + trained quality, substring dedup) into splits and the audit
+report — one test proving the tiers compose."""
 
 from __future__ import annotations
 
 import gzip
-import json
 
 import pytest
 from pyspark.sql import functions as F
@@ -47,6 +46,7 @@ def test_crawl_books_papers_to_curated_splits(spark, tmp_path):
     from apache_pinot_spark.operators.quality_clf import QualityModel
     from apache_pinot_spark.operators.report import corpus_report
     from apache_pinot_spark.operators.warc import crawl_to_documents
+    from apache_pinot_spark.session import local_frame
 
     # --- crawl tier: 4 pages, one duplicate-URL variant, one blocked
     # domain, one banned word
@@ -62,39 +62,16 @@ def test_crawl_books_papers_to_curated_splits(spark, tmp_path):
         .select("doc_id", "text",
                 F.lit("en").alias("lang"), "source", "n_chars", "url")
 
-    # --- books tier (EPUB) + papers tier (tex via the LaTeX cleaner)
-    import io
-    import zipfile
+    # --- books and papers tiers: already-extracted document rows
+    others = local_frame(spark, [
+        (doc_id, text, "en", source, len(text), None)
+        for doc_id, text, source in (
+            (990, _PROSE + "epsilon book", "books.example"),
+            (991, _PROSE + "zeta paper", "arxiv.example"))
+    ], "doc_id bigint, text string, lang string, source string, "
+       "n_chars bigint, url string")
 
-    buf = io.BytesIO()
-    with zipfile.ZipFile(buf, "w") as zf:
-        zf.writestr("META-INF/container.xml",
-                    '<rootfile full-path="c.opf"/>')
-        zf.writestr("ch.xhtml",
-                    "<html><body><p>" + _PROSE + "epsilon book</p></body></html>")
-        zf.writestr("c.opf", '<dc:title>B</dc:title>'
-                    '<item id="c" href="ch.xhtml"/><itemref idref="c"/>')
-    (tmp_path / "b.epub").write_bytes(buf.getvalue())
-    from apache_pinot_spark.operators.ebook import epub_to_documents
-
-    books = epub_to_documents(spark, str(tmp_path / "b.epub"),
-                              min_text_chars=50) \
-        .select("doc_id", "text", "lang", F.lit("books.example").alias("source"),
-                "n_chars", F.lit(None).cast("string").alias("url")) \
-        .withColumn("lang", F.lit("en"))
-
-    from apache_pinot_spark.operators.latex import latex_texts
-
-    tex = spark.createDataFrame(
-        [(991, "\\begin{document}" + _PROSE + "zeta paper\\end{document}")],
-        "doc_id bigint, text string")
-    papers = latex_texts(tex).select(
-        "doc_id", "text", F.lit("en").alias("lang"),
-        F.lit("arxiv.example").alias("source"),
-        F.col("n_chars").cast("bigint").alias("n_chars"),
-        F.lit(None).cast("string").alias("url"))
-
-    corpus = web.unionByName(books).unionByName(papers)
+    corpus = web.unionByName(others)
 
     # --- every r11 gate on
     import hashlib
@@ -110,10 +87,9 @@ def test_crawl_books_papers_to_curated_splits(spark, tmp_path):
     )
     stages = curate_corpus(
         corpus, cfg,
-        blocked_domains=spark.createDataFrame([("blocked.example",)],
-                                              "domain string"),
-        word_blocklist=spark.createDataFrame([("casinoword",)],
-                                             "word string"),
+        blocked_domains=local_frame(spark, [("blocked.example",)],
+                                    "domain string"),
+        word_blocklist=local_frame(spark, [("casinoword",)], "word string"),
         quality_model=QualityModel(weights={junk_bucket: -400.0}, bias=2.0),
     )
     names = list(stages)
@@ -141,37 +117,27 @@ def test_crawl_books_papers_to_curated_splits(spark, tmp_path):
     assert dict(rep["sources"]).keys() >= {"good.example.com"}
 
 
-def test_wiki_and_code_mixture_through_recipes(spark, tmp_path):
-    """r12 tiers composing: a MediaWiki dump and a code corpus each run
+def test_wiki_and_code_mixture_through_recipes(spark):
+    """r12 tiers composing: a wiki corpus and a code corpus each run
     their published recipe, then union into one mixture with splits and
     a data card — the multi-source pretraining-mix story."""
-    import bz2
-
-    from apache_pinot_spark.operators.mediawiki import wikitext_to_documents
     from apache_pinot_spark.operators.pipeline import curate_corpus
     from apache_pinot_spark.operators.recipes import (
         gopher_config,
         the_stack_code_config,
     )
     from apache_pinot_spark.operators.report import corpus_report
+    from apache_pinot_spark.session import local_frame
 
-    # --- wiki tier: 6 articles + a redirect
-    def page(title, pid, text):
-        return (f"<page><title>{title}</title><ns>0</ns><id>{pid}</id>"
-                f"<revision><id>{pid}0</id><text>{text}</text></revision>"
-                f"</page>")
-
-    body = ("'''Subject''' is a topic in [[science]] and the study of it "
+    # --- wiki tier: 6 near-identical de-markup'd articles
+    body = ("Subject is a topic in science and the study of it "
             "has a long history with many results that are described "
-            "in detail here for the reader to enjoy at length. " * 3
-            + "{{refs}}")
-    xml = "<mediawiki>" + "".join(
-        page(f"Art {i}", i + 1, body + f" Variant number {i}.")
-        for i in range(6)) + "</mediawiki>"
-    wp = tmp_path / "wiki.xml.bz2"
-    wp.write_bytes(bz2.compress(xml.encode()))
-    wiki = wikitext_to_documents(spark, str(wp), min_text_chars=50) \
-        .select("doc_id", "text", "source")
+            "in detail here for the reader to enjoy at length. " * 3)
+    wiki = local_frame(
+        spark,
+        [(i + 1, body + f"Variant number {i}.", "wikipedia")
+         for i in range(6)],
+        "doc_id bigint, text string, source string")
     wiki_stages = curate_corpus(
         wiki, gopher_config(gopher_overrides={"min_words": 20},
                             decontaminate=False,
@@ -191,8 +157,8 @@ def test_wiki_and_code_mixture_through_recipes(spark, tmp_path):
         (1004, "-- query helper\nSELECT column_name FROM table_name "
                "WHERE other_column IS NOT NULL\n", "repo"),
     ]
-    code = spark.createDataFrame(code_rows, "doc_id bigint, text string, "
-                                            "source string")
+    code = local_frame(spark, code_rows,
+                       "doc_id bigint, text string, source string")
     code_stages = curate_corpus(code, the_stack_code_config(near_dedup=False))
     code_out = code_stages["splits"].select("doc_id", "text", "source",
                                             "split")

@@ -136,6 +136,47 @@ def test_id_set_sql_emits_pinot_carrier_for_ints(spark):
         eng.rewrite(f"SELECT COUNT(*) FROM ids_t WHERE IN_ID_SET(uid, '{bloom}')")
 
 
+@pytest.mark.parametrize("col", ["uid", "name"])
+def test_in_id_set_compared_to_one_and_zero(spark, col):
+    """Pinot documents the filter as ``IN_ID_SET(col, '<blob>') = 1``
+    (``= 0`` for non-members); both comparisons and the bare predicate
+    work on the integer carrier (``uid``) and the JSON carrier
+    (``name``). A NULL key matches neither ``= 1`` nor ``= 0``, against
+    an empty set too: ``= 0`` keeps SQL's three-valued logic, like
+    ``col NOT IN (...)``."""
+    from apache_pinot_spark.session import local_frame
+    from apache_pinot_spark.sqlfront import PinotEngine
+
+    eng = PinotEngine(spark)
+    eng.register(
+        "idset_cmp_t",
+        local_frame(spark, [(1, "a"), (2, "b"), (3, "c"), (None, None)],
+                    "uid bigint, name string"),
+    )
+    blob = eng.sql(
+        f"SELECT ID_SET({col}) AS s FROM idset_cmp_t WHERE uid < 3"
+    ).collect()[0]["s"]
+    lead = base64.b64decode(blob)[:1]
+    assert lead == (bytes([IW.TYPE_ROARING]) if col == "uid" else b"[")
+
+    def uids(where):
+        rows = eng.sql(f"SELECT uid FROM idset_cmp_t WHERE {where}").collect()
+        return sorted(r.uid for r in rows)
+
+    call = f"IN_ID_SET({col}, '{blob}')"
+    assert uids(call) == [1, 2]
+    assert uids(f"{call} = 1") == [1, 2]
+    assert uids(f"{call}=0") == [3]  # the NULL key is in neither result
+    assert uids(f"{call} = 0 OR uid = 1") == [1, 3]
+    empty_blob = base64.b64encode(b"\x00" if col == "uid" else b"[]").decode()
+    empty = f"IN_ID_SET({col}, '{empty_blob}')"
+    assert uids(empty) == [] and uids(f"{empty} = 0") == [1, 2, 3]
+    hits = eng.sql(
+        f"SELECT uid, {call} = 1 AS hit FROM idset_cmp_t"
+    ).collect()
+    assert {r.uid: r.hit for r in hits} == {1: True, 2: True, 3: False, None: None}
+
+
 def test_id_set_int_column_with_nulls_keeps_wire_carrier(spark):
     """Regression: Arrow ships an int64 column containing NULLs to the
     grouped-agg UDF as float64 — the dispatch must follow typeof(), not

@@ -34,17 +34,11 @@ SEEDS = ("querysuite", "suites", "session", "catalog", "server", "sqlfront")
 # catalog or broker path imports them. Each stays for a tested capability
 # outside the declared surface; delete it here when it is deleted.
 KEPT_OFF_SURFACE = {
-    "operators.pdftext": "PDF text extraction for paper/book corpora; test_pdftext",
     "operators.warc": "WARC/HTTP record reader for web-crawl ingest; test_warc_html",
     "operators.htmltext": "HTML to paragraph text after WARC ingest; test_warc_html",
-    "operators.mediawiki": "MediaWiki dump walking and wikitext de-markup; test_mediawiki",
     "operators.zstdio": "zstd frame reader for .jsonl.zst/.warc.zst dumps; test_zstdio",
     "operators.corpusio": "JSONL(.gz/.zst) corpus reader; test_corpusio",
     "operators.cdx": "CDXJ crawl-index reader; test_cdx",
-    "operators.robots": "robots.txt compliance audit of crawl URLs; test_robots",
-    "operators.ebook": "EPUB to text for book corpora; test_ebook",
-    "operators.latex": "LaTeX de-markup for arXiv source; test_latex_docx",
-    "operators.tarwalk": "tar member walker for research-corpus dumps; test_tarwalk",
     "operators.bm25": "BM25 ranked retrieval over documents; test_bm25",
     "operators.unigram": "unigram-LM subword tokenizer next to bpe; test_unigram",
     "operators.recipes": "published curation-recipe CurationConfig presets; test_recipes (slow)",
@@ -53,9 +47,6 @@ KEPT_OFF_SURFACE = {
     "streaming.realtime": "Structured Streaming realtime/hybrid tables; test_kafka_contract, test_streaming (slow)",
     "sources.complex": "complexTypeConfig flattening of nested records; test_ingestion",
     "functions.clp": "CLP log-message encoding; test_clp",
-    # Standalone media parser: no declared query decodes media bytes, and
-    # no package module imports it.
-    "operators.ogg": "Ogg page/stream stats; test_ogg",
 }
 
 

@@ -25,12 +25,6 @@ def date_trunc_millis(unit: str, ts: Column | str) -> Column:
     return (F.unix_timestamp(F.date_trunc(u, c)) * 1000).cast("long")
 
 
-def date_trunc_ts(unit: str, ts: Column | str) -> Column:
-    """Truncated TIMESTAMP form (for group-by labels)."""
-    c = F.col(ts) if isinstance(ts, str) else ts
-    return F.date_trunc(unit.upper(), c)
-
-
 def from_datetime(literal: str | Column, pattern: str) -> Column:
     """Pinot fromDateTime('2014-01-16', 'yyyy-MM-dd') → LONG epoch millis
     (timestamp-index.md:36). Joda patterns are translated to JDK."""

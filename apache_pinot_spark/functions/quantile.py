@@ -88,17 +88,6 @@ def merged_counts_sql(sketch_col_sql: str, bins: int = HIST_BINS) -> str:
     return f"array({parts})"
 
 
-def decoded_counts_sql(sketch_sql: str, bins: int = HIST_BINS) -> str:
-    """Scalar expression decoding ONE sketch BYTES value into an
-    ARRAY<BIGINT> of bin counts (no aggregation — use on an
-    already-merged sketch)."""
-    hx = f"hex({sketch_sql})"
-    return (
-        f"transform(sequence(0, {bins - 1}), "
-        f"i -> CAST(CONV(substr({hx}, i * {_W} + 1, {_W}), 16, 10) AS BIGINT))"
-    )
-
-
 def percentile_walk_sql(counts_sql: str, lo: float, hi: float, q: float, bins: int = HIST_BINS) -> str:
     """Scalar Spark-SQL expression: percentile ``q`` (0-100) from an
     ARRAY<BIGINT> of bin counts, with in-bin linear interpolation — the

@@ -64,16 +64,6 @@ MODE_SUM, MODE_MIN, MODE_MAX, MODE_ALWAYS_ONE = 0, 1, 2, 3
 _INT32_MIN, _INT32_MAX = -(1 << 31), (1 << 31) - 1
 
 
-def _combine(a: np.ndarray, b: np.ndarray, mode: int) -> np.ndarray:
-    if mode == MODE_SUM:
-        return a + b
-    if mode == MODE_MIN:
-        return np.minimum(a, b)
-    if mode == MODE_MAX:
-        return np.maximum(a, b)
-    return np.ones_like(a)  # AlwaysOne
-
-
 class IntegerTupleSketch:
     """cut (theta long), sorted uint64 hashes, aligned int64 summaries."""
 

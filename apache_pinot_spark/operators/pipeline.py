@@ -266,7 +266,7 @@ def curate_corpus(
         dd = url_dedup(cur, url_col=cfg.url_col, id_col=k)
         if "canonical_url" not in cur.columns:
             # drop only the column WE added — a pre-existing
-            # rel=canonical signal from extract_page passes through
+            # rel=canonical signal from the input passes through
             dd = dd.drop("canonical_url")
         if cfg.drop_spent_columns:
             # no later stage reads the raw url — keep it out of every

@@ -82,8 +82,8 @@ def gopher_config(**overrides) -> CurationConfig:
 def refinedweb_config(**overrides) -> CurationConfig:
     """RefinedWeb (§3): URL-level filtering + dedup BEFORE text work
     (url_dedup + the UT1 domain blocklist — pass blocked_domains),
-    trafilatura-style extraction (upstream: htmltext/crawl_to_documents
-    with drop_noindex), Gopher-style line/repetition rules, then the
+    trafilatura-style extraction (upstream, before the rows reach the
+    pipeline), Gopher-style line/repetition rules, then the
     paper's signature "strict deduplication": exact-substring + MinHash
     fuzzy dedup together."""
     cfg = dict(

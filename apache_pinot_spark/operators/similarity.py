@@ -152,11 +152,10 @@ def lsh_buckets(
     (md5-derived, `_plane_weight`), so results are reproducible anywhere,
     including a SQL oracle evaluating the same dot products.
 
-    Sign semantics match lsh_signature_expr exactly: bit p set iff the
-    projection is strictly > 0. (BLAS may sum in a different order than a
-    sequential fold; a sign can only differ where |projection| is within
-    last-ulp noise of 0 — probability ~1e-13 per projection on real-valued
-    data, accepted.)
+    Sign semantics: bit p set iff the projection is strictly > 0. (BLAS
+    may sum in a different order than a sequential fold; a sign can only
+    differ where |projection| is within last-ulp noise of 0 — probability
+    ~1e-13 per projection on real-valued data, accepted.)
     """
     import numpy as np
 
@@ -196,32 +195,6 @@ def lsh_buckets(
         cols.append(F.xxhash64(_to_double(F.col(vec_col))).alias("sigh"))
     v = _spread(df).select(*cols)
     return v.mapInPandas(run, schema=out_schema)
-
-
-def lsh_signature_expr(vec: Column, dim: int, num_planes: int = 16, table: int = 0) -> Column:
-    """Pack sign bits of num_planes projections into one INT bucket id.
-
-    Each projection is a JVM fold (`zip_with` the vector against a literal
-    weight array, then `aggregate`) — a compact expression tree that codegen
-    handles at any (dim, num_planes), unlike a fully unrolled sum which
-    blows up compilation memory at dim*planes terms. The weight array is
-    built with ONE parsed `array(...)` literal per plane rather than dim
-    individual `F.lit` Columns — each lit is a py4j round trip, and
-    dim×planes×tables of them put seconds of pure driver-side plan
-    construction ahead of every query."""
-    sig = F.lit(0)
-    for p in range(num_planes):
-        weights = F.expr(
-            "array(" + ",".join(repr(_plane_weight(p, d, table)) for d in range(dim)) + ")"
-        )
-        proj = F.aggregate(
-            F.zip_with(vec, weights, lambda x, w: x * w),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        bit = F.when(proj > 0, F.lit(1 << p)).otherwise(F.lit(0))
-        sig = sig.bitwiseOR(bit)
-    return sig
 
 
 def lsh_candidate_pairs(

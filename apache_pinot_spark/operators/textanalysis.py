@@ -49,28 +49,6 @@ def stopword_count_expr(col: Column | str) -> Column:
     return F.size(F.filter(toks, lambda x: F.array_contains(stop_arr, x)))
 
 
-def punct_count_expr(col: Column | str) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return F.length(c) - F.length(F.regexp_replace(c, r"[\.,;:!\?]", ""))
-
-
-def quality_features(col: Column | str) -> dict[str, Column]:
-    """The standard cheap quality signals: counts (exact ints) so
-    aggregations stay deterministic; ratios are computed by the caller
-    with one division. Each entry is an independent expression (n_tokens
-    and n_stopwords both tokenize) — for the composite score use
-    quality_score_expr, which folds the token-level features into ONE
-    tokenize pass."""
-    c = F.col(col) if isinstance(col, str) else col
-    return {
-        "n_chars_measured": F.length(c),
-        "n_tokens": token_count_expr(c),
-        "n_stopwords": stopword_count_expr(c),
-        "n_punct": punct_count_expr(c),
-        "n_digits": F.length(c) - F.length(F.regexp_replace(c, r"[0-9]", "")),
-    }
-
-
 def quality_score_expr(col: Column | str) -> Column:
     """Composite 0-100 heuristic: reward stopword presence (natural prose)
     and moderate token length; penalize digit soup. Deterministic integer/
@@ -127,24 +105,6 @@ LANG_MARKERS: dict[str, list[str]] = {
     "de": ["der", "die", "das", "und", "nicht"],
     "zh": ["de", "shi", "bu", "le", "wo"],
 }
-
-
-def _contains_any(arr: Column):
-    # NB: must be a 1-arg lambda — PySpark interprets 2-arg higher-order
-    # lambdas (even via default args) as (element, index).
-    return lambda x: F.array_contains(arr, x)
-
-
-def lang_marker_counts(col: Column | str) -> dict[str, Column]:
-    """Per-language marker count expressions. Each tokenizes independently
-    — fine for a one-language projection; for the argmax decision use
-    lang_id_expr, which computes every count in ONE tokenize pass."""
-    toks = whitespace_tokens(F.lower(F.col(col) if isinstance(col, str) else col))
-    out = {}
-    for lang, markers in LANG_MARKERS.items():
-        arr = F.array(*[F.lit(m) for m in markers])
-        out[lang] = F.size(F.filter(toks, _contains_any(arr)))
-    return out
 
 
 def lang_marker_counts_expr(col: Column | str) -> Column:
@@ -205,21 +165,6 @@ def lang_id_expr(col: Column | str, default: str = "und") -> Column:
 # --------------------------------------------------------------------------
 # Document fingerprinting (winnowing-style)
 # --------------------------------------------------------------------------
-
-
-def winnow_fingerprints_expr(
-    col: Column | str, shingle_n: int = 4, keep: int = 4
-) -> Column:
-    """The `keep` lexicographically-smallest md5 shingle hashes — a
-    winnowing-style robust fingerprint set. Two documents sharing any
-    fingerprint are near-dup candidates. Portable (md5 + sort + slice)."""
-    c = F.col(col) if isinstance(col, str) else col
-    toks = whitespace_tokens(F.lower(c))
-    sh = F.transform(
-        F.sequence(F.lit(1), F.greatest(F.size(toks) - (shingle_n - 1), F.lit(0))),
-        lambda i: F.md5(F.array_join(F.slice(toks, i, shingle_n), " ")),
-    )
-    return F.slice(F.array_sort(sh), 1, keep)
 
 
 def winnow_fingerprints(

@@ -158,7 +158,7 @@ def url_dedup(
     URL does not canonicalize (NULL) are kept as their own stratum.
     One keyed shuffle; survivors keep all input columns plus
     ``canonical_url``. If the input ALREADY carries a ``canonical_url``
-    column (e.g. htmltext.extract_page's rel=canonical signal), it is
+    column (e.g. a rel=canonical signal from HTML extraction), it is
     preserved untouched — the dedup key is computed under a private
     name so the caller's signal is never clobbered."""
     cu = canonical_url_expr(url_col, tracking_params)

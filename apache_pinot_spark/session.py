@@ -15,6 +15,13 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+# The directory that holds this package. Python UDF and mapInPandas
+# bodies import the package inside the worker, and a worker starts in the
+# JVM's working directory with only PySpark on its path, so a driver that
+# found the package through its own ``sys.path`` (not the working
+# directory) must hand this directory to the workers.
+PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 # Runtime (non-static) confs that must hold on ANY session we are handed,
 # including the driver's. Applied by `configure()`.
 RUNTIME_CONFS = {
@@ -122,6 +129,20 @@ def configure(spark: SparkSession) -> SparkSession:
             spark.conf.set(k, v)
         except Exception:
             pass  # conf may be static on this session; accept its value
+    return share_package_with_workers(spark)
+
+
+def share_package_with_workers(spark: SparkSession) -> SparkSession:
+    """Put ``PACKAGE_PARENT`` on the Python workers' ``PYTHONPATH``.
+
+    The context holds its ``spark.executorEnv.*`` entries in
+    ``environment``; every Python function created after this call
+    carries that dict, and Spark merges its ``PYTHONPATH`` with the one
+    the worker inherits. Touches no other setting of the session."""
+    env = spark.sparkContext.environment
+    paths = [p for p in env.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if PACKAGE_PARENT not in paths:
+        env["PYTHONPATH"] = os.pathsep.join(paths + [PACKAGE_PARENT])
     return spark
 
 

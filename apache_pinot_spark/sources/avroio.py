@@ -21,12 +21,12 @@ specification ("Object Container Files" and "Binary Encoding" sections):
     ``snappy`` (raw snappy + 4-byte big-endian CRC32 of the
     uncompressed payload) when pyarrow's bundled snappy is available.
 
-House hardening rules (untrusted input — same contract as warc.py /
-zstdio.py): every length/count read from the wire is capped BEFORE
-allocation, deflate inflates chunkwise under a byte cap, decode
-recursion is depth-capped (Avro schemas may be recursive by name),
-per-block error isolation with sync-marker resync, and a lying block
-byte-size rejects that block, never the file.
+House hardening rules (Avro files come from outside the engine, so any
+length or count in them can lie): every length/count read from the wire
+is capped BEFORE allocation, deflate inflates chunkwise under a byte
+cap, decode recursion is depth-capped (Avro schemas may be recursive by
+name), per-block error isolation with sync-marker resync, and a lying
+block byte-size rejects that block, never the file.
 
 Logical types surfaced on the Spark path: decimal (bytes/fixed),
 date, timestamp-millis/micros, uuid. time-millis/micros and
@@ -462,7 +462,7 @@ def read_container(blob: bytes, *, max_block_bytes: int = 64 << 20,
     """Parse one Avro object-container file. ``on_error='skip'`` gives
     per-BLOCK error isolation: a corrupt block (bad varint, lying byte
     size, failed inflate, sync mismatch) is dropped and the scan resyncs
-    on the 16-byte sync marker — the house WARC-member contract."""
+    on the 16-byte sync marker, so one bad block never loses the file."""
     if on_error not in ("raise", "skip"):
         raise ValueError("on_error must be 'raise' or 'skip'")
     if blob[:4] != MAGIC:
@@ -680,9 +680,9 @@ def read_avro(spark, path: str, *, max_file_bytes: int = 512 << 20,
 
     The schema comes from ONE driver-side header peek (first file,
     lexicographic — the parquet-footer analogue); every file then
-    decodes distributed, one task per file (binaryFile source — the
-    WARC-tier contract; Avro blocks are not split within a file, which
-    matches how corpora ship: many ~100 MB–1 GB files). A file whose
+    decodes distributed, one task per file (binaryFile source; Avro
+    blocks are not split within a file, which matches how corpora ship:
+    many ~100 MB–1 GB files). A file whose
     schema string differs from the anchor resolves structurally: it is
     decoded with ITS OWN schema and the named fields are assembled
     through the anchor's converters (Avro's own
@@ -730,7 +730,7 @@ def read_avro(spark, path: str, *, max_file_bytes: int = 512 << 20,
 def avro_ingest_audit(spark, path: str, *, max_file_bytes: int = 512 << 20,
                       max_block_bytes: int = 64 << 20):
     """Per-file ingest ledger: records/blocks kept, blocks rejected,
-    whether the file parsed at all — the jsonl_ingest_audit analogue."""
+    whether the file parsed at all."""
     import pandas as pd
     from pyspark.sql import types as T
 

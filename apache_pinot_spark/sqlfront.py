@@ -49,7 +49,7 @@ from apache_pinot_spark.functions.json import (
     json_match_sql,
 )
 from apache_pinot_spark.functions.text import text_contains_sql, text_match_sql
-from apache_pinot_spark.session import local_frame
+from apache_pinot_spark.session import local_frame, share_package_with_workers
 
 # --------------------------------------------------------------------------
 # Call-aware SQL text utilities (quote- and paren-safe; no sqlglot in the
@@ -2637,6 +2637,7 @@ class PinotEngine:
         self._cpc_columns: set[str] = set()
         self._upsert_tables: dict[str, object] = {}  # name → UpsertConfig
         self._rollups: list = []  # RollupSpec registry
+        share_package_with_workers(spark)
         _register_session_udfs(spark)
         if sf_dir:
             for name, df in load_tables(spark, sf_dir, tables).items():

@@ -377,29 +377,6 @@ def windowed_counts(
     )
 
 
-def sessionized_counts(
-    stream_df: DataFrame,
-    time_col: str,
-    key_col: str,
-    gap_duration: str = "5 minutes",
-    watermark_delay: str = "10 minutes",
-) -> DataFrame:
-    """Session windows (gap-based) per key — `session_window` merges
-    events closer than ``gap_duration`` into one session; the watermark
-    finalizes and evicts closed sessions."""
-    return (
-        stream_df.withWatermark(time_col, watermark_delay)
-        .groupBy(F.session_window(F.col(time_col), gap_duration), F.col(key_col))
-        .agg(F.count("*").alias("cnt"))
-        .select(
-            F.col("session_window.start").alias("session_start"),
-            F.col("session_window.end").alias("session_end"),
-            key_col,
-            "cnt",
-        )
-    )
-
-
 def running_totals_stateful(
     stream_df: DataFrame,
     key_col: str,

@@ -1,16 +1,12 @@
-"""The whole-story integration: a mixed crawl+books+papers corpus runs
-index → range-read → HTML extraction → documents, merges with book and
-paper document rows, then through curate_corpus with EVERY r11 gate
+"""The whole-story integration: a mixed crawl+books+papers corpus of
+plain document rows runs through curate_corpus with EVERY r11 gate
 enabled (normalize, URL dedup, domain blocklist, word blocklist,
 heuristic + trained quality, substring dedup) into splits and the audit
 report — one test proving the tiers compose."""
 
 from __future__ import annotations
 
-import gzip
-
 import pytest
-from pyspark.sql import functions as F
 
 pytestmark = pytest.mark.slow  # excluded from the default driver-verify lane (see pytest.ini)
 
@@ -19,59 +15,34 @@ _PROSE = ("this is a perfectly ordinary paragraph of prose with the "
           "and it is long enough to pass the quality gates easily ")
 
 
-def _page(marker, extra=""):
-    return ("<html><body><p>" + _PROSE + marker + " " + extra
-            + "</p></body></html>").encode()
-
-
-def _warc(records):
-    out = b""
-    for uri, page in records:
-        http = (b"HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n\r\n"
-                + page)
-        rec = (b"WARC/1.0\r\nWARC-Type: response\r\n"
-               b"WARC-Date: 2024-01-01T00:00:00Z\r\n"
-               b"WARC-Target-URI: " + uri + b"\r\n"
-               b"Content-Length: " + str(len(http)).encode() + b"\r\n\r\n"
-               + http + b"\r\n\r\n")
-        out += gzip.compress(rec)
-    return out
-
-
-def test_crawl_books_papers_to_curated_splits(spark, tmp_path):
+def test_crawl_books_papers_to_curated_splits(spark):
     from apache_pinot_spark.operators.pipeline import (
         CurationConfig,
         curate_corpus,
     )
     from apache_pinot_spark.operators.quality_clf import QualityModel
     from apache_pinot_spark.operators.report import corpus_report
-    from apache_pinot_spark.operators.warc import crawl_to_documents
     from apache_pinot_spark.session import local_frame
 
     # --- crawl tier: 4 pages, one duplicate-URL variant, one blocked
-    # domain, one banned word
-    crawl = tmp_path / "crawl.warc.gz"
-    crawl.write_bytes(_warc([
-        (b"http://good.example.com/a?utm_source=x", _page("alpha")),
-        (b"http://good.example.com/a", _page("alpha")),      # URL dup
-        (b"http://spam.blocked.example/z", _page("gamma")),  # blocked
-        (b"http://good.example.com/b", _page("casinoword")),  # banned
-        (b"http://good.example.com/c", _page("delta")),
-    ]))
-    web = crawl_to_documents(spark, str(crawl), min_text_chars=50) \
-        .select("doc_id", "text",
-                F.lit("en").alias("lang"), "source", "n_chars", "url")
-
-    # --- books and papers tiers: already-extracted document rows
-    others = local_frame(spark, [
-        (doc_id, text, "en", source, len(text), None)
-        for doc_id, text, source in (
-            (990, _PROSE + "epsilon book", "books.example"),
-            (991, _PROSE + "zeta paper", "arxiv.example"))
+    # domain, one banned word; source is the URL host. Books and papers:
+    # document rows without a URL.
+    corpus = local_frame(spark, [
+        (doc_id, _PROSE + marker, "en", source, len(_PROSE + marker), url)
+        for doc_id, marker, source, url in (
+            (1, "alpha", "good.example.com",
+             "http://good.example.com/a?utm_source=x"),
+            (2, "alpha", "good.example.com",
+             "http://good.example.com/a"),  # URL dup
+            (3, "gamma", "spam.blocked.example",
+             "http://spam.blocked.example/z"),  # blocked
+            (4, "casinoword", "good.example.com",
+             "http://good.example.com/b"),  # banned
+            (5, "delta", "good.example.com", "http://good.example.com/c"),
+            (990, "epsilon book", "books.example", None),
+            (991, "zeta paper", "arxiv.example", None))
     ], "doc_id bigint, text string, lang string, source string, "
        "n_chars bigint, url string")
-
-    corpus = web.unionByName(others)
 
     # --- every r11 gate on
     import hashlib

@@ -136,6 +136,49 @@ def test_id_set_sql_emits_pinot_carrier_for_ints(spark):
         eng.rewrite(f"SELECT COUNT(*) FROM ids_t WHERE IN_ID_SET(uid, '{bloom}')")
 
 
+_OUTSIDE_SCRIPT = """
+import sys
+sys.path.insert(0, {repo!r})
+from pyspark.sql import SparkSession
+from apache_pinot_spark.session import get_spark, local_frame
+from apache_pinot_spark.sqlfront import PinotEngine
+if {vanilla}:
+    spark = (SparkSession.builder.master("local[1]")
+             .config("spark.driver.memory", "1g").getOrCreate())
+else:
+    spark = get_spark("id-set-outside-repo", cpus=1)
+eng = PinotEngine(spark)
+eng.register("t", local_frame(spark, [(1,), (2,), (2,), (40,)], "uid bigint"))
+print(eng.sql("SELECT ID_SET(uid) AS s FROM t").collect()[0]["s"])
+spark.stop()
+"""
+
+
+@pytest.mark.parametrize("vanilla", [False, True], ids=["get_spark", "vanilla"])
+def test_id_set_runs_from_outside_the_repo(tmp_path, vanilla):
+    """A driver that finds the package on its own ``sys.path`` and runs
+    from another directory: the ID_SET pandas UDF imports the package
+    inside the Python worker, which starts in that directory, so the
+    session has to put the package on the worker path — whether
+    ``get_spark`` built it or the driver did."""
+    import os
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    repo = str(Path(IW.__file__).resolve().parents[2])
+    env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM="1g")
+    env["PYTHONPATH"] = os.pathsep.join(
+        p for p in env.get("PYTHONPATH", "").split(os.pathsep)
+        if p and Path(p).resolve() != Path(repo))
+    out = subprocess.run(
+        [sys.executable, "-c", _OUTSIDE_SCRIPT.format(repo=repo, vanilla=vanilla)],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600)
+    assert out.returncode == 0, out.stderr[-3000:]
+    blob = out.stdout.strip().splitlines()[-1]
+    assert set(IW.parse_idset(base64.b64decode(blob)).tolist()) == {1, 2, 40}
+
+
 @pytest.mark.parametrize("col", ["uid", "name"])
 def test_in_id_set_compared_to_one_and_zero(spark, col):
     """Pinot documents the filter as ``IN_ID_SET(col, '<blob>') = 1``

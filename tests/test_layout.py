@@ -22,6 +22,7 @@ from __future__ import annotations
 
 import ast
 import re
+from collections import Counter
 from pathlib import Path
 
 PKG = "apache_pinot_spark"
@@ -34,13 +35,6 @@ SEEDS = ("querysuite", "suites", "session", "catalog", "server", "sqlfront")
 # catalog or broker path imports them. Each stays for a tested capability
 # outside the declared surface; delete it here when it is deleted.
 KEPT_OFF_SURFACE = {
-    "operators.warc": "WARC/HTTP record reader for web-crawl ingest; test_warc_html",
-    "operators.htmltext": "HTML to paragraph text after WARC ingest; test_warc_html",
-    "operators.zstdio": "zstd frame reader for .jsonl.zst/.warc.zst dumps; test_zstdio",
-    "operators.corpusio": "JSONL(.gz/.zst) corpus reader; test_corpusio",
-    "operators.cdx": "CDXJ crawl-index reader; test_cdx",
-    "operators.bm25": "BM25 ranked retrieval over documents; test_bm25",
-    "operators.unigram": "unigram-LM subword tokenizer next to bpe; test_unigram",
     "operators.recipes": "published curation-recipe CurationConfig presets; test_recipes (slow)",
     "operators.report": "one-call corpus audit report; test_report",
     "streaming": "package of the realtime tier below",
@@ -222,3 +216,44 @@ def test_uncalled_methods_are_tested():
         if missing or not any(method in _names_used(p) for p in named):
             untested[name] = missing or f"none of {[p.name for p in named]} uses it"
     assert not untested, f"UNCALLED_METHODS entries without their tests: {untested}"
+
+
+# Where a top-level name counts as used: the package, the tests and the
+# benchmark and driver entry points.
+NAME_SOURCES = (ROOT, TESTS, TESTS.parent / "bench.py",
+                TESTS.parent / "perfbench", TESTS.parent / "__spark_entry__.py")
+
+
+def _name_uses(tree: ast.AST) -> Counter:
+    """Names one syntax tree uses: ``Name`` ids, ``Attribute`` attrs,
+    imported names and string constants (registry lookups by name).
+    Comments are not in the tree, and a docstring never equals a name."""
+    uses = Counter()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Name):
+            uses[node.id] += 1
+        elif isinstance(node, ast.Attribute):
+            uses[node.attr] += 1
+        elif isinstance(node, ast.alias):
+            uses[node.name.rsplit(".", 1)[-1]] += 1
+        elif isinstance(node, ast.Constant) and isinstance(node.value, str):
+            uses[node.value] += 1
+    return uses
+
+
+def test_top_level_names_are_used():
+    """Every top-level ``def`` and ``class`` of the package is used by
+    code somewhere outside its own definition. A name that only a
+    comment or a docstring mentions is dead code."""
+    files = [p for src in NAME_SOURCES
+             for p in ([src] if src.is_file() else sorted(src.rglob("*.py")))]
+    trees = {path: ast.parse(path.read_text(), str(path)) for path in files}
+    uses = sum((_name_uses(t) for t in trees.values()), Counter())
+    dead = []
+    for path in sorted(ROOT.rglob("*.py")):
+        for node in trees[path].body:
+            if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                continue
+            if uses[node.name] == _name_uses(node)[node.name]:
+                dead.append(f"{path.relative_to(ROOT)}:{node.name}")
+    assert not dead, f"top-level names nothing else mentions: {dead}"

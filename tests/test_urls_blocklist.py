@@ -64,7 +64,7 @@ def test_host_suffixes_include_full_host_past_cap(spark):
 
 
 def test_url_dedup_preserves_existing_canonical_url(spark):
-    # extract_page's rel=canonical signal must survive url_dedup
+    # an upstream rel=canonical signal must survive url_dedup
     rows = [(1, "http://example.com/a", "http://orig/canon1"),
             (2, "http://example.com/b", "http://orig/canon2")]
     df = spark.createDataFrame(rows,
@@ -164,22 +164,15 @@ def test_badword_stats_duckdb_parity(spark):
     assert ours == [tuple(r) for r in got]
 
 
-def test_crawl_url_column_survives_garbage_uri(spark, tmp_path):
-    # try_parse_url regression guard: a malformed WARC-Target-URI must
-    # not fail the ingest job — it lands with a NULL source
-    import gzip
-
-    from apache_pinot_spark.operators import warc as W
-    page = (b"<html><body><p>plain prose paragraph with the usual common "
-            b"stopwords that real writing always has in it and enough "
-            b"words to pass the gate easily for sure.</p></body></html>")
-    http = b"HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n\r\n" + page
-    rec = (b"WARC/1.0\r\nWARC-Type: response\r\n"
-           b"WARC-Date: 2024-01-01T00:00:00Z\r\n"
-           b"WARC-Target-URI: ht!tp://%%bad uri%%\r\n"
-           b"Content-Length: " + str(len(http)).encode() + b"\r\n\r\n"
-           + http + b"\r\n\r\n")
-    p = tmp_path / "bad-uri.warc.gz"
-    p.write_bytes(gzip.compress(rec))
-    rows = W.crawl_to_documents(spark, str(p), min_text_chars=50).collect()
-    assert len(rows) == 1 and rows[0].source is None
+def test_crawl_url_column_survives_garbage_uri(spark):
+    # try_parse_url regression guard: a malformed crawl URL must not fail
+    # the URL-curation stages — it lands with a NULL canonical_url and
+    # passes the blocklist (no host to block on)
+    rows = [(1, "ht!tp://%%bad uri%%", None),
+            (2, "http://blocked.example/a", "blocked.example")]
+    df = spark.createDataFrame(rows,
+                               "doc_id bigint, url string, source string")
+    bl = spark.createDataFrame([("blocked.example",)], "domain string")
+    out = U.blocked_domain_filter(U.url_dedup(df), bl).collect()
+    assert [(r.doc_id, r.canonical_url, r.source) for r in out] == [
+        (1, None, None)]

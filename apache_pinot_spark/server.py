@@ -181,6 +181,12 @@ class PinotHttpServer:
                                 400,
                                 {"error": f"columns not in {tbl!r}: {missing}"},
                             )
+                        from apache_pinot_spark.sqlfront import check_sketch_columns
+
+                        try:
+                            check_sketch_columns(mapping)
+                        except ValueError as e:
+                            return self._reply(400, {"error": str(e)})
                         # (registration is engine-wide by column name,
                         # like the dialect's other column declarations —
                         # the table scoping here validates the request)

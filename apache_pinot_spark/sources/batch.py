@@ -98,13 +98,12 @@ class TableConfig:
     # the filter selects what to exclude, not what to keep)
     filter_function: str | None = None
     # BYTES sketch-state columns (configuration-reference/schema.md:48
-    # names serialized sketch metric columns) → wire kind, one of:
-    # theta | tuple | bitmap | tdigest | kll | hllplus | hll_clearspring
-    # | freq_longs | freq_strings | datasketches_hll. Declaring them
-    # here makes the
-    # migration wiring CONFIG-DRIVEN: PinotEngine.register_ingested
-    # (and apply_sketch_columns) routes each to the matching
-    # register_*_column call, so the right merge domain serves
+    # names serialized sketch metric columns) → wire kind, one of
+    # sqlfront.SKETCH_KINDS: theta | tuple | bitmap | tdigest | kll |
+    # hllplus | hll_clearspring | cpc | freq_longs | freq_strings |
+    # datasketches_hll. Ingest rejects an unknown kind before it writes;
+    # PinotEngine.register_ingested declares each column through
+    # apply_sketch_columns, so the right merge domain serves
     # DISTINCTCOUNT*/PERCENTILE*/FREQUENT* automatically.
     sketch_columns: dict[str, str] = dc_field(default_factory=dict)
 
@@ -292,6 +291,9 @@ def ingest_batch(
     Every transform is a narrow map — the only shuffle is the optional
     repartition on the time bucket, which co-locates each output partition
     (segment) in one task for big-file locality at scale."""
+    from apache_pinot_spark.sqlfront import check_sketch_columns
+
+    check_sketch_columns(config.sketch_columns)  # before anything is written
     if isinstance(source, DataFrame):
         raw = source
     else:
@@ -459,6 +461,9 @@ def ingest_bucketed(
     cost of the join. Registration goes through the session catalog
     (bucket metadata lives there); re-attach in a new session with
     ``register_bucketed``. Returns the table path."""
+    from apache_pinot_spark.sqlfront import check_sketch_columns
+
+    check_sketch_columns(config.sketch_columns)  # before anything is written
     df = schema.apply_types(source)
     df = schema.apply_sentinels(df)
     if config.time_column and config.validate_time_range:

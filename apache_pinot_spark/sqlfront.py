@@ -32,6 +32,7 @@ Everything not listed passes through unchanged — the pass-through surface
 
 from __future__ import annotations
 
+import importlib
 import re
 import time
 import weakref
@@ -415,6 +416,52 @@ class RewriteResult:
     notes: list[str] = field(default_factory=list)
 
 
+# Sketch-state kinds a BYTES column can be declared as — the table
+# config's sketchColumns map (TableConfig.sketch_columns; serialized
+# sketch metric columns, schema.md:48) — each → the UDF family
+# (module, registrar) declaring one registers, or None when
+# _register_session_udfs already has it or the kind runs natively.
+SKETCH_KINDS: dict[str, tuple[str, str] | None] = {
+    # tdunning MergingDigest VERBOSE, Pinot's object serde (tdigest.py)
+    "tdigest": None,
+    # DataSketches compact theta (theta.py)
+    "theta": None,
+    # DataSketches KllDoublesSketch (kll_wire.py)
+    "kll": None,
+    # stream-lib HyperLogLogPlus.getBytes() (hllplus_wire.py)
+    "hllplus": None,
+    # DataSketches HLL family 7, what Spark's hll_sketch_agg writes:
+    # merged JVM-side by hll_union_agg. A native aggregate cannot share
+    # a SELECT with grouped-agg pandas UDFs, so a query over this kind
+    # cannot also aggregate another sketch kind.
+    "datasketches_hll": None,
+    # stream-lib HyperLogLog.getBytes(), Pinot's DISTINCTCOUNTHLL wire
+    "hll_clearspring": ("functions.hll_clearspring", "register_clearspring_udfs"),
+    # DataSketches CpcSketch.toByteArray(), all five flavours (cpc_wire.py)
+    "cpc": ("functions.cpc_wire", "register_cpc_udfs"),
+    # serialized RoaringBitmap, portable spec (bitmap_wire.py)
+    "bitmap": ("functions.bitmap_wire", "register_bitmap_udfs"),
+    # DataSketches integer-summary tuple sketch (tuple_wire.py)
+    "tuple": ("functions.tuple_wire", "register_tuple_udfs"),
+    # DataSketches frequencies sketch of longs / strings (freq_wire.py)
+    "freq_longs": ("functions.freq_wire", "register_freq_wire_udfs"),
+    "freq_strings": ("functions.freq_wire", "register_freq_wire_udfs"),
+}
+
+
+def check_sketch_columns(mapping: dict[str, str]) -> dict[str, str]:
+    """Column → lower-cased kind, once every kind is in SKETCH_KINDS;
+    otherwise ValueError naming the unknown ones."""
+    kinds = {col: str(kind).lower() for col, kind in mapping.items()}
+    unknown = {c: mapping[c] for c, k in kinds.items() if k not in SKETCH_KINDS}
+    if unknown:
+        raise ValueError(
+            f"sketchColumns: unknown sketch kind in {unknown}; "
+            f"expected one of {sorted(SKETCH_KINDS)}"
+        )
+    return kinds
+
+
 class PinotDialect:
     """Stateless-ish rewriter; array-column, JSON-schema, and
     timestamp-index metadata come from the owning engine (or empty for
@@ -431,16 +478,7 @@ class PinotDialect:
         json_configs: dict | None = None,
         segment_partitions: dict[str, int] | None = None,
         sketch_ranges: dict[str, tuple[float, float]] | None = None,
-        tdigest_columns: set[str] | None = None,
-        theta_columns: set[str] | None = None,
-        clearspring_hll_columns: set[str] | None = None,
-        kll_columns: set[str] | None = None,
-        freq_wire_columns: dict[str, str] | None = None,
-        hllplus_columns: set[str] | None = None,
-        bitmap_columns: set[str] | None = None,
-        tuple_columns: set[str] | None = None,
-        ds_hll_columns: set[str] | None = None,
-        cpc_columns: set[str] | None = None,
+        sketch_columns: dict[str, str] | None = None,
     ):
         self.array_columns = array_columns or set()
         # real column names of registered tables: a SELECT alias that
@@ -454,61 +492,9 @@ class PinotDialect:
         # BYTES histogram-sketch column → its declared [lo, hi) value
         # range (needed to interpret bin indices as values)
         self.sketch_ranges = sketch_ranges or {}
-        # BYTES columns holding serialized t-digests (tdunning MergingDigest
-        # VERBOSE — the Pinot object-serde wire format, schema.md:48):
-        # PERCENTILETDIGEST over one merges-and-estimates via the
-        # registered pandas grouped-agg UDF (functions/tdigest.py)
-        self.tdigest_columns = tdigest_columns or set()
-        # BYTES columns holding serialized theta sketches (Apache
-        # DataSketches compact-theta wire format, functions/theta.py —
-        # a migrating Pinot user's sketch columns load directly):
-        # DISTINCTCOUNTTHETASKETCH over one
-        # merges-and-estimates via the registered UDF pair
-        self.theta_columns = theta_columns or set()
-        # BYTES columns holding CLEARSPRING (stream-lib) serialized HLLs —
-        # the reference's own DISTINCTCOUNTHLL sketch-column wire format
-        # (functions/hll_clearspring.py, byte-golden vs stream-2.9.8):
-        # DISTINCTCOUNTHLL over one register-max merges and estimates in
-        # the clearspring domain instead of the portable register path
-        self.clearspring_hll_columns = clearspring_hll_columns or set()
-        # BYTES columns holding serialized DataSketches KllDoublesSketch
-        # percentile state (functions/kll_wire.py, jar-validated both ways):
-        # PERCENTILEKLL over one merges in weighted-sample space and
-        # estimates with the library's sorted-view rule
-        self.kll_columns = kll_columns or set()
-        # BYTES columns holding serialized DataSketches frequencies
-        # sketches (functions/freq_wire.py), column → 'longs' | 'strings':
-        # FREQUENT*SKETCH over one merges in the wire domain and returns
-        # the merged wire blob (hex) instead of the engine-local format
-        self.freq_wire_columns = freq_wire_columns or {}
-        # BYTES columns holding stream-lib HyperLogLogPlus blobs (the
-        # reference's DISTINCTCOUNTHLLPLUS sketch columns;
-        # functions/hllplus_wire.py — byte-golden vs stream-2.9.8):
-        # DISTINCTCOUNTHLLPLUS over one merges + estimates in the wire
-        # domain instead of Spark's native HLL++
-        self.hllplus_columns = hllplus_columns or set()
-        # BYTES columns holding SERIALIZED RoaringBitmaps (the public
-        # DistinctCountBitmapAggregationFunction convention for BYTES
-        # input; functions/bitmap_wire.py — byte-golden vs
-        # RoaringBitmap-1.3.0): DISTINCTCOUNTBITMAP over one ORs the
-        # blobs and counts instead of hashing raw values
-        self.bitmap_columns = bitmap_columns or set()
-        # BYTES columns holding serialized DataSketches tuple sketches
-        # with integer summaries (functions/tuple_wire.py, validated
-        # against datasketches-java): the DISTINCTCOUNTTUPLESKETCH /
-        # SUMVALUES / AVGVALUE family merges in the wire domain
-        self.tuple_columns = tuple_columns or set()
-        # BYTES columns holding Apache DataSketches HLL blobs (family 7,
-        # what Spark's hll_sketch_agg writes): DISTINCTCOUNTHLL over one
-        # merges via the native hll_union_agg — zero-Python JVM path
-        self.ds_hll_columns = ds_hll_columns or set()
-        # BYTES columns holding serialized DataSketches CPC sketches
-        # (functions/cpc_wire.py — compressed format parsed from the
-        # published layout, estimates library-exact, merged blobs
-        # byte-identical to the jar's own CpcUnion results):
-        # DISTINCTCOUNTCPCSKETCH over one merges + estimates in the wire
-        # domain; the RAW form returns the merged loadable blob
-        self.cpc_columns = cpc_columns or set()
+        # declared BYTES sketch-state column → kind (SKETCH_KINDS): the
+        # aggregate over it merges in that kind's wire domain
+        self.sketch_columns = sketch_columns or {}
         self.json_schemas = json_schemas or {}  # column name → inferred schema
         # column → JsonIndexConfig (flattening rules, json-index.md:53-81)
         self.json_configs = json_configs or {}
@@ -528,6 +514,16 @@ class PinotDialect:
 
     # -- function handlers ------------------------------------------------
     def _handlers(self) -> dict[str, Callable[[list[str]], str]]:
+        def _require_kind(arg: str, kind: str, fn: str) -> str:
+            arg = arg.strip()
+            if self.sketch_columns.get(arg) != kind:
+                raise ValueError(
+                    f"{fn}({arg}): column is not a registered {kind} sketch "
+                    "BYTES column (declare it in sketchColumns / "
+                    "PinotEngine.apply_sketch_columns)"
+                )
+            return arg
+
         def add(a):
             return f"(({a[0]}) + ({a[1]}))"
 
@@ -570,14 +566,14 @@ class PinotDialect:
             from apache_pinot_spark.functions.hll import hll_merge_estimate_sql
 
             arg = a[0].strip()
-            if arg in self.clearspring_hll_columns:
+            if self.sketch_columns.get(arg) == "hll_clearspring":
                 from apache_pinot_spark.functions.hll_clearspring import (
                     ESTIMATE_UDF,
                     MERGE_UDF,
                 )
 
                 return f"{ESTIMATE_UDF}({MERGE_UDF}({arg}))"
-            if arg in self.ds_hll_columns:
+            if self.sketch_columns.get(arg) == "datasketches_hll":
                 # Apache DataSketches HLL wire blobs (family 7 — what
                 # Spark's own hll_sketch_agg and the wider Spark/
                 # Databricks ecosystem serialize): merged and estimated
@@ -604,20 +600,17 @@ class PinotDialect:
             # migrated stream-lib blobs (functions/hllplus_wire.py).
             # Raw columns: Spark-native HLL++ (fast JVM path, NOT
             # oracle-reproducible).
+            # A BYTES column must be declared: counting distinct
+            # serialized blobs is never the intent.
             arg = a[0].strip()
-            if arg in self.hllplus_columns:
+            if self.sketch_columns.get(arg) == "hllplus" or arg in self.binary_columns:
+                arg = _require_kind(arg, "hllplus", "DISTINCTCOUNTHLLPLUS")
                 from apache_pinot_spark.functions.hllplus_wire import (
                     ESTIMATE_UDF,
                     MERGE_UDF,
                 )
 
                 return f"{ESTIMATE_UDF}({MERGE_UDF}({arg}))"
-            if arg in self.binary_columns:
-                raise ValueError(
-                    f"DISTINCTCOUNTHLLPLUS({arg}): BYTES column not declared "
-                    "as HLL++ state — call register_hllplus_column first "
-                    "(counting distinct serialized blobs is never the intent)"
-                )
             return f"approx_count_distinct({a[0]})"
 
         def distinctcountrawhllplus(a):
@@ -625,21 +618,17 @@ class PinotDialect:
             # hex WIRE blob, loadable by the reference client libraries
             # (functions/hllplus_wire.py). Registered BYTES columns
             # merge; raw columns build at the stream-lib default p/sp.
+            # An undeclared BYTES column is refused: building a sketch OF
+            # serialized blobs is never the intent.
             from apache_pinot_spark.functions.hllplus_wire import (
                 BUILD_UDF,
                 MERGE_UDF,
             )
 
             arg = a[0].strip()
-            if arg in self.hllplus_columns:
+            if self.sketch_columns.get(arg) == "hllplus" or arg in self.binary_columns:
+                arg = _require_kind(arg, "hllplus", "DISTINCTCOUNTRAWHLLPLUS")
                 return f"hex({MERGE_UDF}({arg}))"
-            if arg in self.binary_columns:
-                raise ValueError(
-                    f"DISTINCTCOUNTRAWHLLPLUS({arg}): BYTES column not "
-                    "declared as HLL++ state — call register_hllplus_column "
-                    "first (building a sketch OF serialized blobs is never "
-                    "the intent)"
-                )
             # the CAST renders values with the JVM's own toString — exact
             # Long/Double rendering parity on any JVM, and nullable int
             # columns stay exact (no Arrow float64 coercion in the UDF)
@@ -708,14 +697,14 @@ class PinotDialect:
             legs = []
             for p in preds:
                 guarded = f"CASE WHEN ({p}) THEN {col} END"
-                if col in self.theta_columns:
+                if self.sketch_columns.get(col) == "theta":
                     legs.append(f"{UNION_UDF}({guarded})")
                 else:
                     legs.append(f"{BUILD_UDF}({guarded}, {kk})")
             return legs
 
         def distinctcountthetasketch(a):
-            # Over a BYTES theta-sketch column (register_theta_column):
+            # Over a BYTES theta-sketch column (sketchColumns kind theta):
             # union the group's sketches, estimate, round to a count —
             # the public function's return shape. Over a raw column the
             # engine answers EXACTLY (COUNT DISTINCT): the sketch is an
@@ -743,7 +732,7 @@ class PinotDialect:
                     f"array({', '.join(legs)}))) AS BIGINT)"
                 )
             arg = a[0].strip()
-            if arg in self.theta_columns:
+            if self.sketch_columns.get(arg) == "theta":
                 return f"CAST(ROUND({ESTIMATE_UDF}({UNION_UDF}({arg}))) AS BIGINT)"
             return f"COUNT(DISTINCT {a[0]})"
 
@@ -762,40 +751,25 @@ class PinotDialect:
                 return (
                     f"hex({SETEXPR_RAW_UDF}('{e}', array({', '.join(legs)})))"
                 )
-            arg = a[0].strip()
-            if arg not in self.theta_columns:
-                raise ValueError(
-                    f"DISTINCTCOUNTRAWTHETASKETCH({arg}): column is not a "
-                    "registered theta-sketch BYTES column "
-                    "(PinotEngine.register_theta_column)"
-                )
+            arg = _require_kind(a[0], "theta", "DISTINCTCOUNTRAWTHETASKETCH")
             return f"hex({UNION_UDF}({arg}))"
-
-        def _require_tuple(arg: str, fn: str) -> str:
-            arg = arg.strip()
-            if arg not in self.tuple_columns:
-                raise ValueError(
-                    f"{fn}({arg}): column is not a registered tuple-sketch "
-                    "BYTES column (PinotEngine.register_tuple_column)"
-                )
-            return arg
 
         def distinctcounttuplesketch(a):
             # Over a BYTES integer-sum tuple-sketch column
-            # (register_tuple_column): merge the group's sketches in the
+            # (sketchColumns kind tuple): merge the group's sketches in the
             # DataSketches wire domain and report the distinct estimate.
             # Over a raw column: exact, same stance as the theta form.
             from apache_pinot_spark.functions.tuple_wire import ESTIMATE_UDF as TE
 
             arg = a[0].strip()
-            if arg in self.tuple_columns:
+            if self.sketch_columns.get(arg) == "tuple":
                 return f"CAST(ROUND({TE}({arg})) AS BIGINT)"
             return f"COUNT(DISTINCT {a[0]})"
 
         def distinctcountrawintegersumtuplesketch(a):
             from apache_pinot_spark.functions.tuple_wire import UNION_UDF as TU
 
-            arg = _require_tuple(a[0], "DISTINCTCOUNTRAWINTEGERSUMTUPLESKETCH")
+            arg = _require_kind(a[0], "tuple", "DISTINCTCOUNTRAWINTEGERSUMTUPLESKETCH")
             return f"hex({TU}({arg}))"
 
         def sumvaluesintegersumtuplesketch(a):
@@ -805,18 +779,18 @@ class PinotDialect:
             # (sub-nominal) regime.
             from apache_pinot_spark.functions.tuple_wire import SUMVALUES_UDF as TS
 
-            arg = _require_tuple(a[0], "SUMVALUESINTEGERSUMTUPLESKETCH")
+            arg = _require_kind(a[0], "tuple", "SUMVALUESINTEGERSUMTUPLESKETCH")
             return f"{TS}({arg})"
 
         def avgvalueintegersumtuplesketch(a):
             from apache_pinot_spark.functions.tuple_wire import AVGVALUE_UDF as TA
 
-            arg = _require_tuple(a[0], "AVGVALUEINTEGERSUMTUPLESKETCH")
+            arg = _require_kind(a[0], "tuple", "AVGVALUEINTEGERSUMTUPLESKETCH")
             return f"{TA}({arg})"
 
         def distinctcountbitmap(a):
-            # Over a BYTES column registered as serialized RoaringBitmaps
-            # (register_bitmap_column): OR the blobs, count the union —
+            # Over a BYTES column declared as serialized RoaringBitmaps
+            # (sketchColumns kind bitmap): OR the blobs, count the union —
             # the public DistinctCountBitmapAggregationFunction BYTES
             # behavior (functions/bitmap_wire.py, byte-golden vs the
             # RoaringBitmap jar). Over a raw column the bitmap is only
@@ -825,7 +799,7 @@ class PinotDialect:
             from apache_pinot_spark.functions.bitmap_wire import CARD_UDF
 
             arg = a[0].strip()
-            if arg in self.bitmap_columns:
+            if self.sketch_columns.get(arg) == "bitmap":
                 return f"{CARD_UDF}({arg})"
             return f"COUNT(DISTINCT {a[0]})"
 
@@ -837,18 +811,12 @@ class PinotDialect:
             # ID_SET, the engine's portable exact-set carrier.
             from apache_pinot_spark.functions.bitmap_wire import UNION_UDF as BM_UNION
 
-            arg = a[0].strip()
-            if arg not in self.bitmap_columns:
-                raise ValueError(
-                    f"DISTINCTCOUNTRAWBITMAP({arg}): column is not a "
-                    "registered RoaringBitmap BYTES column "
-                    "(PinotEngine.register_bitmap_column)"
-                )
+            arg = _require_kind(a[0], "bitmap", "DISTINCTCOUNTRAWBITMAP")
             return f"hex({BM_UNION}({arg}))"
 
         def distinctcountcpcsketch(a):
-            # Over a BYTES column registered as serialized DataSketches
-            # CPC sketches (register_cpc_column): merge the blobs in the
+            # Over a BYTES column declared as serialized DataSketches
+            # CPC sketches (sketchColumns kind cpc): merge the blobs in the
             # coupon-matrix domain and estimate library-exactly (HIP for
             # a single un-merged blob, ICON otherwise —
             # functions/cpc_wire.py, golden vs datasketches-java). Over a
@@ -857,7 +825,7 @@ class PinotDialect:
             from apache_pinot_spark.functions.cpc_wire import EST_UDF
 
             arg = a[0].strip()
-            if arg in self.cpc_columns:
+            if self.sketch_columns.get(arg) == "cpc":
                 return f"{EST_UDF}({arg})"
             return f"COUNT(DISTINCT {a[0]})"
 
@@ -867,13 +835,7 @@ class PinotDialect:
             # by CpcSketch.heapify.
             from apache_pinot_spark.functions.cpc_wire import UNION_UDF as CPC_UNION
 
-            arg = a[0].strip()
-            if arg not in self.cpc_columns:
-                raise ValueError(
-                    f"DISTINCTCOUNTRAWCPCSKETCH({arg}): column is not a "
-                    "registered CPC BYTES column "
-                    "(PinotEngine.register_cpc_column)"
-                )
+            arg = _require_kind(a[0], "cpc", "DISTINCTCOUNTRAWCPCSKETCH")
             return f"hex({CPC_UNION}({arg}))"
 
         # -- multi-valued aggregate family (public Pinot surface; the
@@ -1118,10 +1080,10 @@ class PinotDialect:
             # Requires the column's declared [lo, hi) range, registered
             # via PinotEngine.register_sketch_range.
             arg = a[0].strip()
-            if arg in self.tdigest_columns:
+            if self.sketch_columns.get(arg) == "tdigest":
                 # serialized-t-digest BYTES metric: merge the group's
                 # blobs and estimate in rank space (functions/tdigest.py;
-                # UDF registered by PinotEngine.register_tdigest_column)
+                # UDF registered by _register_session_udfs)
                 from apache_pinot_spark.functions.tdigest import UDF_NAME
 
                 return f"{UDF_NAME}({arg}, {float(a[1])!r})"
@@ -1144,14 +1106,14 @@ class PinotDialect:
 
         def percentile_kll(a):
             # PERCENTILEKLL(col, pct): over a registered KLL BYTES column
-            # (register_kll_column) the group's serialized
+            # (sketchColumns kind kll) the group's serialized
             # KllDoublesSketch blobs merge in weighted-sample space and
             # estimate with the library's sorted-view rule
             # (functions/kll_wire.py — DataSketches wire interop).
             # Raw numeric columns take the deterministic
             # percentile_approx path like PERCENTILEEST.
             arg = a[0].strip()
-            if arg in self.kll_columns:
+            if self.sketch_columns.get(arg) == "kll":
                 from apache_pinot_spark.functions.kll_wire import PCT_UDF
 
                 return f"{PCT_UDF}({arg}, {float(a[1])!r})"
@@ -1173,7 +1135,7 @@ class PinotDialect:
             from apache_pinot_spark.functions.kll_wire import BUILD_UDF, RAW_UDF
 
             arg = a[0].strip()
-            if arg in self.kll_columns:
+            if self.sketch_columns.get(arg) == "kll":
                 return f"hex({RAW_UDF}({arg}))"
             k = int(float(a[2])) if len(a) > 2 else 200
             return f"hex({BUILD_UDF}(CAST({a[0]} AS DOUBLE), {k}))"
@@ -1241,11 +1203,11 @@ class PinotDialect:
             from apache_pinot_spark.functions.hll import hll_merge_sketch_sql
 
             arg = a[0].strip()
-            if arg in self.clearspring_hll_columns:
+            if self.sketch_columns.get(arg) == "hll_clearspring":
                 from apache_pinot_spark.functions.hll_clearspring import MERGE_UDF
 
                 return f"hex({MERGE_UDF}({arg}))"
-            if arg in self.ds_hll_columns:
+            if self.sketch_columns.get(arg) == "datasketches_hll":
                 # merged DataSketches HLL blob, still loadable by the
                 # library and by hll_sketch_estimate — all JVM-side
                 # (mixed-lgK inputs allowed, as in the estimate form)
@@ -1269,7 +1231,7 @@ class PinotDialect:
             )
 
             arg = a[0].strip()
-            if arg in self.tdigest_columns:
+            if self.sketch_columns.get(arg) == "tdigest":
                 return f"hex({RAW_UDF_NAME}({arg}))"
             return f"hex({BUILD_RAW_UDF_NAME}(CAST({a[0]} AS DOUBLE)))"
 
@@ -1856,8 +1818,8 @@ class PinotDialect:
             from apache_pinot_spark.functions.freqitems import SKETCH_UDF
 
             arg = a[0].strip()
-            kind = self.freq_wire_columns.get(arg)
-            if kind is not None:
+            kind = self.sketch_columns.get(arg)
+            if kind in ("freq_longs", "freq_strings"):
                 # migrated DataSketches wire column: merge + re-emit in
                 # the WIRE format (functions/freq_wire.py), so existing
                 # clients keep deserializing with the reference library
@@ -1866,7 +1828,7 @@ class PinotDialect:
                     MERGE_STRINGS_UDF,
                 )
 
-                udf = MERGE_LONGS_UDF if kind == "longs" else MERGE_STRINGS_UDF
+                udf = MERGE_LONGS_UDF if kind == "freq_longs" else MERGE_STRINGS_UDF
                 return f"hex({udf}({arg}))"
             return f"hex({SKETCH_UDF}({a[0]}))"
 
@@ -2575,7 +2537,8 @@ def _register_session_udfs(spark: SparkSession) -> None:
     DISTINCTCOUNTRAWHLLPLUS / ID_SET / PERCENTILERAWKLL / FUNNEL_MAX_STEP
     strict_increase / theta build+setexpr / NORMALIZE all work on raw
     columns with no prior registration, so they must exist up front
-    (theta's BYTES-column path stays lazy behind column declaration)."""
+    (their declared-column paths use them too; SKETCH_KINDS maps those
+    kinds to None)."""
     if spark in _UDF_SESSIONS:
         return
     from apache_pinot_spark.functions.freqitems import register_freq_udfs
@@ -2625,16 +2588,7 @@ class PinotEngine:
         self._text_index: dict[str, str] = {}
         self._segment_partitions: dict[str, int] = {}
         self._sketch_ranges: dict[str, tuple[float, float]] = {}
-        self._tdigest_columns: set[str] = set()
-        self._theta_columns: set[str] = set()
-        self._clearspring_hll_columns: set[str] = set()
-        self._kll_columns: set[str] = set()
-        self._freq_wire_columns: dict[str, str] = {}
-        self._hllplus_columns: set[str] = set()
-        self._bitmap_columns: set[str] = set()
-        self._tuple_columns: set[str] = set()
-        self._ds_hll_columns: set[str] = set()
-        self._cpc_columns: set[str] = set()
+        self._sketch_columns: dict[str, str] = {}  # column → SKETCH_KINDS kind
         self._upsert_tables: dict[str, object] = {}  # name → UpsertConfig
         self._rollups: list = []  # RollupSpec registry
         share_package_with_workers(spark)
@@ -2695,172 +2649,24 @@ class PinotEngine:
         self.apply_sketch_columns(meta["config"].get("sketchColumns") or {})
 
     def apply_sketch_columns(self, mapping: dict[str, str]) -> None:
-        """Config-driven sketch-column wiring (TableConfig.sketch_columns
-        / the table config's sketchColumns map): route each declared
-        BYTES column to its wire-format registration so the matching
-        aggregate functions merge in the right domain — the whole-table
-        answer to the reference's serialized sketch metric columns
-        (schema.md:48) without imperative per-column calls."""
-        routes = {
-            "datasketches_hll": self.register_ds_hll_column,
-            "theta": self.register_theta_column,
-            "tuple": self.register_tuple_column,
-            "bitmap": self.register_bitmap_column,
-            "tdigest": self.register_tdigest_column,
-            "kll": self.register_kll_column,
-            "hllplus": self.register_hllplus_column,
-            "hll_clearspring": self.register_clearspring_hll_column,
-            "freq_longs": lambda c: self.register_freq_wire_column(c, "longs"),
-            "freq_strings": lambda c: self.register_freq_wire_column(c, "strings"),
-            "cpc": self.register_cpc_column,
-        }
-        for col, kind in mapping.items():
-            route = routes.get(str(kind).lower())
-            if route is None:
-                raise ValueError(
-                    f"sketchColumns[{col!r}]: unknown sketch kind {kind!r}; "
-                    f"expected one of {sorted(routes)}"
-                )
-            route(col)
+        """Declare BYTES sketch-state columns, column → SKETCH_KINDS kind
+        (TableConfig.sketch_columns / the table config's sketchColumns
+        map), so the matching aggregate functions merge in the right
+        wire domain (schema.md:48). All or nothing: an unknown kind
+        raises before any column is declared."""
+        kinds = check_sketch_columns(mapping)
+        for family in dict.fromkeys(SKETCH_KINDS[k] for k in kinds.values()):
+            if family is not None:
+                module, registrar = family
+                mod = importlib.import_module(f"apache_pinot_spark.{module}")
+                getattr(mod, registrar)(self.spark)
+        self._sketch_columns.update(kinds)
 
     def register_sketch_range(self, column: str, lo: float, hi: float) -> None:
         """Declare the [lo, hi) histogram range of a BYTES percentile-sketch
         column (functions/quantile.py) so PERCENTILEEST / PERCENTILETDIGEST
         over it can merge-and-estimate (schema.md:48)."""
         self._sketch_ranges[column] = (float(lo), float(hi))
-
-    def register_tdigest_column(self, column: str) -> None:
-        """Declare a BYTES column as serialized t-digest percentile state
-        (tdunning MergingDigest VERBOSE — Pinot's object-serde wire
-        format, schema.md:48). PERCENTILETDIGEST/PERCENTILEEST over it
-        merges the group's digests and estimates, via the pandas
-        grouped-agg UDF in functions/tdigest.py."""
-        from apache_pinot_spark.functions.tdigest import register_tdigest_udfs
-
-        register_tdigest_udfs(self.spark)
-        self._tdigest_columns.add(column)
-
-    def register_theta_column(self, column: str) -> None:
-        """Declare a BYTES column as serialized theta-sketch distinct
-        state (Apache DataSketches compact-theta wire format,
-        functions/theta.py — a migrating user's sketch columns load
-        directly). DISTINCTCOUNTTHETASKETCH over it unions the group's
-        sketches and estimates; DISTINCTCOUNTRAWTHETASKETCH returns the
-        merged blob."""
-        from apache_pinot_spark.functions.theta import register_theta_udfs
-
-        register_theta_udfs(self.spark)
-        self._theta_columns.add(column)
-
-    def register_cpc_column(self, column: str) -> None:
-        """Declare a BYTES column as serialized DataSketches CPC sketch
-        state (CpcSketch.toByteArray(); the reference's
-        DISTINCTCOUNTCPCSKETCH columns, schema.md:48).
-        DISTINCTCOUNTCPCSKETCH over it merges the compressed blobs in the
-        coupon-matrix domain and estimates library-exactly;
-        DISTINCTCOUNTRAWCPCSKETCH returns the merged MERGED-format blob
-        (hex) — byte-identical to the jar's own CpcUnion result
-        (functions/cpc_wire.py, golden vs datasketches-java 6.2.0)."""
-        from apache_pinot_spark.functions.cpc_wire import register_cpc_udfs
-
-        register_cpc_udfs(self.spark)
-        self._cpc_columns.add(column)
-
-    def register_bitmap_column(self, column: str) -> None:
-        """Declare a BYTES column as SERIALIZED RoaringBitmap state (the
-        public DistinctCountBitmapAggregationFunction convention for
-        BYTES input; functions/bitmap_wire.py — byte-golden against the
-        RoaringBitmap-1.3.0 jar on Spark's classpath, portable-spec
-        format incl. run containers). DISTINCTCOUNTBITMAP over it ORs
-        the group's bitmaps and counts the union;
-        DISTINCTCOUNTRAWBITMAP returns the merged wire blob as hex."""
-        from apache_pinot_spark.functions.bitmap_wire import register_bitmap_udfs
-
-        register_bitmap_udfs(self.spark)
-        self._bitmap_columns.add(column)
-
-    def register_ds_hll_column(self, column: str) -> None:
-        """Declare a BYTES column as Apache DataSketches HLL blobs
-        (family 7 — the format Spark's own hll_sketch_agg and the wider
-        Spark/Databricks ecosystem serialize, readable by
-        datasketches-java HllSketch.heapify). DISTINCTCOUNTHLL over it
-        merges via the NATIVE hll_union_agg + hll_sketch_estimate —
-        the one sketch kind whose merge path never leaves the JVM.
-        One composition limit follows from Spark itself: a native
-        aggregate cannot share a SELECT with grouped-agg pandas UDFs,
-        so this kind cannot be combined with the other sketch kinds in
-        a single statement (run it in its own)."""
-        self._ds_hll_columns.add(column)
-
-    def register_tuple_column(self, column: str) -> None:
-        """Declare a BYTES column as serialized DataSketches
-        integer-summary TUPLE sketch state (functions/tuple_wire.py —
-        validated against the datasketches-java jar on Spark's
-        classpath; serial version 3, murmur3 seed 9001 hash domain).
-        DISTINCTCOUNTTUPLESKETCH / SUMVALUESINTEGERSUMTUPLESKETCH /
-        AVGVALUEINTEGERSUMTUPLESKETCH over it merge the group's blobs
-        in the wire domain; DISTINCTCOUNTRAWINTEGERSUMTUPLESKETCH
-        returns the merged blob as hex."""
-        from apache_pinot_spark.functions.tuple_wire import register_tuple_udfs
-
-        register_tuple_udfs(self.spark)
-        self._tuple_columns.add(column)
-
-    def register_clearspring_hll_column(self, column: str) -> None:
-        """Declare a BYTES column as CLEARSPRING-serialized HLL state —
-        the reference's own DISTINCTCOUNTHLL sketch-column wire format
-        (stream-lib HyperLogLog.getBytes(), schema.md:48), as a
-        migrating user's tables hold it. DISTINCTCOUNTHLL over it
-        register-max merges + estimates in the clearspring domain
-        (functions/hll_clearspring.py, byte-golden vs stream-2.9.8);
-        DISTINCTCOUNTRAWHLL returns the merged wire blob as hex."""
-        from apache_pinot_spark.functions.hll_clearspring import (
-            register_clearspring_udfs,
-        )
-
-        register_clearspring_udfs(self.spark)
-        self._clearspring_hll_columns.add(column)
-
-    def register_kll_column(self, column: str) -> None:
-        """Declare a BYTES column as serialized DataSketches
-        KllDoublesSketch percentile state (the reference's PERCENTILEKLL
-        sketch columns, schema.md:48). PERCENTILEKLL over it merges the
-        group's blobs in weighted-sample space and estimates with the
-        library's sorted-view rule; PERCENTILERAWKLL re-serializes the
-        deterministic merge as loadable wire state (functions/kll_wire.py,
-        both directions jar-validated against datasketches-java)."""
-        from apache_pinot_spark.functions.kll_wire import register_kll_udfs
-
-        register_kll_udfs(self.spark)
-        self._kll_columns.add(column)
-
-    def register_freq_wire_column(self, column: str, kind: str) -> None:
-        """Declare a BYTES column as serialized DataSketches frequencies
-        state (the reference's FREQUENTLONGSSKETCH /
-        FREQUENTSTRINGSSKETCH columns), kind 'longs' or 'strings'.
-        FREQUENT*SKETCH over it merges in count space and returns the
-        merged WIRE blob as hex — heapifiable by the reference library
-        (functions/freq_wire.py, byte-validated vs datasketches-java)."""
-        if kind not in ("longs", "strings"):
-            raise ValueError("freq wire column kind must be 'longs' or 'strings'")
-        from apache_pinot_spark.functions.freq_wire import register_freq_wire_udfs
-
-        register_freq_wire_udfs(self.spark)
-        self._freq_wire_columns[column] = kind
-
-    def register_hllplus_column(self, column: str) -> None:
-        """Declare a BYTES column as stream-lib HyperLogLogPlus state —
-        the reference's DISTINCTCOUNTHLLPLUS sketch-column wire format
-        (HyperLogLogPlus.getBytes(), sparse and normal regimes).
-        DISTINCTCOUNTHLLPLUS over it merges + estimates in the wire
-        domain (functions/hllplus_wire.py, byte-golden vs
-        stream-2.9.8)."""
-        from apache_pinot_spark.functions.hllplus_wire import (
-            register_hllplus_udfs,
-        )
-
-        register_hllplus_udfs(self.spark)
-        self._hllplus_columns.add(column)
 
     def theta_set_estimate(
         self,
@@ -2939,16 +2745,7 @@ class PinotEngine:
             self._json_index_configs,
             self._segment_partitions,
             self._sketch_ranges,
-            self._tdigest_columns,
-            self._theta_columns,
-            self._clearspring_hll_columns,
-            self._kll_columns,
-            self._freq_wire_columns,
-            self._hllplus_columns,
-            self._bitmap_columns,
-            self._tuple_columns,
-            self._ds_hll_columns,
-            cpc_columns=self._cpc_columns,
+            self._sketch_columns,
         )
 
     def rewrite(self, pinot_sql: str) -> RewriteResult:

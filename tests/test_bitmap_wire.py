@@ -176,7 +176,7 @@ def test_distinctcountbitmap_sql_surface(spark):
     )
     eng = PinotEngine(spark)
     eng.register("bitmap_t", blobs)
-    eng.register_bitmap_column("uid_bitmap")
+    eng.apply_sketch_columns({"uid_bitmap": "bitmap"})
     got = {
         row["g"]: row["dc"]
         for row in eng.sql(

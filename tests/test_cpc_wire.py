@@ -167,7 +167,7 @@ def test_sql_surface_registered_cpc_column(spark):
     df = spark.createDataFrame(blobs, "grp INT, cpc BINARY")
     eng = PinotEngine(spark)
     eng.register("cpc_tbl", df)
-    eng.register_cpc_column("cpc")
+    eng.apply_sketch_columns({"cpc": "cpc"})
     rows = eng.sql(
         "SELECT grp, DISTINCTCOUNTCPCSKETCH(cpc) AS est, "
         "DISTINCTCOUNTRAWCPCSKETCH(cpc) AS raw "

@@ -17,7 +17,7 @@ def test_ds_hll_column_native_merge(spark):
     blobs = df.groupBy("seg").agg(F.hll_sketch_agg("uid").alias("uid_hll"))
     eng = PinotEngine(spark)
     eng.register("ds_hll_t", blobs)
-    eng.register_ds_hll_column("uid_hll")
+    eng.apply_sketch_columns({"uid_hll": "datasketches_hll"})
     got = eng.sql(
         "SELECT DISTINCTCOUNTHLL(uid_hll) AS dc FROM ds_hll_t"
     ).collect()[0]["dc"]
@@ -75,7 +75,7 @@ def test_ds_hll_mixed_lgk_merges(spark):
     )
     eng = PinotEngine(spark)
     eng.register("mixed_lgk", a.unionByName(b))
-    eng.register_ds_hll_column("h")
+    eng.apply_sketch_columns({"h": "datasketches_hll"})
     got = eng.sql(
         "SELECT DISTINCTCOUNTHLL(h) AS dc FROM mixed_lgk"
     ).collect()[0]["dc"]

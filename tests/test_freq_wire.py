@@ -143,7 +143,7 @@ def test_sql_surface_over_migrated_columns(spark):
     )
     eng = PinotEngine(spark)
     eng.register("seg_fi", df)
-    eng.register_freq_wire_column("fi", "strings")
+    eng.apply_sketch_columns({"fi": "freq_strings"})
     hexblob = eng.sql(
         "SELECT FREQUENTSTRINGSSKETCH(fi) AS s FROM seg_fi"
     ).collect()[0]["s"]
@@ -152,8 +152,8 @@ def test_sql_surface_over_migrated_columns(spark):
     Mem = jvm.org.apache.datasketches.memory.Memory
     back = IS.getInstance(Mem.wrap(bytearray(bytes.fromhex(hexblob))), serde)
     assert back.getEstimate("x") == 13 and back.getEstimate("y") == 5
-    with pytest.raises(ValueError, match="longs' or 'strings"):
-        eng.register_freq_wire_column("fi", "floats")
+    with pytest.raises(ValueError, match="unknown sketch kind"):
+        eng.apply_sketch_columns({"fi": "freq_floats"})
 
 
 def test_all_null_group_returns_null(spark):
@@ -164,7 +164,7 @@ def test_all_null_group_returns_null(spark):
         "fi_holes",
         spark.createDataFrame([(1, None)], "g int, fi binary"),
     )
-    eng.register_freq_wire_column("fi", "strings")
+    eng.apply_sketch_columns({"fi": "freq_strings"})
     got = eng.sql(
         "SELECT FREQUENTSTRINGSSKETCH(fi) AS s FROM fi_holes LIMIT 1"
     ).collect()[0]["s"]

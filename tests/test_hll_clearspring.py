@@ -148,7 +148,7 @@ def test_spark_build_and_sql_surface(spark):
 
     eng = PinotEngine(spark)
     eng.register("hll_by_type", sk)
-    eng.register_clearspring_hll_column("hll")
+    eng.apply_sketch_columns({"hll": "hll_clearspring"})
     got = eng.sql(
         "SELECT DISTINCTCOUNTHLL(hll) AS u FROM hll_by_type"
     ).collect()[0]["u"]
@@ -190,7 +190,7 @@ def test_java_built_blobs_queryable_in_sql(spark):
     )
     eng = PinotEngine(spark)
     eng.register("seg_hll", df)
-    eng.register_clearspring_hll_column("hll")
+    eng.apply_sketch_columns({"hll": "hll_clearspring"})
     got = eng.sql("SELECT DISTINCTCOUNTHLL(hll) AS u FROM seg_hll").collect()[0]["u"]
     assert got == 130  # linear-counting regime: exact
 
@@ -220,7 +220,7 @@ def test_all_null_group_returns_null_not_error(spark):
             "g int, hll binary",
         ),
     )
-    eng.register_clearspring_hll_column("hll")
+    eng.apply_sketch_columns({"hll": "hll_clearspring"})
     got = {
         r["g"]: r["u"]
         for r in eng.sql(

@@ -173,7 +173,7 @@ def test_sql_surface_over_migrated_columns(spark):
     )
     eng = PinotEngine(spark)
     eng.register("seg_hllp", df)
-    eng.register_hllplus_column("hllp")
+    eng.apply_sketch_columns({"hllp": "hllplus"})
     got = eng.sql(
         "SELECT DISTINCTCOUNTHLLPLUS(hllp) AS u FROM seg_hllp"
     ).collect()[0]["u"]
@@ -222,7 +222,7 @@ def test_rawhllplus_and_smart_forms(spark):
             [(0, jblob(0, 100)), (1, jblob(50, 200))], "seg int, hp binary"
         )
     )
-    eng.register_hllplus_column("hp")
+    eng.apply_sketch_columns({"hp": "hllplus"})
     raw = eng.sql("SELECT DISTINCTCOUNTRAWHLLPLUS(hp) AS s FROM segs").collect()[0]["s"]
     assert _java_build(spark, bytes.fromhex(raw)).cardinality() == 200
     # SMART forms: exact distinct / deterministic percentile
@@ -269,9 +269,9 @@ def test_rawhllplus_jvm_rendering_and_guards(spark):
     # undeclared BYTES columns: loud error, not a sketch of blobs
     eng.register("blobs", spark.createDataFrame([(b"\x01\x02",)], "b binary"))
     import pytest as _pt
-    with _pt.raises(ValueError, match="register_hllplus_column"):
+    with _pt.raises(ValueError, match="sketchColumns"):
         eng.rewrite("SELECT DISTINCTCOUNTHLLPLUS(b) FROM blobs")
-    with _pt.raises(ValueError, match="register_hllplus_column"):
+    with _pt.raises(ValueError, match="sketchColumns"):
         eng.rewrite("SELECT DISTINCTCOUNTRAWHLLPLUS(b) FROM blobs")
 
 

@@ -478,7 +478,7 @@ def test_config_driven_sketch_columns(spark, tmp_path_factory):
     the table config wires their wire-format registrations at
     register_ingested time — DISTINCTCOUNTTHETASKETCH /
     DISTINCTCOUNTBITMAP answer from the right merge domain with NO
-    imperative register_* call; unknown kinds fail loudly."""
+    per-column call; unknown kinds fail loudly."""
     import numpy as np
 
     from apache_pinot_spark.functions import bitmap_wire as BW
@@ -540,6 +540,25 @@ def test_config_driven_sketch_columns(spark, tmp_path_factory):
 
     with _pt.raises(ValueError, match="unknown sketch kind"):
         eng.apply_sketch_columns({"x": "moments"})  # cpc became real in r8
+
+
+def test_unknown_sketch_kind_rejected_before_ingest_writes(spark, tmp_path):
+    """A table config with an unknown sketchColumns kind never reaches
+    the warehouse: every later register_ingested of it would raise."""
+    sch = PinotSchema.from_json(
+        {
+            "schemaName": "bad_kinds",
+            "dimensionFieldSpecs": [{"name": "seg", "dataType": "INT"}],
+            "metricFieldSpecs": [{"name": "sk", "dataType": "BYTES"}],
+        }
+    )
+    df = spark.createDataFrame([(1, b"\x01")], "seg int, sk binary")
+    cfg = B.TableConfig(table_name="bad_kinds", sketch_columns={"sk": "moments"})
+    with pytest.raises(ValueError, match="unknown sketch kind"):
+        B.ingest_batch(spark, sch, cfg, df, warehouse=str(tmp_path))
+    with pytest.raises(ValueError, match="unknown sketch kind"):
+        B.ingest_bucketed(spark, sch, cfg, df, "seg", 2, warehouse=str(tmp_path))
+    assert not (tmp_path / "bad_kinds").exists()
 
 
 def test_ingestion_transforms_and_filter(spark, tmp_path_factory):

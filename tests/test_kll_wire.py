@@ -121,7 +121,7 @@ def test_percentilekll_sql_over_migrated_bytes_columns(spark):
         rows.append((seg, bytes(x & 0xFF for x in sk.toByteArray())))
     eng = PinotEngine(spark)
     eng.register("seg_kll", spark.createDataFrame(rows, "seg int, lat binary"))
-    eng.register_kll_column("lat")
+    eng.apply_sketch_columns({"lat": "kll"})
     got = eng.sql(
         "SELECT PERCENTILEKLL(lat, 95) AS p95 FROM seg_kll"
     ).collect()[0]["p95"]
@@ -165,7 +165,7 @@ def test_all_null_or_empty_group_returns_null(spark):
         "kll_holes",
         spark.createDataFrame([(1, None), (1, empty)], "g int, lat binary"),
     )
-    eng.register_kll_column("lat")
+    eng.apply_sketch_columns({"lat": "kll"})
     got = eng.sql(
         "SELECT PERCENTILEKLL(lat, 50) AS p FROM kll_holes GROUP BY g LIMIT 1"
     ).collect()[0]["p"]

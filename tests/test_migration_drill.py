@@ -107,7 +107,8 @@ def test_every_kind_in_one_statement(drill):
     # all pandas-UDF-served kinds together in ONE statement; the
     # native-aggregate ds_hll kind runs in its own (Spark does not
     # allow grouped-agg pandas UDFs and native aggregates in one
-    # SELECT — documented on register_ds_hll_column)
+    # SELECT — noted on the datasketches_hll entry of
+    # sqlfront.SKETCH_KINDS)
     row = eng.sql(
         "SELECT DISTINCTCOUNTTHETASKETCH(u_theta) AS t, "
         "DISTINCTCOUNTTUPLESKETCH(u_tuple) AS tp, "

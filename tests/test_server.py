@@ -186,7 +186,7 @@ def test_sketch_columns_over_http(http_server, spark):
              {"u_theta": "moments"})  # cpc became a real kind in r8
         raise AssertionError("expected HTTPError")
     except urllib.error.HTTPError as e:
-        assert e.code == 500  # unknown sketch kind
+        assert e.code == 400  # unknown sketch kind: a client error
     try:
         _req(port, "POST", "/tables/http_theta_t/sketchColumns", {"nope": "theta"})
         raise AssertionError("expected HTTPError")

@@ -933,6 +933,92 @@ def test_distinctcountrawhll_merges_bytes_sketches(spark):
         eng.sql("SELECT DISTINCTCOUNTRAWHLL(l_partkey) FROM lineitem")
 
 
+# kind → (aggregate over a declared column, the wire UDF (module, name)
+# it must call, the RAW form an undeclared BYTES column is refused, or
+# None when the kind has no such form)
+_KIND_REWRITES = {
+    "tdigest": ("PERCENTILETDIGEST(c, 50)", ("tdigest", "UDF_NAME"), None),
+    "theta": (
+        "DISTINCTCOUNTTHETASKETCH(c)",
+        ("theta", "UNION_UDF"),
+        "DISTINCTCOUNTRAWTHETASKETCH",
+    ),
+    "kll": ("PERCENTILEKLL(c, 50)", ("kll_wire", "PCT_UDF"), None),
+    "hllplus": (
+        "DISTINCTCOUNTHLLPLUS(c)",
+        ("hllplus_wire", "MERGE_UDF"),
+        "DISTINCTCOUNTRAWHLLPLUS",
+    ),
+    "datasketches_hll": ("DISTINCTCOUNTHLL(c)", None, None),
+    "hll_clearspring": ("DISTINCTCOUNTHLL(c)", ("hll_clearspring", "MERGE_UDF"), None),
+    "cpc": (
+        "DISTINCTCOUNTCPCSKETCH(c)",
+        ("cpc_wire", "EST_UDF"),
+        "DISTINCTCOUNTRAWCPCSKETCH",
+    ),
+    "bitmap": (
+        "DISTINCTCOUNTBITMAP(c)",
+        ("bitmap_wire", "CARD_UDF"),
+        "DISTINCTCOUNTRAWBITMAP",
+    ),
+    "tuple": (
+        "DISTINCTCOUNTTUPLESKETCH(c)",
+        ("tuple_wire", "ESTIMATE_UDF"),
+        "DISTINCTCOUNTRAWINTEGERSUMTUPLESKETCH",
+    ),
+    "freq_longs": ("FREQUENTLONGSSKETCH(c)", ("freq_wire", "MERGE_LONGS_UDF"), None),
+    "freq_strings": (
+        "FREQUENTSTRINGSSKETCH(c)",
+        ("freq_wire", "MERGE_STRINGS_UDF"),
+        None,
+    ),
+}
+
+
+def test_kind_rewrites_cover_every_sketch_kind():
+    from apache_pinot_spark.sqlfront import SKETCH_KINDS
+
+    assert set(_KIND_REWRITES) == set(SKETCH_KINDS)
+
+
+@pytest.mark.parametrize("kind", sorted(_KIND_REWRITES))
+def test_declared_sketch_column_rewrites_to_its_wire_udf(spark, kind):
+    """Rewrite only: a BYTES column declared as ``kind`` through
+    apply_sketch_columns merges in that kind's wire domain; an undeclared
+    BYTES column does not, and its RAW form (where the kind has one) is
+    refused."""
+    import importlib
+
+    agg, udf, raw_fn = _KIND_REWRITES[kind]
+    if udf is None:
+        name = "hll_union_agg"  # native Spark, no Python UDF
+    else:
+        module = importlib.import_module(f"apache_pinot_spark.functions.{udf[0]}")
+        name = getattr(module, udf[1])
+    eng = PinotEngine(spark)
+    eng.register("kinds", spark.createDataFrame([], "c binary, u binary"))
+    eng.apply_sketch_columns({"c": kind})
+    assert name in eng.rewrite(f"SELECT {agg} FROM kinds").sql
+    undeclared = f"SELECT {agg.replace('(c', '(u')} FROM kinds"
+    if kind in ("tdigest", "hllplus"):  # an undeclared BYTES column is refused
+        with pytest.raises(ValueError):
+            eng.rewrite(undeclared)
+    else:
+        assert name not in eng.rewrite(undeclared).sql
+    if raw_fn is not None:
+        with pytest.raises(ValueError, match="sketchColumns"):
+            eng.rewrite(f"SELECT {raw_fn}(u) FROM kinds")
+
+
+def test_sketch_column_declaration_is_all_or_nothing(spark):
+    eng = PinotEngine(spark)
+    eng.register("aon", spark.createDataFrame([], "a binary, b binary"))
+    with pytest.raises(ValueError, match="unknown sketch kind"):
+        eng.apply_sketch_columns({"a": "theta", "b": "moments"})
+    sql = eng.rewrite("SELECT DISTINCTCOUNTTHETASKETCH(a) FROM aon").sql
+    assert "COUNT(DISTINCT a)" in sql
+
+
 def test_funnel_complete_count_sql(spark):
     from apache_pinot_spark.sqlfront import PinotEngine
     from tests.conftest import SF_SMOKE

@@ -196,7 +196,7 @@ def test_percentiletdigest_sql_over_bytes_column(spark):
     )
     eng = PinotEngine(spark)
     eng.register("price_segments", segments)
-    eng.register_tdigest_column("price_digest")
+    eng.apply_sketch_columns({"price_digest": "tdigest"})
     row = eng.sql(
         "SELECT PERCENTILETDIGEST(price_digest, 50) AS p50, "
         "PERCENTILETDIGEST(price_digest, 95) AS p95 "

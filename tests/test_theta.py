@@ -214,7 +214,7 @@ def test_dialect_theta_over_bytes_column(spark):
     sk = TH.theta_sketch(ev, ["event_type"], "user_id", out_col="theta")
     eng = PinotEngine(spark)
     eng.register("theta_by_type", sk)
-    eng.register_theta_column("theta")
+    eng.apply_sketch_columns({"theta": "theta"})
     got = eng.sql(
         "SELECT DISTINCTCOUNTTHETASKETCH(theta) AS u FROM theta_by_type"
     ).collect()[0]["u"]
@@ -274,7 +274,7 @@ def test_dialect_theta_over_java_built_wire_blobs(spark):
     rows = [(i, java_blob(s)) for i, s in enumerate(segs)]
     eng = PinotEngine(spark)
     eng.register("seg_sketches", spark.createDataFrame(rows, "seg int, theta binary"))
-    eng.register_theta_column("theta")
+    eng.apply_sketch_columns({"theta": "theta"})
     got = eng.sql(
         "SELECT DISTINCTCOUNTTHETASKETCH(theta) AS u FROM seg_sketches"
     ).collect()[0]["u"]
@@ -386,7 +386,7 @@ def test_in_sql_set_expression_form(spark):
     # BYTES sketch column path: per-type sketches, filter on a dim
     sk = TH.theta_sketch(ev, ["event_type"], "user_id", k=4096, out_col="theta")
     eng.register("theta_t", sk)
-    eng.register_theta_column("theta")
+    eng.apply_sketch_columns({"theta": "theta"})
     got3 = eng.sql(
         "SELECT DISTINCTCOUNTTHETASKETCH(theta, "
         "'event_type = ''view''', 'event_type = ''purchase''', "

@@ -212,7 +212,7 @@ def test_tuple_sql_surface(spark):
     )
     eng = PinotEngine(spark)
     eng.register("tuple_t", df)
-    eng.register_tuple_column("user_engagement_sketch")
+    eng.apply_sketch_columns({"user_engagement_sketch": "tuple"})
     row = eng.sql(
         "SELECT DISTINCTCOUNTTUPLESKETCH(user_engagement_sketch) AS dc, "
         "SUMVALUESINTEGERSUMTUPLESKETCH(user_engagement_sketch) AS sv, "

@@ -181,16 +181,15 @@ class PinotHttpServer:
                                 400,
                                 {"error": f"columns not in {tbl!r}: {missing}"},
                             )
-                        from apache_pinot_spark.sqlfront import check_sketch_columns
-
-                        try:
-                            check_sketch_columns(mapping)
-                        except ValueError as e:
-                            return self._reply(400, {"error": str(e)})
                         # (registration is engine-wide by column name,
                         # like the dialect's other column declarations —
-                        # the table scoping here validates the request)
-                        server.engine.apply_sketch_columns(mapping)
+                        # the table scoping here validates the request);
+                        # an unknown kind or a column that is not BYTES
+                        # in this table is the client's error
+                        try:
+                            server.engine.apply_sketch_columns(mapping, tdf.schema)
+                        except ValueError as e:
+                            return self._reply(400, {"error": str(e)})
                         return self._reply(
                             200, {"status": f"{len(mapping)} sketch columns wired"}
                         )

@@ -96,6 +96,33 @@ def _default_driver_mem() -> str:
 # session built elsewhere and handed to `configure()` keeps Spark's 100.
 CODEGEN_CACHE_ENTRIES = 2000
 
+# HotSpot's C2 (tier-4) thresholds at 10x their JDK 17 defaults
+# (5,000 / 600 / 15,000 / 40,000) for all code but Spark's generated
+# classes; a per-method CompileThresholdScaling of 0.1 puts those back at
+# the defaults (and lets C1 take them about 10x sooner). At the defaults
+# C2 compiled library code that never repaid it: in one 14 s
+# segment_lifecycle window on a 4-core host, C2 compiler threads used
+# 15.6 s of CPU against 10.3 s on executor task threads, and generated
+# classes were about 5% of the bytecode C2 compiled. A generated scan or
+# aggregate loop runs once per partition, so it reaches C2 only through
+# the loop (OSR) threshold: with that raised for generated code too, the
+# 50-query bench (sf0.1, local[4]) ran 8-12% slower. With these values,
+# 10 alternating perfbench pairs (same host) cut segment_lifecycle's
+# cpu_s_per_op 7.43 -> 6.02 s, each run below its default-JIT partner,
+# with op_p50_ms flat (2652 -> 2638 ms); the 50-query bench read a
+# median best_total of 81.7 s against 100.7 s at the default JIT (3 and 5
+# interleaved reads).
+# C1 only (-XX:TieredStopAtLevel=1) made the 50-query bench 1.9x slower in
+# a one-run probe. A JVM option, so a session built elsewhere and handed
+# to `configure()` keeps the JVM's default JIT.
+JIT_OPTIONS = (
+    "-XX:Tier4InvocationThreshold=50000 -XX:Tier4MinInvocationThreshold=6000"
+    " -XX:Tier4CompileThreshold=150000 -XX:Tier4BackEdgeThreshold=400000"
+    " -XX:CompileCommand=quiet"
+    " -XX:CompileCommand=CompileThresholdScaling,"
+    "org/apache/spark/sql/catalyst/expressions/GeneratedClass*.*,0.1"
+)
+
 # Static confs — only settable at session build time.
 _DRIVER_MEM = os.environ.get("SPARK_GRAFT_DRIVER_MEM", _default_driver_mem())
 
@@ -117,7 +144,7 @@ STATIC_CONFS = {
     # one pass of the declared queries), and the default ~21 MB high-water
     # mark forces periodic stop-the-world collections mid-query.
     "spark.driver.extraJavaOptions": (
-        f"-Xms{_DRIVER_MEM} -XX:+AlwaysPreTouch -XX:MetaspaceSize=256m"
+        f"-Xms{_DRIVER_MEM} -XX:+AlwaysPreTouch -XX:MetaspaceSize=256m {JIT_OPTIONS}"
     ),
 }
 

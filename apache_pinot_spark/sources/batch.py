@@ -101,7 +101,8 @@ class TableConfig:
     # names serialized sketch metric columns) → wire kind, one of
     # sqlfront.SKETCH_KINDS: theta | tuple | bitmap | tdigest | kll |
     # hllplus | hll_clearspring | cpc | freq_longs | freq_strings |
-    # datasketches_hll. Ingest rejects an unknown kind before it writes;
+    # datasketches_hll. Ingest rejects an unknown kind, or a mapped column
+    # that is not BYTES after type application, before it writes;
     # PinotEngine.register_ingested declares each column through
     # apply_sketch_columns, so the right merge domain serves
     # DISTINCTCOUNT*/PERCENTILE*/FREQUENT* automatically.
@@ -293,7 +294,6 @@ def ingest_batch(
     (segment) in one task for big-file locality at scale."""
     from apache_pinot_spark.sqlfront import check_sketch_columns
 
-    check_sketch_columns(config.sketch_columns)  # before anything is written
     if isinstance(source, DataFrame):
         raw = source
     else:
@@ -322,6 +322,7 @@ def ingest_batch(
 
     raw = apply_ingestion_transforms(raw, config)
     df = schema.apply_types(raw)
+    check_sketch_columns(config.sketch_columns, df.schema)  # before anything is written
     df = schema.apply_sentinels(df)
     obs = None
     if config.time_column and config.validate_time_range:
@@ -463,8 +464,8 @@ def ingest_bucketed(
     ``register_bucketed``. Returns the table path."""
     from apache_pinot_spark.sqlfront import check_sketch_columns
 
-    check_sketch_columns(config.sketch_columns)  # before anything is written
     df = schema.apply_types(source)
+    check_sketch_columns(config.sketch_columns, df.schema)  # before anything is written
     df = schema.apply_sentinels(df)
     if config.time_column and config.validate_time_range:
         validate_time_range(df, schema, config.time_column)

@@ -449,9 +449,10 @@ SKETCH_KINDS: dict[str, tuple[str, str] | None] = {
 }
 
 
-def check_sketch_columns(mapping: dict[str, str]) -> dict[str, str]:
-    """Column → lower-cased kind, once every kind is in SKETCH_KINDS;
-    otherwise ValueError naming the unknown ones."""
+def check_sketch_columns(mapping: dict[str, str], *schemas: T.StructType) -> dict[str, str]:
+    """Column → lower-cased kind, once every kind is in SKETCH_KINDS and
+    every mapped column that one of ``schemas`` holds is BYTES;
+    otherwise ValueError naming the offending ones."""
     kinds = {col: str(kind).lower() for col, kind in mapping.items()}
     unknown = {c: mapping[c] for c, k in kinds.items() if k not in SKETCH_KINDS}
     if unknown:
@@ -459,6 +460,14 @@ def check_sketch_columns(mapping: dict[str, str]) -> dict[str, str]:
             f"sketchColumns: unknown sketch kind in {unknown}; "
             f"expected one of {sorted(SKETCH_KINDS)}"
         )
+    not_bytes = {
+        f.name: f.dataType.simpleString()
+        for schema in schemas
+        for f in schema.fields
+        if f.name in kinds and not isinstance(f.dataType, T.BinaryType)
+    }
+    if not_bytes:
+        raise ValueError(f"sketchColumns: a sketch column must be BYTES, got {not_bytes}")
     return kinds
 
 
@@ -2646,15 +2655,18 @@ class PinotEngine:
             )
         for c, n in (meta["config"].get("segmentPartitionMap") or {}).items():
             self._segment_partitions[c] = int(n)
-        self.apply_sketch_columns(meta["config"].get("sketchColumns") or {})
+        self.apply_sketch_columns(meta["config"].get("sketchColumns") or {}, df.schema)
 
-    def apply_sketch_columns(self, mapping: dict[str, str]) -> None:
+    def apply_sketch_columns(self, mapping: dict[str, str], *schemas: T.StructType) -> None:
         """Declare BYTES sketch-state columns, column → SKETCH_KINDS kind
         (TableConfig.sketch_columns / the table config's sketchColumns
         map), so the matching aggregate functions merge in the right
-        wire domain (schema.md:48). All or nothing: an unknown kind
-        raises before any column is declared."""
-        kinds = check_sketch_columns(mapping)
+        wire domain (schema.md:48). ``schemas`` are those of the table
+        being declared (``register_ingested`` and the HTTP route pass
+        it). All or nothing: an unknown kind, or a mapped column that one
+        of ``schemas`` holds as anything but BYTES, raises before any
+        column is declared."""
+        kinds = check_sketch_columns(mapping, *schemas)
         for family in dict.fromkeys(SKETCH_KINDS[k] for k in kinds.values()):
             if family is not None:
                 module, registrar = family

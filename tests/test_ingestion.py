@@ -171,10 +171,11 @@ def test_reload_with_layout(ingested, schema, tmp_path_factory):
         text_index_columns=[],
         timestamp_index_granularities={"timestampInEpoch": ["DAY", "MONTH"]},
     )
+    rows_before = spark.read.parquet(path).count()
     new_path = B.reload_with_layout(spark, schema, path, new_cfg, warehouse=wh)
     df = spark.read.parquet(new_path)
     assert "$timestampInEpoch$MONTH" in df.columns
-    assert df.count() == 18  # purge survived the reload
+    assert df.count() == rows_before  # every row survives the reload
 
 
 def test_catalog_crud(spark, tmp_path_factory, schema):
@@ -559,6 +560,91 @@ def test_unknown_sketch_kind_rejected_before_ingest_writes(spark, tmp_path):
     with pytest.raises(ValueError, match="unknown sketch kind"):
         B.ingest_bucketed(spark, sch, cfg, df, "seg", 2, warehouse=str(tmp_path))
     assert not (tmp_path / "bad_kinds").exists()
+
+
+def test_non_bytes_sketch_column_rejected_before_ingest_writes(spark, tmp_path):
+    """A sketch kind on a column that is not BYTES after type application
+    never reaches the warehouse: its aggregates would fail inside a
+    Python worker."""
+    sch = PinotSchema.from_json(
+        {
+            "schemaName": "int_sketch",
+            "dimensionFieldSpecs": [{"name": "seg", "dataType": "INT"}],
+            "metricFieldSpecs": [{"name": "sk", "dataType": "BYTES"}],
+        }
+    )
+    df = spark.createDataFrame([(1, b"\x01")], "seg int, sk binary")
+    cfg = B.TableConfig(table_name="int_sketch", sketch_columns={"seg": "theta"})
+    with pytest.raises(ValueError, match="must be BYTES"):
+        B.ingest_batch(spark, sch, cfg, df, warehouse=str(tmp_path))
+    with pytest.raises(ValueError, match="must be BYTES"):
+        B.ingest_bucketed(spark, sch, cfg, df, "seg", 2, warehouse=str(tmp_path))
+    assert not (tmp_path / "int_sketch").exists()
+
+
+def test_register_ingested_rejects_non_bytes_sketch_column(spark, tmp_path):
+    """A table whose stored config maps a non-BYTES column to a sketch
+    kind (written before ingest checked the type) fails at
+    register_ingested, not later inside a Python worker."""
+    from apache_pinot_spark.sqlfront import PinotEngine
+
+    sch = PinotSchema.from_json(
+        {
+            "schemaName": "int_sketch_meta",
+            "dimensionFieldSpecs": [{"name": "seg", "dataType": "INT"}],
+        }
+    )
+    cfg = B.TableConfig(table_name="int_sketch_meta")
+    path = B.ingest_batch(
+        spark, sch, cfg, spark.createDataFrame([(1,)], "seg int"), warehouse=str(tmp_path)
+    )
+    meta_file = os.path.join(path, "_pinot_table.json")
+    with open(meta_file) as fh:
+        meta = json.load(fh)
+    meta["config"]["sketchColumns"] = {"seg": "theta"}
+    with open(meta_file, "w") as fh:
+        json.dump(meta, fh)
+    eng = PinotEngine(spark)
+    with pytest.raises(ValueError, match="must be BYTES"):
+        eng.register_ingested("int_sketch_meta", path)
+    sql = eng.rewrite("SELECT DISTINCTCOUNTTHETASKETCH(seg) FROM int_sketch_meta").sql
+    assert "COUNT(DISTINCT seg)" in sql
+
+
+@pytest.mark.parametrize("other_first", [True, False])
+def test_sketch_column_type_check_reads_only_the_declaring_table(
+    spark, tmp_path, other_first
+):
+    """register_ingested checks its sketchColumns against its own table:
+    another table holding a same-named column as STRING neither blocks the
+    declaration nor depends on which of the two is registered first."""
+    from apache_pinot_spark.functions.theta import UNION_UDF
+    from apache_pinot_spark.sqlfront import PinotEngine
+
+    sch = PinotSchema.from_json(
+        {
+            "schemaName": "bytes_payload",
+            "dimensionFieldSpecs": [{"name": "seg", "dataType": "INT"}],
+            "metricFieldSpecs": [{"name": "payload", "dataType": "BYTES"}],
+        }
+    )
+    cfg = B.TableConfig(table_name="bytes_payload", sketch_columns={"payload": "theta"})
+    path = B.ingest_batch(
+        spark,
+        sch,
+        cfg,
+        spark.createDataFrame([(1, b"\x01")], "seg int, payload binary"),
+        warehouse=str(tmp_path),
+    )
+    eng = PinotEngine(spark)
+    other = spark.createDataFrame([("a",)], "payload string")
+    if other_first:
+        eng.register("string_payload", other)
+    eng.register_ingested("bytes_payload", path)
+    if not other_first:
+        eng.register("string_payload", other)
+    sql = eng.rewrite("SELECT DISTINCTCOUNTTHETASKETCH(payload) FROM bytes_payload").sql
+    assert UNION_UDF in sql
 
 
 def test_ingestion_transforms_and_filter(spark, tmp_path_factory):

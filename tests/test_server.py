@@ -197,3 +197,22 @@ def test_sketch_columns_over_http(http_server, spark):
         raise AssertionError("expected HTTPError")
     except urllib.error.HTTPError as e:
         assert e.code == 404  # unknown table
+
+
+def test_sketch_columns_over_http_refuse_non_bytes(http_server, spark):
+    """A sketch kind on a column that is not BYTES is the client's error:
+    400, and the column stays undeclared."""
+    port = http_server.port
+    http_server.engine.register(
+        "http_int_t", spark.createDataFrame([(1, 2)], "g int, x int")
+    )
+    try:
+        _req(port, "POST", "/tables/http_int_t/sketchColumns", {"x": "theta"})
+        raise AssertionError("expected HTTPError")
+    except urllib.error.HTTPError as e:
+        assert e.code == 400
+        assert "must be BYTES" in json.loads(e.read())["error"]
+    sql = http_server.engine.rewrite(
+        "SELECT DISTINCTCOUNTTHETASKETCH(x) FROM http_int_t"
+    ).sql
+    assert "COUNT(DISTINCT x)" in sql

@@ -1019,6 +1019,20 @@ def test_sketch_column_declaration_is_all_or_nothing(spark):
     assert "COUNT(DISTINCT a)" in sql
 
 
+def test_sketch_column_must_be_bytes(spark):
+    """A sketch kind on a registered non-BYTES column is refused at
+    declaration (it would fail later inside a Python worker), and the
+    refusal declares nothing."""
+    eng = PinotEngine(spark)
+    df = spark.createDataFrame([], "a binary, x int")
+    eng.register("nb", df)
+    with pytest.raises(ValueError, match="must be BYTES"):
+        eng.apply_sketch_columns({"a": "theta", "x": "theta"}, df.schema)
+    for col in ("a", "x"):
+        sql = eng.rewrite(f"SELECT DISTINCTCOUNTTHETASKETCH({col}) FROM nb").sql
+        assert f"COUNT(DISTINCT {col})" in sql
+
+
 def test_funnel_complete_count_sql(spark):
     from apache_pinot_spark.sqlfront import PinotEngine
     from tests.conftest import SF_SMOKE

@@ -442,7 +442,7 @@ BUILD_UDF = "pinot_bitmap_build"
 def register_bitmap_udfs(spark) -> None:
     """Grouped-agg pandas UDFs over serialized-bitmap BYTES columns.
 
-    Like the theta family these are two-phase-safe: UNION returns a
+    Like the other sketch families these are two-phase-safe: UNION returns a
     wire blob, so partial unions re-merge losslessly; CARD is the
     terminal count.  State per group is the union bitset — bounded by
     the value universe, not the row count.

@@ -26,10 +26,10 @@ Estimates: est(item) = count + offset is an UPPER bound; count itself
 is the lower bound; true frequency is inside [count, count+offset].
 
 Wire layout is engine-local (magic + m + offset + n + per-item
-varlen-bytes + int64 count); DataSketches blob compat is out for the
-same reason as the theta module (hash/serde pipeline), documented.
+varlen-bytes + int64 count); DataSketches blob compat is out (it needs
+the library's hash and serde pipeline), documented.
 
-Scale shape (100 TB): the tdigest/theta two-phase contract — per-batch
+Scale shape (100 TB): the tdigest two-phase contract — per-batch
 Misra-Gries partials from mapInPandas (map-side combine, ≤m pairs per
 group per batch), merged per group with applyInPandas. Only summaries
 shuffle; per-group state is m pairs regardless of item cardinality.
@@ -175,7 +175,7 @@ def register_freq_udfs(spark, m: int = DEFAULT_MAP_SIZE) -> None:
 def freq_sketch(df, keys: list[str], value_col: str,
                 m: int = DEFAULT_MAP_SIZE, out_col: str = "freq"):
     """Per-group frequent-items BYTES column (two-phase partial/final,
-    same contract as theta_sketch / tdigest_sketch)."""
+    same contract as tdigest_sketch)."""
     from pyspark.sql.types import BinaryType, StructField, StructType
 
     schema = StructType(

@@ -35,7 +35,7 @@ BYTE-IDENTICALLY to sketches built by the library over the same
 values, foreign blobs load and merge, and cardinalities agree exactly
 (tests/test_hll_clearspring.py).
 
-Scale shape: same two-phase contract as theta/tdigest — vectorized
+Scale shape: same two-phase contract as tdigest — vectorized
 numpy hashing per Arrow batch (values grouped by byte length; no
 per-row Python), constant m-byte state per group, register-max merge.
 
@@ -169,7 +169,7 @@ def hash_bytes_batch(values: list[bytes], seed: int = -1) -> np.ndarray:
     """Vectorized murmur2_32 for variable-length byte strings — the
     shared group-by-length driver (theta_wire.batch_hash_by_length) with
     the murmur2 matrix kernel. hash(empty) IS defined in this family
-    (seed ^ 0 avalanche), unlike the theta pipeline's 0 sentinel."""
+    (seed ^ 0 avalanche), unlike the theta update-hash's 0 sentinel."""
     from apache_pinot_spark.functions.theta_wire import batch_hash_by_length
 
     return batch_hash_by_length(
@@ -342,7 +342,7 @@ def clearspring_hll_sketch(df, keys: list[str], value_col: str,
                            log2m: int = DEFAULT_LOG2M,
                            out_col: str = "hll"):
     """Per-group clearspring-wire HLL BYTES column (two-phase map-side
-    partials → register-max merge; same contract as theta_sketch)."""
+    partials → register-max merge; same contract as tdigest_sketch)."""
     from pyspark.sql.types import BinaryType, StructField, StructType
 
     schema = StructType(

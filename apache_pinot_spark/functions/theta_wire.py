@@ -1,12 +1,8 @@
-"""Apache DataSketches theta-sketch WIRE interop: MurmurHash3-x64-128
-(seed 9001) + the compact-theta serialized layout.
-
-This closes the documented round-5 divergence (functions/theta.py used
-engine-local SipHash + a private blob layout): a migrating Pinot user's
-serialized theta sketch columns (reference
-configuration-reference/schema.md:48 names BYTES sketch columns built by
-org.apache.datasketches) now load, merge, and estimate here, and blobs
-built HERE heapify in any DataSketches implementation.
+"""DataSketches hashing: MurmurHash3-x64-128 (seed 9001) and the theta
+update-hash domain, shared by the sketch kinds whose wire formats hash
+values the way datasketches-java does (CPC, tuple, ID_SET and the HLL
+kinds). Theta sketches themselves are built, merged and estimated by
+Spark's native theta_* functions (sqlfront).
 
 Everything below derives from public knowledge:
 
@@ -14,37 +10,15 @@ Everything below derives from public knowledge:
   (smhasher MurmurHash3.cpp), reimplemented twice: a scalar pure-Python
   form (`murmur3_x64_128`, the auditable spec transcription) and a
   numpy-vectorized batch form (`_murmur_h1_matrix`) used on the Spark
-  hot path. Tests cross-check the two on random inputs and pin golden
-  values produced by the REAL datasketches-java MurmurHash3 (the jar
-  ships on Spark's classpath for hll_sketch_agg — tests heapify our
-  blobs in it round-trip when available, and hard-pin recorded goldens
-  so the contract holds even where the jar is absent).
-* Compact theta serialized layout — the published DataSketches format
-  (datasketches-java PreambleUtil / datasketches-cpp
-  compact_theta_sketch serialize), little-endian:
-
-      byte 0      preamble longs (1 empty/single-item, 2 exact, 3 est)
-      byte 1      serial version = 3
-      byte 2      family id = 3 (COMPACT)
-      bytes 3-4   unused (0)
-      byte 5      flags: 1=BIG_ENDIAN 2=READ_ONLY 4=EMPTY 8=COMPACT
-                  16=ORDERED 32=SINGLE_ITEM
-      bytes 6-7   seed hash (uint16 LE; 0 for the canonical empty blob)
-      [preamble long 1]  retained count (uint32 LE) + p (float32 LE)
-      [preamble long 2]  theta long (uint64 LE, estimation mode only)
-      then        retained hashes, uint64 LE, ascending (ORDERED)
-
-  Hash domain: murmur3_x64_128(value_bytes, seed).h1 >> 1, zero
-  rejected, values kept strictly below theta (initially LONG_MAX =
-  2^63-1). Integers hash as their 8-byte little-endian two's-complement
-  long; strings as UTF-8 bytes; doubles as Java Double.doubleToLongBits
-  with -0.0 canonicalized to 0.0 — the datasketches-java update()
+  hot path. Tests cross-check the two on random inputs.
+* Theta update-hash: murmur3_x64_128(value_bytes, seed).h1 >> 1, zero
+  rejected. Integers hash as their 8-byte little-endian two's-complement
+  long; strings as UTF-8 bytes — the datasketches-java update()
   overload contracts.
 
 Seed is Pinot's/DataSketches' DEFAULT_UPDATE_SEED = 9001; the 16-bit
-seed hash in every non-empty blob is murmur3(seed as 8-byte LE, 0).h1 &
-0xFFFF and is VALIDATED on read (mismatched-seed sketches must not
-silently merge — their hash domains differ).
+seed hash a sketch blob carries is murmur3(seed as 8-byte LE, 0).h1 &
+0xFFFF (`compute_seed_hash`).
 """
 
 from __future__ import annotations
@@ -54,16 +28,6 @@ import struct
 import numpy as np
 
 DEFAULT_SEED = 9001  # DataSketches DEFAULT_UPDATE_SEED (Pinot uses it too)
-LONG_MAX = (1 << 63) - 1  # initial theta
-
-_SER_VER = 3
-_FAMILY_COMPACT = 3
-_F_BIG_ENDIAN = 1
-_F_READ_ONLY = 2
-_F_EMPTY = 4
-_F_COMPACT = 8
-_F_ORDERED = 16
-_F_SINGLE_ITEM = 32
 
 _C1 = 0x87C37B91114253D5
 _C2 = 0x4CF5AD432745937F
@@ -266,107 +230,3 @@ def hash64_bytes(values: list[bytes], seed: int = DEFAULT_SEED) -> np.ndarray:
         lambda mat: _murmur_h1_matrix(mat, seed) >> np.uint64(1),
         empty_value=0,
     )
-
-
-def java_double_bits(values: np.ndarray) -> np.ndarray:
-    """Double.doubleToLongBits with the datasketches canonicalizations:
-    -0.0 → +0.0 and every NaN → the canonical quiet NaN."""
-    v = np.asarray(values, dtype=np.float64).copy()
-    v[v == 0.0] = 0.0  # writes +0.0 over -0.0 (comparison treats them equal)
-    bits = v.view(np.int64)
-    bits[np.isnan(v)] = 0x7FF8000000000000
-    return bits
-
-
-# --------------------------------------------------------------------------
-# Compact-theta wire serde
-# --------------------------------------------------------------------------
-_EMPTY_BLOB = bytes(
-    [1, _SER_VER, _FAMILY_COMPACT, 0, 0,
-     _F_READ_ONLY | _F_EMPTY | _F_COMPACT | _F_ORDERED, 0, 0]
-)  # the canonical seed-agnostic empty sketch (seed hash 0 by convention)
-
-
-def serialize_compact(entries: np.ndarray, theta_long: int,
-                      seed: int = DEFAULT_SEED) -> bytes:
-    """Entries must be sorted ascending uint64 (< theta_long); emits the
-    same byte shapes datasketches-java writes: canonical empty blob,
-    16-byte single-item blob, exact (preLongs=2), estimation
-    (preLongs=3)."""
-    n = entries.size
-    if n == 0 and theta_long >= LONG_MAX:
-        return _EMPTY_BLOB
-    sh = compute_seed_hash(seed)
-    est_mode = theta_long < LONG_MAX
-    if n == 1 and not est_mode:
-        head = struct.pack(
-            "<BBBBBBH", 1, _SER_VER, _FAMILY_COMPACT, 0, 0,
-            _F_READ_ONLY | _F_COMPACT | _F_ORDERED | _F_SINGLE_ITEM, sh,
-        )
-        return head + entries.astype("<u8").tobytes()
-    pre_longs = 3 if est_mode else 2
-    head = struct.pack(
-        "<BBBBBBH", pre_longs, _SER_VER, _FAMILY_COMPACT, 0, 0,
-        _F_READ_ONLY | _F_COMPACT | _F_ORDERED, sh,
-    )
-    head += struct.pack("<If", n, 1.0)  # retained count + sampling p
-    if est_mode:
-        head += struct.pack("<Q", theta_long)
-    return head + entries.astype("<u8").tobytes()
-
-
-def deserialize_compact(blob: bytes, seed: int = DEFAULT_SEED):
-    """Parse a compact-theta blob → (sorted uint64 entries, theta_long).
-    Accepts all four writer shapes from any DataSketches implementation;
-    validates family, serial version, endianness, seed hash, and bounds
-    (hostile-blob stance of functions/theta.deserialize)."""
-    if len(blob) < 8:
-        raise ValueError("theta blob too short for a preamble")
-    pre_longs_byte, ser_ver, family, _u3, _u4, flags = struct.unpack_from(
-        "<BBBBBB", blob, 0
-    )
-    pre_longs = pre_longs_byte & 0x3F  # high 2 bits: resize factor (update forms)
-    seed_hash = struct.unpack_from("<H", blob, 6)[0]
-    if family != _FAMILY_COMPACT:
-        raise ValueError(
-            f"not a compact theta sketch (family {family}; only the compact "
-            "wire form is supported — compact() before exporting)"
-        )
-    if ser_ver != _SER_VER:
-        raise ValueError(f"unsupported theta serial version {ser_ver} (need 3)")
-    if flags & _F_BIG_ENDIAN:
-        raise ValueError("big-endian theta blobs are not supported")
-    if flags & _F_EMPTY:
-        return np.empty(0, dtype=np.uint64), LONG_MAX
-    if seed_hash != compute_seed_hash(seed):
-        raise ValueError(
-            f"theta seed hash mismatch (blob {seed_hash}, expected seed {seed}) "
-            "— sketches from a different seed must not merge"
-        )
-    if pre_longs == 1:  # single item
-        if len(blob) < 16:
-            raise ValueError("single-item theta blob truncated")
-        entry = np.frombuffer(blob, dtype="<u8", count=1, offset=8).astype(np.uint64)
-        if entry[0] == 0 or int(entry[0]) >= LONG_MAX:
-            raise ValueError("single-item theta blob: hash out of range")
-        return entry, LONG_MAX
-    if pre_longs not in (2, 3):
-        raise ValueError(f"unsupported theta preamble length {pre_longs}")
-    if len(blob) < 8 * pre_longs:
-        raise ValueError("theta blob truncated in preamble")
-    n = struct.unpack_from("<I", blob, 8)[0]
-    theta_long = LONG_MAX
-    if pre_longs == 3:
-        theta_long = struct.unpack_from("<Q", blob, 16)[0]
-        if not 0 < theta_long <= LONG_MAX:
-            raise ValueError(f"theta blob invalid: theta long {theta_long}")
-    offset = 8 * pre_longs
-    need = offset + 8 * n
-    if len(blob) < need:
-        raise ValueError(f"theta blob truncated: need {need}, got {len(blob)}")
-    entries = np.frombuffer(blob, dtype="<u8", count=n, offset=offset).astype(np.uint64)
-    if not (flags & _F_ORDERED):
-        entries = np.sort(entries)
-    if entries.size and int(entries[-1]) >= theta_long:
-        raise ValueError("theta blob invalid: entry >= theta")
-    return entries, theta_long

@@ -168,14 +168,6 @@ class IntegerTupleSketch:
                                   min(self.k, other.k), self.mode)._trim()
 
 
-def union_all(sketches: Iterable[IntegerTupleSketch],
-              k: int = DEFAULT_NOMINAL) -> IntegerTupleSketch:
-    out: IntegerTupleSketch | None = None
-    for s in sketches:
-        out = s if out is None else out.union(s)
-    return out if out is not None else IntegerTupleSketch.empty(k)
-
-
 # --------------------------------------------------------------------------
 # Wire serde
 # --------------------------------------------------------------------------

@@ -424,16 +424,19 @@ class RewriteResult:
 SKETCH_KINDS: dict[str, tuple[str, str] | None] = {
     # tdunning MergingDigest VERBOSE, Pinot's object serde (tdigest.py)
     "tdigest": None,
-    # DataSketches compact theta (theta.py)
+    # DataSketches compact theta, serial 3 or 4: merged JVM-side by
+    # Spark's theta_union_agg (_theta_blob_guard checks each blob first)
     "theta": None,
     # DataSketches KllDoublesSketch (kll_wire.py)
     "kll": None,
     # stream-lib HyperLogLogPlus.getBytes() (hllplus_wire.py)
     "hllplus": None,
     # DataSketches HLL family 7, what Spark's hll_sketch_agg writes:
-    # merged JVM-side by hll_union_agg. A native aggregate cannot share
-    # a SELECT with grouped-agg pandas UDFs, so a query over this kind
-    # cannot also aggregate another sketch kind.
+    # merged JVM-side by hll_union_agg.
+    # theta and datasketches_hll are native aggregates: they share a
+    # SELECT with each other and with Spark's own aggregates, but Spark
+    # refuses native aggregates beside grouped-agg pandas UDFs, so
+    # neither shares one with the other kinds below.
     "datasketches_hll": None,
     # stream-lib HyperLogLog.getBytes(), Pinot's DISTINCTCOUNTHLL wire
     "hll_clearspring": ("functions.hll_clearspring", "register_clearspring_udfs"),
@@ -471,6 +474,137 @@ def check_sketch_columns(mapping: dict[str, str], *schemas: T.StructType) -> dic
     return kinds
 
 
+# --------------------------------------------------------------------------
+# Theta sketches (DISTINCTCOUNTTHETASKETCH and its RAW form): Spark's
+# native DataSketches functions, JVM-side end to end
+# --------------------------------------------------------------------------
+
+_THETA_DEFAULT_LG_K = 12  # nominal entries 4096, the library's default
+_THETA_PARAMS_RE = re.compile(
+    r"(?i)\s*(nominalEntries|samplingProbability|accuracy)\s*="
+)
+# Spark type → the cast that makes a raw column a theta_sketch_agg input
+# (which takes INT, BIGINT, FLOAT, DOUBLE, STRING and BINARY only); each
+# is injective, so distinct counts do not change
+_THETA_INPUT_CASTS = {
+    "timestamp": "unix_micros({})",
+    "date": "unix_date({})",
+    "smallint": "CAST({} AS INT)",
+    "tinyint": "CAST({} AS INT)",
+    "boolean": "CAST({} AS INT)",
+    "decimal": "CAST({} AS STRING)",
+}
+_THETA_SET_TOKEN = re.compile(
+    r"\s*(SET_UNION|SET_INTERSECT|SET_DIFF|\(|\)|,|\$\d+)\s*", re.IGNORECASE
+)
+_THETA_SET_FNS = {
+    "SET_UNION": "theta_union",
+    "SET_INTERSECT": "theta_intersection",
+    "SET_DIFF": "theta_difference",
+}
+
+
+def _theta_lg_k(params: str) -> int:
+    """``lgNomEntries`` for a Pinot theta parameter string
+    (``nominalEntries=…;samplingProbability=…``): ceil(log2(nominalEntries)),
+    the library's own rounding, or the default when the string names
+    none. ValueError outside the library's 4..26."""
+    m = re.search(r"(?i)nominalEntries\s*=\s*(\d+)", params)
+    if m is None:
+        return _THETA_DEFAULT_LG_K
+    lg_k = (int(m.group(1)) - 1).bit_length()
+    if not 4 <= lg_k <= 26:
+        raise ValueError(
+            f"theta nominalEntries={m.group(1)}: must round up to 2^4..2^26"
+        )
+    return lg_k
+
+
+def theta_set_sql(expr: str, legs: list[str], lg_k: int) -> str:
+    """Compile a theta post-aggregation expression: ``SET_UNION(…)``,
+    ``SET_INTERSECT(…)``, ``SET_DIFF(a, b)``, nested, over ``$k`` (the
+    sketch of the k-th filter predicate, ``legs[k - 1]``), into nested
+    native theta_union / theta_intersection / theta_difference calls.
+    ValueError on anything else."""
+    toks = [t.upper() for t in _THETA_SET_TOKEN.findall(expr)]
+    if not toks or _THETA_SET_TOKEN.sub("", expr).strip():
+        raise ValueError(f"theta set expression: cannot parse {expr!r}")
+    pos = 0
+
+    def take() -> str:
+        nonlocal pos
+        if pos == len(toks):
+            raise ValueError(f"theta set expression: {expr!r} ends early")
+        pos += 1
+        return toks[pos - 1]
+
+    def parse() -> str:
+        t = take()
+        if t.startswith("$"):
+            if not 1 <= int(t[1:]) <= len(legs):
+                raise ValueError(
+                    f"theta set expression references {t} but only "
+                    f"{len(legs)} filter predicates were given"
+                )
+            return legs[int(t[1:]) - 1]
+        if t not in _THETA_SET_FNS or take() != "(":
+            raise ValueError(f"theta set expression: expected SET_…( or $k in {expr!r}")
+        args = [parse()]
+        while (sep := take()) == ",":
+            args.append(parse())
+        if sep != ")" or (t == "SET_DIFF" and len(args) != 2):
+            raise ValueError(f"theta set expression: bad arguments to {t} in {expr!r}")
+        out = args[0]
+        for arg in args[1:]:
+            lg = f", {lg_k}" if t == "SET_UNION" else ""
+            out = f"{_THETA_SET_FNS[t]}({out}, {arg}{lg})"
+        return out
+
+    out = parse()
+    if pos != len(toks):
+        raise ValueError(f"theta set expression: trailing tokens in {expr!r}")
+    return out
+
+
+# A compact theta sketch's preamble as hex digits, two per byte:
+# preamble longs, serial version, family 3, two layout bytes, flags (bit
+# 0 big-endian, bit 2 empty, bit 4 ordered), then the seed hash, which
+# must be the default seed's (CC93: DataSketches' hash of 9001) unless the
+# sketch is empty; an estimation blob's theta long follows, little-endian,
+# in (0, 2^63).
+_THETA_FLAGS_SEED = "(?:.[02468ACE]CC93|.[46CE]....)"
+_THETA_LONG = "(?!0{16}).{14}[0-7]."
+_THETA_PREAMBLE_RE = (
+    f"^(?:0[12]0303....{_THETA_FLAGS_SEED}"  # serial 3: empty, one item, exact
+    f"|030303....{_THETA_FLAGS_SEED}.{{16}}{_THETA_LONG}"  # serial 3 estimation
+    f"|010403....{_THETA_FLAGS_SEED}"  # serial 4 (compressed) exact
+    f"|020403....{_THETA_FLAGS_SEED}{_THETA_LONG})"  # serial 4 estimation
+)
+
+
+def _theta_blob_guard(col: str) -> str:
+    """``col`` where it is NULL or holds a compact theta sketch this
+    engine merges (_THETA_PREAMBLE_RE, and in an ordered serial-3
+    estimation blob a last entry below theta); a raise_error otherwise.
+    The library reads such malformed headers without complaint and
+    answers 0 or a wrong count."""
+    h = f"hex(substring({col}, 1, 24))"
+
+    def big_endian(le_hex: str) -> str:
+        return f"concat_ws('', reverse(regexp_extract_all({le_hex}, '(..)', 1)))"
+
+    entry_past_theta = (
+        f"{h} RLIKE '^030303....[13579BDF]' AND length({col}) > 24 AND "
+        f"{big_endian(f'hex(substring({col}, -8))')} >= "
+        f"{big_endian(f'substr({h}, 33, 16)')}"
+    )
+    return (
+        f"CASE WHEN {col} IS NULL OR ({h} RLIKE '{_THETA_PREAMBLE_RE}' "
+        f"AND NOT ({entry_past_theta})) THEN {col} ELSE raise_error("
+        f"'{col}: not a compact theta sketch of the default seed') END"
+    )
+
+
 class PinotDialect:
     """Stateless-ish rewriter; array-column, JSON-schema, and
     timestamp-index metadata come from the owning engine (or empty for
@@ -488,6 +622,7 @@ class PinotDialect:
         segment_partitions: dict[str, int] | None = None,
         sketch_ranges: dict[str, tuple[float, float]] | None = None,
         sketch_columns: dict[str, str] | None = None,
+        column_types: dict[str, str] | None = None,
     ):
         self.array_columns = array_columns or set()
         # real column names of registered tables: a SELECT alias that
@@ -504,6 +639,9 @@ class PinotDialect:
         # declared BYTES sketch-state column → kind (SKETCH_KINDS): the
         # aggregate over it merges in that kind's wire domain
         self.sketch_columns = sketch_columns or {}
+        # column → Spark type (simpleString): raw theta sketch inputs
+        # cast by it (_THETA_INPUT_CASTS)
+        self.column_types = column_types or {}
         self.json_schemas = json_schemas or {}  # column name → inferred schema
         # column → JsonIndexConfig (flattening rules, json-index.md:53-81)
         self.json_configs = json_configs or {}
@@ -660,108 +798,71 @@ class PinotDialect:
             q = float(a[1]) / 100.0
             return f"percentile_approx({a[0]}, {q})"
 
-        def _theta_setexpr_args(a):
-            """Parse the public multi-arg form: (column[, 'params'],
-            'predicate1', …, 'predicateN', 'SET_EXPR($1,…)').  Returns
-            (col, k, predicates, expression) or None for the plain
-            1-arg / col+params forms."""
-            import re as _re
-
-            if len(a) < 3 and not (len(a) == 2 and "=" in a[1]):
-                return None
+        def _theta_form(a, fn):
+            """(column, lg_k, predicates, set expression or None) of
+            ``fn(column[, 'params'][, 'pred1', …, 'predN', 'SET_EXPR'])``;
+            ValueError for predicates without a set expression."""
             col = a[0].strip()
-            rest = [(_unquote(x)) for x in a[1:]]
-            k = None
-            if rest and "=" in rest[0] and _re.match(
-                r"(?i)\s*(nominalEntries|samplingProbability|accuracy)\s*=",
-                rest[0],
-            ):
-                m = _re.search(r"(?i)nominalEntries\s*=\s*(\d+)", rest[0])
-                k = int(m.group(1)) if m else None
-                rest = rest[1:]
+            rest = [_unquote(x) for x in a[1:]]
+            lg_k = _THETA_DEFAULT_LG_K
+            if rest and _THETA_PARAMS_RE.match(rest[0]):
+                lg_k = _theta_lg_k(rest.pop(0))
             if not rest:
-                return (col, k, [], None)  # params-only form
-            expr = rest[-1]
-            preds = rest[:-1]
-            refs = [int(x) for x in _re.findall(r"\$(\d+)", expr)]
-            if refs and (not preds or max(refs) > len(preds) or min(refs) < 1):
+                return col, lg_k, [], None
+            if len(rest) == 1:
                 raise ValueError(
-                    f"theta set expression references ${max(refs) if refs else 0} "
-                    f"but only {len(preds)} filter predicates were given"
+                    f"{fn}({col}, {rest[0]!r}): filter predicates need a "
+                    "set expression after them, e.g. 'SET_UNION($1)'"
                 )
-            return (col, k, preds, expr)
+            return col, lg_k, rest[:-1], rest[-1]
 
-        def _theta_filtered_legs(col, k, preds):
-            """One merged-sketch SQL expression per filter predicate:
-            BYTES sketch columns union the matching blobs; raw columns
-            build a sketch from the matching values — both grouped-agg,
-            map-side-combined, one pass over the scan for ALL legs."""
-            from apache_pinot_spark.functions.theta import (
-                BUILD_UDF,
-                DEFAULT_NOMINAL,
-                UNION_UDF,
-            )
+        def _theta_sketch(col, lg_k, pred=None):
+            """The group's sketch of ``col`` (rows where ``pred`` holds):
+            a declared column unions its blobs, a raw one builds from
+            its values."""
+            declared = self.sketch_columns.get(col) == "theta"
+            if declared:
+                value = _theta_blob_guard(col)
+            else:
+                kind = self.column_types.get(col, "").split("(")[0]
+                value = _THETA_INPUT_CASTS.get(kind, "{}").format(col)
+            if pred is not None:
+                value = f"CASE WHEN ({pred}) THEN {value} END"
+            agg = "theta_union_agg" if declared else "theta_sketch_agg"
+            return f"{agg}({value}, {lg_k})"
 
-            kk = k or DEFAULT_NOMINAL
-            legs = []
-            for p in preds:
-                guarded = f"CASE WHEN ({p}) THEN {col} END"
-                if self.sketch_columns.get(col) == "theta":
-                    legs.append(f"{UNION_UDF}({guarded})")
-                else:
-                    legs.append(f"{BUILD_UDF}({guarded}, {kk})")
-            return legs
+        def _theta_combined(col, lg_k, preds, expr):
+            legs = [_theta_sketch(col, lg_k, p) for p in preds]
+            return theta_set_sql(expr, legs, lg_k)
 
         def distinctcountthetasketch(a):
             # Over a BYTES theta-sketch column (sketchColumns kind theta):
-            # union the group's sketches, estimate, round to a count —
-            # the public function's return shape. Over a raw column the
+            # union the group's sketches and estimate (BIGINT, the
+            # public function's return shape). Over a raw column the
             # engine answers EXACTLY (COUNT DISTINCT): the sketch is an
             # approximation device, not a semantic; exact is both a valid
             # estimate and oracle-reproducible.
             # The multi-arg set-expression form — (col[, 'params'],
             # 'pred1', …, 'SET_INTERSECT($1, $2)') — compiles to one
-            # aggregate pass building a filtered sketch per predicate
-            # (CASE-guarded, so the scan runs ONCE) combined by the
-            # expression evaluator; PinotEngine.theta_set_estimate stays
-            # as the programmatic twin.
-            from apache_pinot_spark.functions.theta import (
-                ESTIMATE_UDF,
-                SETEXPR_UDF,
-                UNION_UDF,
-            )
-
-            parsed = _theta_setexpr_args(a)
-            if parsed is not None and parsed[3] is not None:
-                col, k, preds, expr = parsed
-                legs = _theta_filtered_legs(col, k, preds)
-                e = _sql_quote(expr)
-                return (
-                    f"CAST(ROUND({SETEXPR_UDF}('{e}', "
-                    f"array({', '.join(legs)}))) AS BIGINT)"
-                )
-            arg = a[0].strip()
-            if self.sketch_columns.get(arg) == "theta":
-                return f"CAST(ROUND({ESTIMATE_UDF}({UNION_UDF}({arg}))) AS BIGINT)"
+            # aggregate pass building a CASE-guarded sketch per predicate,
+            # combined by the native set operations.
+            col, lg_k, preds, expr = _theta_form(a, "DISTINCTCOUNTTHETASKETCH")
+            if expr is not None:
+                return f"theta_sketch_estimate({_theta_combined(col, lg_k, preds, expr)})"
+            if self.sketch_columns.get(col) == "theta":
+                return f"theta_sketch_estimate({_theta_sketch(col, lg_k)})"
             return f"COUNT(DISTINCT {a[0]})"
 
         def distinctcountrawthetasketch(a):
             # RAW variant: the merged serialized sketch itself (hex), for
             # clients that post-aggregate across queries. Supports the
             # same multi-arg set-expression form as the estimate
-            # function (returns the combined sketch's wire blob).
-            from apache_pinot_spark.functions.theta import SETEXPR_RAW_UDF, UNION_UDF
-
-            parsed = _theta_setexpr_args(a)
-            if parsed is not None and parsed[3] is not None:
-                col, k, preds, expr = parsed
-                legs = _theta_filtered_legs(col, k, preds)
-                e = _sql_quote(expr)
-                return (
-                    f"hex({SETEXPR_RAW_UDF}('{e}', array({', '.join(legs)})))"
-                )
-            arg = _require_kind(a[0], "theta", "DISTINCTCOUNTRAWTHETASKETCH")
-            return f"hex({UNION_UDF}({arg}))"
+            # function (returns the combined sketch's blob).
+            col, lg_k, preds, expr = _theta_form(a, "DISTINCTCOUNTRAWTHETASKETCH")
+            if expr is not None:
+                return f"hex({_theta_combined(col, lg_k, preds, expr)})"
+            col = _require_kind(col, "theta", "DISTINCTCOUNTRAWTHETASKETCH")
+            return f"hex({_theta_sketch(col, lg_k)})"
 
         def distinctcounttuplesketch(a):
             # Over a BYTES integer-sum tuple-sketch column
@@ -2544,7 +2645,7 @@ def _register_session_udfs(spark: SparkSession) -> None:
     """Register the column-declaration-free dialect UDF families once per
     session: FREQUENTSTRINGSSKETCH / PERCENTILERAWTDIGEST /
     DISTINCTCOUNTRAWHLLPLUS / ID_SET / PERCENTILERAWKLL / FUNNEL_MAX_STEP
-    strict_increase / theta build+setexpr / NORMALIZE all work on raw
+    strict_increase / NORMALIZE all work on raw
     columns with no prior registration, so they must exist up front
     (their declared-column paths use them too; SKETCH_KINDS maps those
     kinds to None)."""
@@ -2556,7 +2657,6 @@ def _register_session_udfs(spark: SparkSession) -> None:
     from apache_pinot_spark.functions.kll_wire import register_kll_udfs
     from apache_pinot_spark.functions.tdigest import register_tdigest_udfs
     from apache_pinot_spark.functions.text import register_normalize_udf
-    from apache_pinot_spark.functions.theta import register_theta_udfs
     from apache_pinot_spark.operators.funnel import register_funnel_udfs
 
     register_freq_udfs(spark)
@@ -2565,7 +2665,6 @@ def _register_session_udfs(spark: SparkSession) -> None:
     register_idset_udfs(spark)  # ID_SET works on any column undeclared
     register_kll_udfs(spark)  # PERCENTILERAWKLL(rawCol) builds undeclared
     register_funnel_udfs(spark)  # FUNNEL_MAX_STEP strict_increase SQL form
-    register_theta_udfs(spark)  # set-expression form builds over RAW columns
     register_normalize_udf(spark)  # NORMALIZE(str[, form])
     _UDF_SESSIONS.add(spark)
 
@@ -2598,6 +2697,7 @@ class PinotEngine:
         self._segment_partitions: dict[str, int] = {}
         self._sketch_ranges: dict[str, tuple[float, float]] = {}
         self._sketch_columns: dict[str, str] = {}  # column → SKETCH_KINDS kind
+        self._column_types: dict[str, str] = {}  # column → Spark simpleString
         self._upsert_tables: dict[str, object] = {}  # name → UpsertConfig
         self._rollups: list = []  # RollupSpec registry
         share_package_with_workers(spark)
@@ -2615,6 +2715,7 @@ class PinotEngine:
         self._table_counts.pop(name, None)
         for f in df.schema.fields:
             self._table_columns.add(f.name)
+            self._column_types[f.name] = f.dataType.simpleString()
             if isinstance(f.dataType, T.ArrayType):
                 self._array_columns.add(f.name)
             if isinstance(f.dataType, T.BinaryType):
@@ -2680,40 +2781,6 @@ class PinotEngine:
         over it can merge-and-estimate (schema.md:48)."""
         self._sketch_ranges[column] = (float(lo), float(hi))
 
-    def theta_set_estimate(
-        self,
-        table: str,
-        column: str,
-        predicates: list[str],
-        expression: str,
-        k: int | None = None,
-    ) -> float:
-        """The public DISTINCT_COUNT_THETA_SKETCH set-expression form:
-        build one theta sketch of ``column`` per WHERE-style predicate
-        ($1..$n in order), combine them with ``expression``
-        (SET_UNION / SET_INTERSECT / SET_DIFF over $k), return the
-        estimate. Example::
-
-            theta_set_estimate("events", "user_id",
-                               ["event_type = 'view'",
-                                "event_type = 'purchase'"],
-                               "SET_INTERSECT($1, $2)")
-
-        Each per-predicate sketch is built distributed (map-side partials,
-        functions.theta.theta_sketch_global); only ≤k-entry partial blobs
-        reach the driver."""
-        from apache_pinot_spark.functions import theta as _t
-
-        if not predicates:
-            raise ValueError("theta_set_estimate needs at least one predicate")
-        kk = k or _t.DEFAULT_NOMINAL
-        df = self._dfs[table]
-        sketches = {
-            f"${i + 1}": _t.theta_sketch_global(df.where(p).select(column), column, kk)
-            for i, p in enumerate(predicates)
-        }
-        return _t.evaluate_set_expression(expression, sketches).estimate()
-
     def add_rollup(self, spec):
         """Register a star-tree-style rollup (plans/rollup.py) for
         aggregate-rewrite matching."""
@@ -2758,6 +2825,7 @@ class PinotEngine:
             self._segment_partitions,
             self._sketch_ranges,
             self._sketch_columns,
+            self._column_types,
         )
 
     def rewrite(self, pinot_sql: str) -> RewriteResult:

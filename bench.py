@@ -31,20 +31,9 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-def _calib_cpu_sec() -> float:
-    """PINNED pure-CPU calibration loop (r10; DO NOT CHANGE — the judge
-    compares this number across rounds to separate host drift from code
-    regressions): sha256 over 128 MiB of fixed bytes, single-threaded,
-    no Spark involvement. Measures raw host CPU speed at this instant."""
-    import hashlib
-
-    buf = b"\x5a" * 65536
-    t0 = time.perf_counter()
-    h = hashlib.sha256()
-    for _ in range(2048):
-        h.update(buf)
-    h.hexdigest()
-    return round(time.perf_counter() - t0, 4)
+# the host label — the pinned pure-CPU calibration loop (r10) and the
+# steal reading — is perfbench's, so the two benches label a host alike
+from perfbench.measure import calib_cpu_sec, steal_jiffies, steal_pct  # noqa: E402
 
 
 def _calib_spark_sec(spark) -> float:
@@ -75,36 +64,6 @@ BENCH_QUERIES = [
     "j3_semi_anti",
     "p5_p7_predicates",
 ]
-
-
-def _clock_ticks() -> float:
-    """Kernel clock ticks per second (the unit of /proc/stat); 100, the
-    Linux default, when sysconf fails or reports a non-positive value."""
-    try:
-        hz = os.sysconf("SC_CLK_TCK")
-    except (OSError, ValueError):
-        return 100.0
-    return float(hz) if hz > 0 else 100.0
-
-
-def _steal_jiffies(path: str = "/proc/stat") -> int | None:
-    """Host steal jiffies (field 9 of the aggregate cpu line), or None
-    when the read failed."""
-    try:
-        with open(path) as fh:
-            return int(fh.readline().split()[8])
-    except (OSError, ValueError, IndexError):
-        return None
-
-
-def _steal_pct(j0: int | None, t0: float, j1: int | None, t1: float,
-               hz: float, ncpu: float) -> float | None:
-    """Steal jiffies as % of total host CPU capacity over [t0, t1]; None
-    when either read failed (a failed read is not zero steal)."""
-    if j0 is None or j1 is None:
-        return None
-    dt = max(1e-9, t1 - t0)
-    return round((j1 - j0) / (dt * hz * ncpu) * 100.0, 2)
 
 
 def main() -> None:
@@ -237,9 +196,9 @@ def main() -> None:
     def _calib_point(first: bool = False) -> dict[str, float]:
         if first:  # throwaway: codegen/page-warm the probe itself
             _calib_spark_sec(spark)
-            _calib_cpu_sec()
+            calib_cpu_sec()
         # median of 3 — a single sub-second sample is timer noise
-        cpus = sorted(_calib_cpu_sec() for _ in range(3))
+        cpus = sorted(calib_cpu_sec() for _ in range(3))
         sparks = sorted(_calib_spark_sec(spark) for _ in range(3))
         return {"cpu_sec": cpus[1], "spark_sec": sparks[1]}
 
@@ -258,14 +217,16 @@ def main() -> None:
     # parallel timed region IS saturated, so a passive before/after delta
     # over each run captures exactly the contention the run experienced.
     # Reported metadata only — nothing in the timing path changes.
-    sj0, st0 = _steal_jiffies(), time.perf_counter()
+    sj0, st0 = steal_jiffies(), time.perf_counter()
     timings = run_suite("r1")
-    sj1, st1 = _steal_jiffies(), time.perf_counter()
+    sj1, st1 = steal_jiffies(), time.perf_counter()
     timings2 = run_suite("r2")
-    sj2, st2 = _steal_jiffies(), time.perf_counter()
-    hz, ncpu = _clock_ticks(), float(os.cpu_count() or 1)
-    steal_pct_run1 = _steal_pct(sj0, st0, sj1, st1, hz, ncpu)
-    steal_pct_run2 = _steal_pct(sj1, st1, sj2, st2, hz, ncpu)
+    sj2, st2 = steal_jiffies(), time.perf_counter()
+    # None when a read failed or the tick rate is unknown (not zero steal)
+    steal_pct_run1, steal_pct_run2 = (
+        None if pct is None else round(pct, 2)
+        for pct in (steal_pct(sj0, st0, sj1, st1), steal_pct(sj1, st1, sj2, st2))
+    )
     calib_after = _calib_point()
     calib_drift = round(
         (calib_after["cpu_sec"] + calib_after["spark_sec"])

@@ -44,7 +44,7 @@ _NOT_DIALECT = {"spark", "con", "duck", "duckdb", "conn", "session", "ss"}
 _SQL_FACTORIES = {"_engine_q"}
 
 _SET_FIELDS = ("array_columns", "table_columns", "binary_columns")
-_MAP_FIELDS = ("text_index", "segment_partitions", "sketch_columns")
+_MAP_FIELDS = ("text_index", "segment_partitions", "sketch_columns", "column_types")
 
 
 def _const_str(node) -> str | None:

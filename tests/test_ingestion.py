@@ -483,7 +483,6 @@ def test_config_driven_sketch_columns(spark, tmp_path_factory):
     import numpy as np
 
     from apache_pinot_spark.functions import bitmap_wire as BW
-    from apache_pinot_spark.functions import theta as TH
     from apache_pinot_spark.plans.schema import PinotSchema
     from apache_pinot_spark.sqlfront import PinotEngine
 
@@ -510,16 +509,18 @@ def test_config_driven_sketch_columns(spark, tmp_path_factory):
     for seg in range(4):
         ids = np.arange(seg * 500, seg * 500 + 1000)
         rows.append(
-            (
-                seg,
-                TH.serialize(TH.ThetaSketch.from_values(
-                    __import__("pandas").Series(ids))),
-                BW.serialize(BW.RoaringBitmap32.from_values(ids)),
-                1_700_000_000_000 + seg,
-            )
+            (seg, BW.serialize(BW.RoaringBitmap32.from_values(ids)), 1_700_000_000_000 + seg)
         )
-    df = spark.createDataFrame(
-        rows, "seg int, users_theta binary, users_bitmap binary, ts long"
+    thetas = (
+        spark.range(4)
+        .selectExpr("CAST(id AS INT) AS seg", "explode(sequence(id * 500, id * 500 + 999)) AS u")
+        .groupBy("seg")
+        .agg(F.expr("theta_sketch_agg(u)").alias("users_theta"))
+    )
+    df = (
+        spark.createDataFrame(rows, "seg int, users_bitmap binary, ts long")
+        .join(thetas, "seg")
+        .select("seg", "users_theta", "users_bitmap", "ts")
     )
     from apache_pinot_spark.sources import batch as B
 
@@ -531,12 +532,12 @@ def test_config_driven_sketch_columns(spark, tmp_path_factory):
     path = B.ingest_batch(spark, schema, cfg, df, warehouse=wh)
     eng = PinotEngine(spark)
     eng.register_ingested("seg_stats", path)
-    row = eng.sql(
-        "SELECT DISTINCTCOUNTTHETASKETCH(users_theta) AS t, "
-        "DISTINCTCOUNTBITMAP(users_bitmap) AS b FROM seg_stats"
-    ).collect()[0]
-    assert row["b"] == 2500  # ids 0..2499, overlapping segments OR'd
-    assert row["t"] == 2500  # exact regime: theta estimate is exact
+    # theta merges natively and bitmap in a pandas UDF: Spark runs the
+    # two kinds of aggregate in separate statements
+    t = eng.sql("SELECT DISTINCTCOUNTTHETASKETCH(users_theta) AS t FROM seg_stats")
+    b = eng.sql("SELECT DISTINCTCOUNTBITMAP(users_bitmap) AS b FROM seg_stats")
+    assert b.collect()[0]["b"] == 2500  # ids 0..2499, overlapping segments OR'd
+    assert t.collect()[0]["t"] == 2500  # exact regime: theta estimate is exact
     import pytest as _pt
 
     with _pt.raises(ValueError, match="unknown sketch kind"):
@@ -618,7 +619,6 @@ def test_sketch_column_type_check_reads_only_the_declaring_table(
     """register_ingested checks its sketchColumns against its own table:
     another table holding a same-named column as STRING neither blocks the
     declaration nor depends on which of the two is registered first."""
-    from apache_pinot_spark.functions.theta import UNION_UDF
     from apache_pinot_spark.sqlfront import PinotEngine
 
     sch = PinotSchema.from_json(
@@ -644,7 +644,7 @@ def test_sketch_column_type_check_reads_only_the_declaring_table(
     if not other_first:
         eng.register("string_payload", other)
     sql = eng.rewrite("SELECT DISTINCTCOUNTTHETASKETCH(payload) FROM bytes_payload").sql
-    assert UNION_UDF in sql
+    assert "theta_union_agg" in sql
 
 
 def test_ingestion_transforms_and_filter(spark, tmp_path_factory):

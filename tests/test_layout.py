@@ -59,7 +59,6 @@ UNCALLED_METHODS = {
     "PinotCatalog.attach_all": "re-register persisted tables in a new session; test_ingestion",
     "PinotEngine.set_json_index_config": "JSON index flattening config for JSON_MATCH; test_json_match",
     "PinotEngine.infer_json": "JSON schema for JSON_MATCH [*] paths on a loaded table; test_user_journey",
-    "PinotEngine.theta_set_estimate": "theta-sketch set algebra over filtered subsets; test_theta",
     "PinotEngine.add_rollup": "rollup (star-tree analogue) registration; test_plans",
     "PinotEngine.register_upsert_table": "upsert table registration; test_upsert",
     "PinotEngine.register_dedup_table": "dedup table registration; test_upsert",

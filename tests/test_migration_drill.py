@@ -1,9 +1,11 @@
 """End-to-end migration drill: ONE table carrying every sketch-column
 kind a migrating Pinot user could hold — built by the REAL producing
 libraries where they exist in this container (datasketches-java,
-RoaringBitmap, Spark's native hll_sketch_agg) and by the byte-golden
-builders elsewhere — declared in ONE sketchColumns config, queried
-together, every answer checked against the exact ground truth.
+RoaringBitmap, Spark's native theta_sketch_agg and hll_sketch_agg) and by
+the byte-golden builders elsewhere — declared in ONE sketchColumns
+config, queried together (the pandas-UDF kinds in one statement, the two
+native kinds in another), every answer checked against the exact ground
+truth.
 
 This is MIGRATION.md's fidelity table as a single executable check."""
 
@@ -33,7 +35,6 @@ def drill(spark):
     from apache_pinot_spark.functions import bitmap_wire as BW
     from apache_pinot_spark.functions import hll_clearspring as CS
     from apache_pinot_spark.functions import kll_wire as KW
-    from apache_pinot_spark.functions import theta as TH
     from apache_pinot_spark.functions import tuple_wire as TW
 
     jvm = spark._jvm
@@ -49,8 +50,6 @@ def drill(spark):
     for seg in range(N_SEG):
         users = _seg_users(seg)
         lat = rng.normal(100 + seg, 10, users.size)
-        # theta: our byte-exact builder (heapifies in the jar)
-        theta_b = TH.serialize(TH.ThetaSketch.from_values(pd.Series(users)))
         # tuple: engagement=1 per user
         tuple_b = TW.serialize(
             TW.IntegerTupleSketch.from_longs(users, np.ones(users.size, np.int64))
@@ -69,22 +68,25 @@ def drill(spark):
         cs = CS.ClearspringHLL(log2m=11)
         cs.offer_values(pd.Series(users))
         cs_b = cs.serialize()
-        rows.append((seg, theta_b, tuple_b, bitmap_b, kll_b, cs_b))
+        rows.append((seg, tuple_b, bitmap_b, kll_b, cs_b))
         lats.append(lat)
     pdf = pd.DataFrame(
         rows,
-        columns=["seg", "u_theta", "u_tuple", "u_bitmap", "lat_kll",
-                 "u_cshll"],
+        columns=["seg", "u_tuple", "u_bitmap", "lat_kll", "u_cshll"],
     )
     df = spark.createDataFrame(pdf)
-    # ds_hll built by Spark's own native aggregate from the raw users
+    # theta and ds_hll built by Spark's own native aggregates from the
+    # raw users (theta_sketch_agg writes the compressed serial-4 blob)
     raw = spark.createDataFrame(
         pd.DataFrame(
             [(seg, int(u)) for seg in range(N_SEG) for u in _seg_users(seg)],
             columns=["seg", "uid"],
         )
     )
-    ds = raw.groupBy("seg").agg(F.expr("hll_sketch_agg(uid)").alias("u_dshll"))
+    ds = raw.groupBy("seg").agg(
+        F.expr("theta_sketch_agg(uid)").alias("u_theta"),
+        F.expr("hll_sketch_agg(uid)").alias("u_dshll"),
+    )
     eng = PinotEngine(spark)
     eng.register("drill", df.join(ds, "seg"))
     eng.apply_sketch_columns(
@@ -104,22 +106,19 @@ def drill(spark):
 
 def test_every_kind_in_one_statement(drill):
     eng, n_users, lat, _ = drill
-    # all pandas-UDF-served kinds together in ONE statement; the
-    # native-aggregate ds_hll kind runs in its own (Spark does not
-    # allow grouped-agg pandas UDFs and native aggregates in one
-    # SELECT — noted on the datasketches_hll entry of
+    # all pandas-UDF-served kinds together in ONE statement; the two
+    # native-aggregate kinds, theta and ds_hll, together in another
+    # (Spark does not allow grouped-agg pandas UDFs and native
+    # aggregates in one SELECT — noted on the datasketches_hll entry of
     # sqlfront.SKETCH_KINDS)
     row = eng.sql(
-        "SELECT DISTINCTCOUNTTHETASKETCH(u_theta) AS t, "
-        "DISTINCTCOUNTTUPLESKETCH(u_tuple) AS tp, "
+        "SELECT DISTINCTCOUNTTUPLESKETCH(u_tuple) AS tp, "
         "SUMVALUESINTEGERSUMTUPLESKETCH(u_tuple) AS sv, "
         "DISTINCTCOUNTBITMAP(u_bitmap) AS bm, "
         "PERCENTILEKLL(lat_kll, 50) AS p50, "
         "DISTINCTCOUNTHLL(u_cshll) AS cs "
         "FROM drill"
     ).collect()[0]
-    # theta's default nominal (4096) < 6500 distinct -> estimation mode
-    assert row["t"] == pytest.approx(n_users, rel=0.03)
     assert row["tp"] == n_users  # tuple default nominal 16384: exact
     # every per-segment engagement lands in the sum (overlap users twice)
     assert row["sv"] == N_SEG * PER_SEG
@@ -127,29 +126,31 @@ def test_every_kind_in_one_statement(drill):
     true_p50 = float(np.quantile(lat, 0.5, method="inverted_cdf"))
     assert row["p50"] == pytest.approx(true_p50, abs=2.0)
     assert row["cs"] == pytest.approx(n_users, rel=0.05)
-    ds = eng.sql(
-        "SELECT DISTINCTCOUNTHLL(u_dshll) AS ds FROM drill"
-    ).collect()[0]["ds"]
-    assert ds == pytest.approx(n_users, rel=0.05)
+    native = eng.sql(
+        "SELECT DISTINCTCOUNTTHETASKETCH(u_theta) AS t, "
+        "DISTINCTCOUNTHLL(u_dshll) AS ds FROM drill"
+    ).collect()[0]
+    # theta's default nominal (4096) < 6500 distinct -> estimation mode
+    assert native["t"] == pytest.approx(n_users, rel=0.03)
+    assert native["ds"] == pytest.approx(n_users, rel=0.05)
 
 
 def test_raw_forms_reload_everywhere(drill, spark):
     """The RAW merged blobs keep working downstream: theta re-estimates
-    via the engine, bitmap re-parses, kll heapifies in the library."""
+    via Spark's own theta_sketch_estimate, bitmap re-parses, kll
+    heapifies in the library."""
     from apache_pinot_spark.functions import bitmap_wire as BW
     from apache_pinot_spark.functions import kll_wire as KW
-    from apache_pinot_spark.functions import theta as TH
 
     eng, n_users, lat, have_jars = drill
+    t = eng.sql("SELECT DISTINCTCOUNTRAWTHETASKETCH(u_theta) AS t FROM drill").collect()[0]["t"]
     row = eng.sql(
-        "SELECT DISTINCTCOUNTRAWTHETASKETCH(u_theta) AS t, "
-        "DISTINCTCOUNTRAWBITMAP(u_bitmap) AS bm, "
+        "SELECT DISTINCTCOUNTRAWBITMAP(u_bitmap) AS bm, "
         "PERCENTILERAWKLL(lat_kll) AS kl "
         "FROM drill"
     ).collect()[0]
-    assert TH.deserialize(bytes.fromhex(row["t"])).estimate() == pytest.approx(
-        n_users, rel=0.03
-    )
+    est = spark.sql(f"SELECT theta_sketch_estimate(unhex('{t}'))").collect()[0][0]
+    assert est == pytest.approx(n_users, rel=0.03)
     assert BW.deserialize(bytes.fromhex(row["bm"])).cardinality() == n_users
     merged = KW.parse_kll_doubles(bytes.fromhex(row["kl"]))
     assert merged.n == lat.size

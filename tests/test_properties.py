@@ -265,7 +265,7 @@ def test_lang_id_null_text_maps_to_default(spark):
 )
 @settings(max_examples=100, deadline=None)
 def test_murmur3_vectorized_matches_scalar_reference(datas, seed):
-    """The numpy-vectorized murmur batch (theta hot path) must agree
+    """The numpy-vectorized murmur batch (the sketch-wire hot path) must agree
     bit-for-bit with the scalar spec transcription on arbitrary
     variable-length inputs — two independent implementations of the
     public algorithm cross-checking each other."""
@@ -298,23 +298,36 @@ def test_murmur3_long_path_matches_byte_path(vals):
     assert np.array_equal(got, want)
 
 
-@given(st.lists(st.integers(min_value=0, max_value=10_000), min_size=0, max_size=500),
-       st.integers(min_value=2, max_value=6))
-@settings(max_examples=40, deadline=None)
-def test_theta_wire_round_trip_and_merge_equals_rebuild(vals, nseg):
-    """Wire round trip is byte-identical and segment-merge == rebuild
-    for arbitrary value multisets split across segments."""
-    import numpy as np
-    import pandas as pd
+def test_theta_segment_merge_equals_rebuild(spark):
+    """Exact-mode segment merge == rebuild through SQL, for 20 seeded
+    value multisets split across 2-6 segments: a declared column's union
+    of per-segment sketches estimates what one sketch over all the values
+    does, and both equal the distinct count."""
+    import random
 
-    from apache_pinot_spark.functions import theta as TH
+    from pyspark.sql import functions as F
 
-    segs = [vals[i::nseg] for i in range(nseg)]
-    blobs = [TH.serialize(TH.ThetaSketch.from_values(pd.Series(s), 128))
-             for s in segs]
-    merged = TH.merge_blobs(blobs, 128)
-    rebuilt = TH.ThetaSketch.from_values(pd.Series(vals), 128)
-    assert merged.estimate() == rebuilt.estimate()
-    assert np.array_equal(merged.entries, rebuilt.entries)
-    for b in blobs:
-        assert TH.serialize(TH.deserialize(b, k=128)) == b
+    from apache_pinot_spark.sqlfront import PinotEngine
+
+    rng = random.Random(97)
+    rows = []
+    for case in range(20):
+        nseg = rng.randint(2, 6)
+        vals = [rng.randint(0, 10_000) for _ in range(rng.randint(1, 500))]
+        rows += [(case, i % nseg, v) for i, v in enumerate(vals)]
+    raw = spark.createDataFrame(rows, "case int, seg int, v bigint")
+    segs = raw.groupBy("case", "seg").agg(F.expr("theta_sketch_agg(v)").alias("th"))
+    eng = PinotEngine(spark)
+    eng.register("raw_vals", raw)
+    eng.register("seg_sketches", segs)
+    eng.apply_sketch_columns({"th": "theta"})
+    merged = eng.sql(
+        "SELECT case, DISTINCTCOUNTTHETASKETCH(th) AS e FROM seg_sketches GROUP BY case"
+    ).collect()
+    rebuilt = eng.sql(
+        "SELECT case, DISTINCTCOUNTTHETASKETCH(v, 'v IS NOT NULL', '$1') AS e, "
+        "COUNT(DISTINCT v) AS d FROM raw_vals GROUP BY case"
+    ).collect()
+    want = {r["case"]: r["d"] for r in rebuilt}
+    assert {r["case"]: r["e"] for r in rebuilt} == want
+    assert {r["case"]: r["e"] for r in merged} == want

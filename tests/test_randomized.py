@@ -12,7 +12,6 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from apache_pinot_spark.functions import freqitems as FI
-from apache_pinot_spark.functions import theta as TH
 from apache_pinot_spark.operators import funnel as FU
 from apache_pinot_spark.operators import upsert as U
 from tests.test_funnel_topk import _brute_max_step
@@ -151,33 +150,48 @@ def test_freq_sketch_merge_guarantee(parts, m):
     assert FI.serialize(FI.deserialize(FI.serialize(merged))) == FI.serialize(merged)
 
 
-@given(st.sets(st.integers(0, 10_000), max_size=300),
-       st.sets(st.integers(0, 10_000), max_size=300))
-@settings(max_examples=100, deadline=None)
-def test_theta_exact_mode_set_algebra_is_exact(a, b):
+def test_theta_exact_mode_set_algebra_is_exact(spark):
     """While sketches stay in exact mode (k above the cardinality), the
-    set algebra IS set algebra — equality, not approximation."""
-    import pandas as pd
+    SQL set algebra IS set algebra — equality, not approximation. 30
+    seeded-random pairs of integer sets, one grouped query."""
+    from apache_pinot_spark.sqlfront import PinotEngine
 
-    ska = TH.ThetaSketch.from_values(pd.Series(sorted(a), dtype="Int64"), k=4096)
-    skb = TH.ThetaSketch.from_values(pd.Series(sorted(b), dtype="Int64"), k=4096)
-    assert ska.union(skb).estimate() == float(len(a | b))
-    assert ska.intersect(skb).estimate() == float(len(a & b))
-    assert ska.a_not_b(skb).estimate() == float(len(a - b))
-    blob = TH.serialize(ska.union(skb))
-    assert TH.serialize(TH.deserialize(blob)) == blob
+    rng = random.Random(4321)
+    pairs = []
+    for _ in range(30):
+        a = set(rng.sample(range(10_000), rng.randint(0, 300)))
+        b = set(rng.sample(range(10_000), rng.randint(0, 300)))
+        pairs.append((a, b))
+    rows = [(i, side, v) for i, (a, b) in enumerate(pairs)
+            for side, vals in (("a", a), ("b", b)) for v in vals]
+    eng = PinotEngine(spark)
+    eng.register("pairs", spark.createDataFrame(rows, "pair int, side string, v bigint"))
+    legs = "'nominalEntries=4096', 'side = ''a''', 'side = ''b'''"
+    got = {
+        r["pair"]: (r["u"], r["i"], r["d"])
+        for r in eng.sql(
+            f"SELECT pair, DISTINCTCOUNTTHETASKETCH(v, {legs}, 'SET_UNION($1, $2)') AS u, "
+            f"DISTINCTCOUNTTHETASKETCH(v, {legs}, 'SET_INTERSECT($1, $2)') AS i, "
+            f"DISTINCTCOUNTTHETASKETCH(v, {legs}, 'SET_DIFF($1, $2)') AS d "
+            "FROM pairs GROUP BY pair"
+        ).collect()
+    }
+    want = {
+        i: (len(a | b), len(a & b), len(a - b))
+        for i, (a, b) in enumerate(pairs) if a or b
+    }
+    assert got == want
 
 
 @given(st.text(max_size=60))
 @settings(max_examples=200, deadline=None)
 def test_set_expression_parser_never_crashes_unexpectedly(expr):
-    """The theta set-expression parser raises ValueError on junk, never
+    """The theta set-expression compiler raises ValueError on junk, never
     anything else (and never hangs)."""
-    import pandas as pd
+    from apache_pinot_spark.sqlfront import theta_set_sql
 
-    sks = {"$1": TH.ThetaSketch.from_values(pd.Series([1, 2, 3]))}
     try:
-        TH.evaluate_set_expression(expr, sks)
+        theta_set_sql(expr, ["leg1"], 12)
     except ValueError:
         pass
 

@@ -152,18 +152,16 @@ def test_sketch_columns_over_http(http_server, spark):
     config-driven over HTTP; bad bodies and unknown kinds are 4xx/5xx,
     and a registered theta column answers DISTINCTCOUNTTHETASKETCH
     through /query/sql."""
-    import numpy as np
-    import pandas as pd
-
-    from apache_pinot_spark.functions import theta as TH
+    from pyspark.sql import functions as F
 
     port = http_server.port
-    blobs = [
-        ("g", TH.serialize(TH.ThetaSketch.from_values(pd.Series(
-            np.arange(seg * 100, seg * 100 + 400)))))
-        for seg in range(3)
-    ]
-    df = spark.createDataFrame(blobs, "g string, u_theta binary")
+    df = (
+        spark.range(3)
+        .selectExpr("id AS seg", "explode(sequence(id * 100, id * 100 + 399)) AS u")
+        .groupBy(F.lit("g").alias("g"), "seg")
+        .agg(F.expr("theta_sketch_agg(u)").alias("u_theta"))
+        .select("g", "u_theta")
+    )
     http_server.engine.register("http_theta_t", df)
     code, body = _req(
         port, "POST", "/tables/http_theta_t/sketchColumns",

@@ -934,13 +934,13 @@ def test_distinctcountrawhll_merges_bytes_sketches(spark):
 
 
 # kind → (aggregate over a declared column, the wire UDF (module, name)
-# it must call, the RAW form an undeclared BYTES column is refused, or
-# None when the kind has no such form)
+# or native Spark function it must call, the RAW form an undeclared BYTES
+# column is refused, or None when the kind has no such form)
 _KIND_REWRITES = {
     "tdigest": ("PERCENTILETDIGEST(c, 50)", ("tdigest", "UDF_NAME"), None),
     "theta": (
         "DISTINCTCOUNTTHETASKETCH(c)",
-        ("theta", "UNION_UDF"),
+        "theta_union_agg",
         "DISTINCTCOUNTRAWTHETASKETCH",
     ),
     "kll": ("PERCENTILEKLL(c, 50)", ("kll_wire", "PCT_UDF"), None),
@@ -949,7 +949,7 @@ _KIND_REWRITES = {
         ("hllplus_wire", "MERGE_UDF"),
         "DISTINCTCOUNTRAWHLLPLUS",
     ),
-    "datasketches_hll": ("DISTINCTCOUNTHLL(c)", None, None),
+    "datasketches_hll": ("DISTINCTCOUNTHLL(c)", "hll_union_agg", None),
     "hll_clearspring": ("DISTINCTCOUNTHLL(c)", ("hll_clearspring", "MERGE_UDF"), None),
     "cpc": (
         "DISTINCTCOUNTCPCSKETCH(c)",
@@ -990,8 +990,8 @@ def test_declared_sketch_column_rewrites_to_its_wire_udf(spark, kind):
     import importlib
 
     agg, udf, raw_fn = _KIND_REWRITES[kind]
-    if udf is None:
-        name = "hll_union_agg"  # native Spark, no Python UDF
+    if isinstance(udf, str):
+        name = udf  # native Spark, no Python UDF
     else:
         module = importlib.import_module(f"apache_pinot_spark.functions.{udf[0]}")
         name = getattr(module, udf[1])

@@ -1,77 +1,149 @@
-"""Theta sketches (functions/theta.py): exact mode, estimation error,
-set algebra vs ground truth, serde, and the Spark build + SQL surface."""
+"""Theta sketches through the dialect (DISTINCTCOUNTTHETASKETCH, its RAW
+form and the SET_UNION / SET_INTERSECT / SET_DIFF expressions), served by
+Spark's native DataSketches functions: exact mode, estimation error, set
+algebra vs ground truth, hostile blobs, and wire interop with the
+datasketches-java library those functions run on."""
 
 from __future__ import annotations
 
+import struct
+
 import numpy as np
-import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from apache_pinot_spark.functions import theta as TH
+from apache_pinot_spark.sqlfront import PinotEngine
 
 
-def _sk(values, k=TH.DEFAULT_NOMINAL):
-    return TH.ThetaSketch.from_values(pd.Series(list(values)), k)
+def _ds(spark):
+    return spark._jvm.org.apache.datasketches
 
 
-def test_exact_mode_below_nominal():
-    s = _sk([f"u{i}" for i in range(1000)] * 3)  # duplicates collapse
-    assert s.is_exact and s.estimate() == 1000.0
+def _java_blob(spark, values, lg_k=12):
+    """A compact serial-3 sketch built by datasketches-java itself."""
+    b = _ds(spark).theta.UpdateSketch.builder()
+    b.setLogNominalEntries(lg_k)
+    sk = b.build()
+    for v in values:
+        sk.update(v)
+    return bytes(x & 0xFF for x in sk.compact().toByteArray())
 
 
-def test_estimation_error_within_bounds():
+def _heapify(spark, blob: bytes):
+    mem = spark._jvm.org.apache.datasketches.memory.Memory.wrap(bytearray(blob))
+    return _ds(spark).theta.Sketch.heapify(mem)
+
+
+def _values_engine(spark, n, lo=0):
+    eng = PinotEngine(spark)
+    eng.register("vals", spark.range(lo, n).selectExpr("id AS v"))
+    return eng
+
+
+def _blob_engine(spark, blobs, table="blobs"):
+    """An engine with ``table(g int, th binary)``, ``th`` declared theta."""
+    eng = PinotEngine(spark)
+    rows = [(i, None if b is None else bytearray(b)) for i, b in enumerate(blobs)]
+    eng.register(table, spark.createDataFrame(rows, "g int, th binary"))
+    eng.apply_sketch_columns({"th": "theta"})
+    return eng
+
+
+def _one(eng, sql):
+    return eng.sql(sql).collect()[0][0]
+
+
+def test_exact_mode_below_nominal(spark):
+    eng = PinotEngine(spark)
+    # 1000 distinct strings, each three times: duplicates collapse
+    eng.register("u3", spark.range(3000).selectExpr("concat('u', id % 1000) AS u"))
+    got = _one(eng, "SELECT DISTINCTCOUNTTHETASKETCH(u, 'u IS NOT NULL', '$1') FROM u3")
+    assert got == 1000
+
+
+def test_estimation_error_within_bounds(spark):
     n, k = 200_000, 1024
-    s = _sk(range(n), k)
-    assert not s.is_exact and s.entries.size == k
+    eng = _values_engine(spark, n)
+    raw = _one(
+        eng,
+        f"SELECT DISTINCTCOUNTRAWTHETASKETCH(v, 'nominalEntries={k}', "
+        "'v >= 0', '$1') FROM vals",
+    )
+    sk = _heapify(spark, bytes.fromhex(raw))
+    assert sk.isEstimationMode()
     rse = 1.0 / np.sqrt(k - 1)
-    assert abs(s.estimate() - n) / n < 4 * rse  # ~4 sigma
+    assert abs(sk.getEstimate() - n) / n < 4 * rse  # ~4 sigma
 
 
-def test_union_exact_and_estimated():
-    a, b = _sk(range(0, 800)), _sk(range(400, 1200))
-    u = a.union(b)
-    assert u.is_exact and u.estimate() == 1200.0  # both exact, small
-    big_a, big_b = _sk(range(0, 60_000), 1024), _sk(range(30_000, 90_000), 1024)
-    est = big_a.union(big_b).estimate()
+def test_union_exact_and_estimated(spark):
+    eng = _values_engine(spark, 1200)
+    got = _one(
+        eng,
+        "SELECT DISTINCTCOUNTTHETASKETCH(v, 'v < 800', 'v >= 400', "
+        "'SET_UNION($1, $2)') FROM vals",
+    )
+    assert got == 1200  # both exact, small
+    eng = _values_engine(spark, 90_000)
+    est = _one(
+        eng,
+        "SELECT DISTINCTCOUNTTHETASKETCH(v, 'nominalEntries=1024', 'v < 60000', "
+        "'v >= 30000', 'SET_UNION($1, $2)') FROM vals",
+    )
     assert abs(est - 90_000) / 90_000 < 0.15
 
 
-def test_intersection_and_difference_vs_truth():
-    a, b = _sk(range(0, 60_000), 4096), _sk(range(40_000, 100_000), 4096)
-    inter = a.intersect(b).estimate()
-    assert abs(inter - 20_000) / 20_000 < 0.15
-    diff = a.a_not_b(b).estimate()
-    assert abs(diff - 40_000) / 40_000 < 0.15
+def test_intersection_and_difference_vs_truth(spark):
+    eng = _values_engine(spark, 100_000)
+    row = eng.sql(
+        "SELECT DISTINCTCOUNTTHETASKETCH(v, 'v < 60000', 'v >= 40000', "
+        "'SET_INTERSECT($1, $2)') AS i, "
+        "DISTINCTCOUNTTHETASKETCH(v, 'v < 60000', 'v >= 40000', "
+        "'SET_DIFF($1, $2)') AS d FROM vals"
+    ).collect()[0]
+    assert abs(row["i"] - 20_000) / 20_000 < 0.15
+    assert abs(row["d"] - 40_000) / 40_000 < 0.15
 
 
-def test_union_all_matches_single_build_small():
-    parts = [[f"x{i}" for i in range(j, 500, 5)] for j in range(5)]
-    merged = TH.union_all([_sk(p) for p in parts])
-    rebuilt = _sk([v for p in parts for v in p])
-    assert merged.estimate() == rebuilt.estimate() == 500.0
+def test_union_all_matches_single_build_small(spark):
+    parts = [
+        spark.range(j, 500, 5).selectExpr("concat('x', id) AS x").agg(
+            F.expr("theta_sketch_agg(x)")
+        ).collect()[0][0]
+        for j in range(5)
+    ]
+    eng = _blob_engine(spark, parts)
+    merged = _one(eng, "SELECT DISTINCTCOUNTTHETASKETCH(th) FROM blobs")
+    eng.register("xs", spark.range(500).selectExpr("concat('x', id) AS x"))
+    rebuilt = _one(eng, "SELECT DISTINCTCOUNTTHETASKETCH(x, 'x IS NOT NULL', '$1') FROM xs")
+    assert merged == rebuilt == 500
 
 
-def test_serde_round_trip_and_errors():
-    for s in (_sk([]), _sk(["one"]), _sk(range(10)), _sk(range(50_000), 512)):
-        blob = TH.serialize(s)
-        back = TH.deserialize(blob, k=s.k)
-        assert back.cut == s.cut and back.k == s.k
-        assert np.array_equal(back.entries, s.entries)
-        assert TH.serialize(back) == blob
-    with pytest.raises(ValueError, match="compact theta"):
-        TH.deserialize(b"\x02\x03\x07" + b"\x00" * 32)  # family 7
-    blob = TH.serialize(_sk(range(100)))
-    with pytest.raises(ValueError, match="truncated"):
-        TH.deserialize(blob[:40])
+def test_serde_round_trip_and_errors(spark):
+    """RAW blobs heapify in the library with the SQL estimate, and load
+    back through a declared column to the same estimate; a truncated
+    blob raises."""
+    for n, k in ((0, 4096), (1, 4096), (10, 4096), (50_000, 512)):
+        eng = _values_engine(spark, n)
+        row = eng.sql(
+            f"SELECT DISTINCTCOUNTTHETASKETCH(v, 'nominalEntries={k}', 'v >= 0', '$1') AS e, "
+            f"DISTINCTCOUNTRAWTHETASKETCH(v, 'nominalEntries={k}', 'v >= 0', '$1') AS b "
+            "FROM vals"
+        ).collect()[0]
+        blob = bytes.fromhex(row["b"])
+        assert round(_heapify(spark, blob).getEstimate()) == row["e"]
+        back = _blob_engine(spark, [blob])
+        assert _one(back, "SELECT DISTINCTCOUNTTHETASKETCH(th) FROM blobs") == row["e"]
+    truncated = _java_blob(spark, range(100))[:40]
+    eng = _blob_engine(spark, [truncated])
+    with pytest.raises(Exception, match="THETA_INVALID_INPUT_SKETCH_BUFFER|Memory"):
+        _one(eng, "SELECT DISTINCTCOUNTTHETASKETCH(th) FROM blobs")
 
 
-def test_deserialize_rejects_hostile_headers():
-    """Crafted wire blobs must raise, not mis-read the tail or divide
-    by zero later: wrong serial version, big-endian flag, out-of-range
-    theta, seed-hash mismatch, entry >= theta."""
-    import struct
-
+def test_deserialize_rejects_hostile_headers(spark):
+    """Crafted blobs in a declared theta column must raise, never answer
+    a number: wrong serial version, big-endian flag, seed-hash mismatch,
+    out-of-range theta, entry >= theta, bad preamble length, wrong
+    family. The library alone reads most of these as an empty sketch."""
     from apache_pinot_spark.functions import theta_wire as W
 
     sh = W.compute_seed_hash(9001)
@@ -79,114 +151,116 @@ def test_deserialize_rejects_hostile_headers():
     def head(pre, flags, seed_hash=sh, ser=3, fam=3):
         return struct.pack("<BBBBBBH", pre, ser, fam, 0, 0, flags, seed_hash)
 
-    with pytest.raises(ValueError, match="serial version"):
-        TH.deserialize(head(2, 0x1A, ser=2) + b"\x00" * 8)
-    with pytest.raises(ValueError, match="big-endian"):
-        TH.deserialize(head(2, 0x1A | 1) + b"\x00" * 8)
-    with pytest.raises(ValueError, match="seed hash mismatch"):
-        TH.deserialize(head(2, 0x1A, seed_hash=1234) + struct.pack("<If", 0, 1.0))
-    with pytest.raises(ValueError, match="theta long"):
-        TH.deserialize(head(3, 0x1A) + struct.pack("<IfQ", 0, 1.0, 0))
-    # entry >= theta: estimation blob claiming theta=100 with entry 200
-    bad = head(3, 0x1A) + struct.pack("<IfQ", 1, 1.0, 100) + struct.pack("<Q", 200)
-    with pytest.raises(ValueError, match="entry >= theta"):
-        TH.deserialize(bad)
-    with pytest.raises(ValueError, match="preamble length"):
-        TH.deserialize(head(5, 0x1A) + b"\x00" * 64)
+    hostile = [
+        head(2, 0x1A, ser=2) + b"\x00" * 8,
+        head(2, 0x1A | 1) + b"\x00" * 8,
+        head(2, 0x1A, seed_hash=1234) + struct.pack("<If", 0, 1.0),
+        head(3, 0x1A) + struct.pack("<IfQ", 0, 1.0, 0),
+        # estimation blob claiming theta=100 with entry 200
+        head(3, 0x1A) + struct.pack("<IfQ", 1, 1.0, 100) + struct.pack("<Q", 200),
+        head(5, 0x1A) + b"\x00" * 64,
+        b"\x02\x03\x07" + b"\x00" * 32,
+    ]
+    for blob in hostile:
+        eng = _blob_engine(spark, [_java_blob(spark, range(10)), blob])
+        with pytest.raises(Exception, match="not a compact theta sketch"):
+            _one(eng, "SELECT DISTINCTCOUNTTHETASKETCH(th) FROM blobs")
 
 
 def test_wire_interop_with_datasketches_java(spark):
-    """TRUE wire interop, golden-tested against the real Apache
-    DataSketches library (datasketches-java ships on Spark's classpath
-    for hll_sketch_agg): blobs built by java heapify here with identical
-    entries/theta/estimate, blobs built HERE heapify in java, and the
-    same values produce the same hash entries in both systems."""
-    jvm = spark._jvm
-    try:
-        ds = jvm.org.apache.datasketches
-        builder = ds.theta.UpdateSketch.builder()
-    except Exception:
-        pytest.skip("datasketches-java not on the Spark classpath")
-
-    # java -> us: exact + estimation sketches over longs and strings
-    for n, strings in [(0, False), (1, False), (3, False), (5, True), (20_000, False)]:
-        b = ds.theta.UpdateSketch.builder()
-        b.setLogNominalEntries(12)
-        sk = b.build()
-        for i in range(n):
-            sk.update(f"key{i}") if strings else sk.update(i)
-        jc = sk.compact()
-        blob = bytes(x & 0xFF for x in jc.toByteArray())
-        ours = TH.deserialize(blob)
-        assert ours.entries.size == jc.getRetainedEntries(True)
-        assert ours.cut == int(jc.getThetaLong())
-        assert ours.estimate() == pytest.approx(jc.getEstimate(), rel=1e-12)
-        # same values hashed by US give the same sketch entries
-        mine = _sk([f"key{i}" for i in range(n)] if strings else range(n))
-        if ours.is_exact:
-            assert np.array_equal(np.sort(ours.entries), mine.entries)
-    # us -> java: serialize ours, heapify in java, estimates agree
-    mine = _sk(range(150_000), 4096)
-    mem = jvm.org.apache.datasketches.memory.Memory.wrap(
-        bytearray(TH.serialize(mine))
-    )
-    jc = ds.theta.CompactSketch.heapify(mem)
-    assert jc.getEstimate() == pytest.approx(mine.estimate(), rel=1e-12)
-    assert int(jc.getThetaLong()) == mine.cut
-    # and java's own union of (java sketch, our blob) still works
-    u = ds.theta.SetOperation.builder().buildUnion()
-    u.union(jc)
-    assert u.getResult().getEstimate() == pytest.approx(mine.estimate(), rel=1e-12)
+    """Blobs built by datasketches-java (serial 3, exact and estimation,
+    longs and strings) estimate through the dialect to the library's
+    rounded getEstimate(), alone and unioned; the RAW union heapifies in
+    the library with the same estimate."""
+    ds = _ds(spark)
+    cases = [
+        (0, False, 12), (1, False, 12), (3, False, 12), (5, True, 12),
+        (3000, False, 12), (3000, True, 6),
+    ]
+    blobs = []
+    for n, strings, lg_k in cases:
+        vals = [f"key{i}" for i in range(n)] if strings else range(n)
+        blob = _java_blob(spark, vals, lg_k)
+        blobs.append(blob)
+        want = round(_heapify(spark, blob).getEstimate())
+        eng = _blob_engine(spark, [blob])
+        assert _one(eng, "SELECT DISTINCTCOUNTTHETASKETCH(th) FROM blobs") == want
+    union = ds.theta.SetOperation.builder().setNominalEntries(4096).buildUnion()
+    for blob in blobs:
+        union.union(_heapify(spark, blob))
+    want = round(union.getResult().getEstimate())
+    eng = _blob_engine(spark, blobs)
+    row = eng.sql(
+        "SELECT DISTINCTCOUNTTHETASKETCH(th) AS e, "
+        "DISTINCTCOUNTRAWTHETASKETCH(th) AS b FROM blobs"
+    ).collect()[0]
+    assert row["e"] == want
+    assert round(_heapify(spark, bytes.fromhex(row["b"])).getEstimate()) == want
 
 
 def test_spark_build_and_sql_set_expression(spark):
-    """The DISTINCT_COUNT_THETA_SKETCH query shape end-to-end: build
-    per-group sketches, union + estimate through the SQL UDFs, and
-    answer an intersection question Python-side from the same blobs."""
+    """The DISTINCT_COUNT_THETA_SKETCH query shape end to end: per-group
+    sketches built by theta_sketch_agg, unioned and estimated through the
+    dialect, and an intersection question answered from the same blobs."""
     from apache_pinot_spark.catalog import load_tables
     from tests.conftest import SF_SMOKE
 
     ev = load_tables(spark, SF_SMOKE)["events"]
-    sk = TH.theta_sketch(ev, ["event_type"], "user_id", k=4096, out_col="theta")
-    rows = {r["event_type"]: r["theta"] for r in sk.collect()}
+    sk = ev.groupBy("event_type").agg(F.expr("theta_sketch_agg(user_id)").alias("th"))
+    eng = PinotEngine(spark)
+    eng.register("theta_by_type", sk)
+    eng.apply_sketch_columns({"th": "theta"})
+    per_type = {
+        r["event_type"]: r["u"]
+        for r in eng.sql(
+            "SELECT event_type, DISTINCTCOUNTTHETASKETCH(th) AS u "
+            "FROM theta_by_type GROUP BY event_type"
+        ).collect()
+    }
     exact = {
         r["event_type"]: r["d"]
-        for r in ev.groupBy("event_type")
-        .agg(F.countDistinct("user_id").alias("d"))
-        .collect()
+        for r in ev.groupBy("event_type").agg(F.countDistinct("user_id").alias("d")).collect()
     }
-    # 15 users total -> every sketch is exact
-    for et, blob in rows.items():
-        assert TH.deserialize(blob).estimate() == float(exact[et])
-
-    TH.register_theta_udfs(spark)
-    sk.createOrReplaceTempView("theta_by_type")
-    est = spark.sql(
-        f"SELECT {TH.ESTIMATE_UDF}({TH.UNION_UDF}(theta)) AS u FROM theta_by_type"
-    ).collect()[0]["u"]
+    assert per_type == exact  # 15 users total -> every sketch is exact
     total = ev.agg(F.countDistinct("user_id")).collect()[0][0]
-    assert est == float(total)
+    assert _one(eng, "SELECT DISTINCTCOUNTTHETASKETCH(th) FROM theta_by_type") == total
 
     # set expression: users who did BOTH 'view' and 'purchase'
-    both = TH.deserialize(rows["view"]).intersect(TH.deserialize(rows["purchase"]))
+    both = _one(
+        eng,
+        "SELECT DISTINCTCOUNTTHETASKETCH(th, 'event_type = ''view''', "
+        "'event_type = ''purchase''', 'SET_INTERSECT($1, $2)') FROM theta_by_type",
+    )
     truth = (
         ev.where("event_type = 'view'").select("user_id").distinct()
         .intersect(ev.where("event_type = 'purchase'").select("user_id").distinct())
         .count()
     )
-    assert both.estimate() == float(truth)
+    assert both == truth
 
 
 def test_spark_partials_stay_bounded(spark):
-    """The map-side partials must already respect the nominal cap — no
-    partial may carry more than k entries (the constant-state claim)."""
-    df = spark.range(100_000).selectExpr("id % 7 AS g", "id AS v")
-    sk = TH.theta_sketch(df, ["g"], "v", k=256, out_col="theta")
-    for r in sk.collect():
-        s = TH.deserialize(r["theta"])
-        assert s.entries.size <= 256
+    """A declared column's union respects the nominal cap: no merged
+    sketch retains more than k entries (the constant-state claim)."""
+    k = 256
+    sk = (
+        spark.range(100_000).selectExpr("id % 7 AS g", "id AS v")
+        .groupBy("g", F.expr("v % 5").alias("seg"))
+        .agg(F.expr("theta_sketch_agg(v, 10)").alias("th"))
+    )
+    eng = PinotEngine(spark)
+    eng.register("segs", sk)
+    eng.apply_sketch_columns({"th": "theta"})
+    rows = eng.sql(
+        f"SELECT g, DISTINCTCOUNTRAWTHETASKETCH(th, 'nominalEntries={k}') AS b "
+        "FROM segs GROUP BY g"
+    ).collect()
+    assert len(rows) == 7
+    for r in rows:
+        s = _heapify(spark, bytes.fromhex(r["b"]))
+        assert s.getRetainedEntries(True) <= k
         # ~14k distinct per group sketched at k=256: within 4 sigma
-        assert abs(s.estimate() - 100_000 / 7) / (100_000 / 7) < 4 / np.sqrt(255)
+        assert abs(s.getEstimate() - 100_000 / 7) / (100_000 / 7) < 4 / np.sqrt(k - 1)
 
 
 # --------------------------------------------------------------------------
@@ -195,7 +269,6 @@ def test_spark_partials_stay_bounded(spark):
 
 
 def test_dialect_theta_over_raw_column_is_exact(spark):
-    from apache_pinot_spark.sqlfront import PinotEngine
     from tests.conftest import SF_SMOKE
 
     eng = PinotEngine(spark, SF_SMOKE, tables=["events"])
@@ -207,11 +280,10 @@ def test_dialect_theta_over_raw_column_is_exact(spark):
 
 def test_dialect_theta_over_bytes_column(spark):
     from apache_pinot_spark.catalog import load_tables
-    from apache_pinot_spark.sqlfront import PinotEngine
     from tests.conftest import SF_SMOKE
 
     ev = load_tables(spark, SF_SMOKE)["events"]
-    sk = TH.theta_sketch(ev, ["event_type"], "user_id", out_col="theta")
+    sk = ev.groupBy("event_type").agg(F.expr("theta_sketch_agg(user_id)").alias("theta"))
     eng = PinotEngine(spark)
     eng.register("theta_by_type", sk)
     eng.apply_sketch_columns({"theta": "theta"})
@@ -222,27 +294,26 @@ def test_dialect_theta_over_bytes_column(spark):
     raw = eng.sql(
         "SELECT DISTINCTCOUNTRAWTHETASKETCH(theta) AS blob FROM theta_by_type"
     ).collect()[0]["blob"]
-    assert TH.deserialize(bytes.fromhex(raw)).estimate() == 15.0
+    assert _heapify(spark, bytes.fromhex(raw)).getEstimate() == 15.0
 
 
 def test_empty_estimation_mode_blob_round_trips(spark):
     """Intersect of disjoint estimation-mode sketches: zero retained
-    entries but theta < MAX — a legal wire state that must serialize,
-    reload, estimate 0, and heapify in the reference library."""
-    a = _sk(range(0, 100_000), 512)
-    b = _sk(range(200_000, 300_000), 512)
-    inter = a.intersect(b)
-    assert inter.entries.size == 0 and inter.cut < TH._EXACT_CUT
-    blob = TH.serialize(inter)
-    back = TH.deserialize(blob)
-    assert back.cut == inter.cut and back.estimate() == 0.0
-    jvm = spark._jvm
-    try:
-        mem = jvm.org.apache.datasketches.memory.Memory.wrap(bytearray(blob))
-        jc = jvm.org.apache.datasketches.theta.CompactSketch.heapify(mem)
-        assert jc.getEstimate() == 0.0 and int(jc.getThetaLong()) == inter.cut
-    except Exception:
-        pytest.skip("datasketches-java not on the Spark classpath")
+    entries but theta < 1 — a legal wire state that must come back as a
+    blob, heapify in the reference library, and estimate 0 when read
+    back through a declared column."""
+    eng = _values_engine(spark, 300_000)
+    raw = _one(
+        eng,
+        "SELECT DISTINCTCOUNTRAWTHETASKETCH(v, 'nominalEntries=512', "
+        "'v < 100000', 'v >= 200000', 'SET_INTERSECT($1, $2)') FROM vals",
+    )
+    blob = bytes.fromhex(raw)
+    jc = _heapify(spark, blob)
+    assert jc.getRetainedEntries(True) == 0 and jc.getTheta() < 1.0
+    assert jc.getEstimate() == 0.0
+    back = _blob_engine(spark, [blob])
+    assert _one(back, "SELECT DISTINCTCOUNTTHETASKETCH(th) FROM blobs") == 0
 
 
 def test_dialect_theta_over_java_built_wire_blobs(spark):
@@ -250,45 +321,27 @@ def test_dialect_theta_over_java_built_wire_blobs(spark):
     registered BYTES column holding WIRE-FORMAT sketches built by the
     real datasketches-java — the migrating-Pinot-user scenario — plus
     merge == rebuild across the java/engine boundary."""
-    from apache_pinot_spark.sqlfront import PinotEngine
-
-    jvm = spark._jvm
-    try:
-        ds = jvm.org.apache.datasketches
-        ds.theta.UpdateSketch.builder()
-    except Exception:
-        pytest.skip("datasketches-java not on the Spark classpath")
-
-    def java_blob(users):
-        b = ds.theta.UpdateSketch.builder()
-        sk = b.build()
-        for u in users:
-            sk.update(u)
-        return bytes(x & 0xFF for x in sk.compact().toByteArray())
 
     # three "segments" with overlapping user sets, as a Pinot table with
     # a pre-aggregated BYTES sketch column would ship them
     segs = [[f"u{i}" for i in range(0, 60)],
             [f"u{i}" for i in range(40, 110)],
             [f"u{i}" for i in range(100, 130)]]
-    rows = [(i, java_blob(s)) for i, s in enumerate(segs)]
-    eng = PinotEngine(spark)
-    eng.register("seg_sketches", spark.createDataFrame(rows, "seg int, theta binary"))
-    eng.apply_sketch_columns({"theta": "theta"})
+    eng = _blob_engine(spark, [_java_blob(spark, s) for s in segs], "seg_sketches")
     got = eng.sql(
-        "SELECT DISTINCTCOUNTTHETASKETCH(theta) AS u FROM seg_sketches"
+        "SELECT DISTINCTCOUNTTHETASKETCH(th) AS u FROM seg_sketches"
     ).collect()[0]["u"]
     assert got == 130  # exact-mode merge across java-built sketches
-    # merge == rebuild: engine-side union of the java blobs equals a
-    # single sketch built over the union of values
-    merged = TH.merge_blobs([b for _, b in rows])
-    rebuilt = _sk([u for s in segs for u in s])
-    assert merged.estimate() == rebuilt.estimate() == 130.0
-    assert np.array_equal(merged.entries, rebuilt.entries)
+    # merge == rebuild: the engine's union of the java blobs holds the
+    # same hashes as one java sketch built over the union of values
+    raw = _one(eng, "SELECT DISTINCTCOUNTRAWTHETASKETCH(th) FROM seg_sketches")
+    merged = _heapify(spark, bytes.fromhex(raw))
+    rebuilt = _heapify(spark, _java_blob(spark, [u for s in segs for u in s]))
+    assert merged.getEstimate() == rebuilt.getEstimate() == 130.0
+    assert sorted(merged.getCache()) == sorted(rebuilt.getCache())
 
 
 def test_dialect_raw_theta_requires_registration(spark):
-    from apache_pinot_spark.sqlfront import PinotEngine
     from tests.conftest import SF_SMOKE
 
     eng = PinotEngine(spark, SF_SMOKE, tables=["events"])
@@ -296,41 +349,34 @@ def test_dialect_raw_theta_requires_registration(spark):
         eng.sql("SELECT DISTINCTCOUNTRAWTHETASKETCH(user_id) FROM events")
 
 
-def test_set_expression_evaluator():
-    a, b, c = _sk(range(0, 100)), _sk(range(50, 150)), _sk(range(140, 160))
-    sks = {"$1": a, "$2": b, "$3": c}
-    assert TH.evaluate_set_expression("$1", sks).estimate() == 100.0
-    assert TH.evaluate_set_expression("SET_UNION($1, $2)", sks).estimate() == 150.0
-    assert TH.evaluate_set_expression("SET_INTERSECT($1, $2)", sks).estimate() == 50.0
-    assert TH.evaluate_set_expression("SET_DIFF($1, $2)", sks).estimate() == 50.0
-    nested = TH.evaluate_set_expression(
-        "SET_INTERSECT(SET_UNION($1, $3), $2)", sks
-    ).estimate()
-    assert nested == 60.0  # (0..100 u 140..160) n (50..150) = 50..100 + 140..150
-    for bad in ("SET_DIFF($1)", "SET_JOIN($1, $2)", "$9", "SET_UNION($1", "$1 $2"):
+def test_set_expression_evaluator(spark):
+    """The set-expression compiler: every form in one query over three
+    filtered sketches, and malformed forms refused by rewrite(), before
+    any Spark job."""
+    eng = _values_engine(spark, 160)
+    preds = "'v < 100', 'v >= 50 AND v < 150', 'v >= 140'"
+    exprs = {
+        "one": "$1",
+        "u": "SET_UNION($1, $2)",
+        "i": "SET_INTERSECT($1, $2)",
+        "d": "SET_DIFF($1, $2)",
+        # (0..100 u 140..160) n (50..150) = 50..100 + 140..150
+        "nested": "SET_INTERSECT(SET_UNION($1, $3), $2)",
+        "u3": "set_union($1, $2, $3)",
+    }
+    cols = ", ".join(
+        f"DISTINCTCOUNTTHETASKETCH(v, {preds}, '{e}') AS {name}" for name, e in exprs.items()
+    )
+    row = eng.sql(f"SELECT {cols} FROM vals").collect()[0].asDict()
+    assert row == {"one": 100, "u": 150, "i": 50, "d": 50, "nested": 60, "u3": 160}
+    for bad in ("SET_DIFF($1)", "SET_JOIN($1, $2)", "$9", "SET_UNION($1", "$1 $2", "", "$0"):
         with pytest.raises(ValueError):
-            TH.evaluate_set_expression(bad, sks)
-
-
-def test_engine_theta_set_estimate_end_to_end(spark):
-    from apache_pinot_spark.sqlfront import PinotEngine
-    from tests.conftest import SF_SMOKE
-
-    eng = PinotEngine(spark, SF_SMOKE, tables=["events"])
-    est = eng.theta_set_estimate(
-        "events", "user_id",
-        ["event_type = 'view'", "event_type = 'purchase'"],
-        "SET_INTERSECT($1, $2)",
-    )
-    ev = eng._dfs["events"]
-    truth = (
-        ev.where("event_type = 'view'").select("user_id").distinct()
-        .intersect(ev.where("event_type = 'purchase'").select("user_id").distinct())
-        .count()
-    )
-    assert est == float(truth)
-    with pytest.raises(ValueError, match="at least one predicate"):
-        eng.theta_set_estimate("events", "user_id", [], "$1")
+            eng.rewrite(f"SELECT DISTINCTCOUNTTHETASKETCH(v, {preds}, '{bad}') FROM vals")
+    # predicates without a set expression; lg k outside the library's 4..26
+    for args in ("'v = 1'", "'nominalEntries=8', 'v = 1', '$1'"):
+        for fn in ("DISTINCTCOUNTTHETASKETCH", "DISTINCTCOUNTRAWTHETASKETCH"):
+            with pytest.raises(ValueError):
+                eng.rewrite(f"SELECT {fn}(v, {args}) FROM vals")
 
 
 def test_in_sql_set_expression_form(spark):
@@ -341,7 +387,6 @@ def test_in_sql_set_expression_form(spark):
     unions), checked against the exact set algebra; the RAW twin
     returns the combined sketch's wire blob."""
     from apache_pinot_spark.catalog import load_tables
-    from apache_pinot_spark.sqlfront import PinotEngine
     from tests.conftest import SF_SMOKE
 
     eng = PinotEngine(spark, SF_SMOKE, tables=["events"])
@@ -381,10 +426,10 @@ def test_in_sql_set_expression_form(spark):
         "'event_type = ''view''', 'event_type = ''purchase''', "
         "'SET_INTERSECT($1, $2)') AS b FROM events"
     ).collect()[0]["b"]
-    assert round(TH.deserialize(bytes.fromhex(raw_hex)).estimate()) == truth_both
+    assert round(_heapify(spark, bytes.fromhex(raw_hex)).getEstimate()) == truth_both
 
     # BYTES sketch column path: per-type sketches, filter on a dim
-    sk = TH.theta_sketch(ev, ["event_type"], "user_id", k=4096, out_col="theta")
+    sk = ev.groupBy("event_type").agg(F.expr("theta_sketch_agg(user_id)").alias("theta"))
     eng.register("theta_t", sk)
     eng.apply_sketch_columns({"theta": "theta"})
     got3 = eng.sql(
@@ -399,10 +444,55 @@ def test_in_sql_set_expression_form(spark):
     assert got3 == truth_union
 
     # malformed: $3 with two predicates must fail at REWRITE time
-    import pytest as _pt
-
-    with _pt.raises(ValueError, match="references"):
+    with pytest.raises(ValueError, match="references"):
         eng.rewrite(
             "SELECT DISTINCTCOUNTTHETASKETCH(user_id, 'a = ''x''', "
             "'SET_UNION($1, $3)') FROM events"
         )
+
+
+def test_temporal_and_decimal_legs_count_distinct_values(spark):
+    """theta_sketch_agg takes no TIMESTAMP, DATE, DECIMAL or small
+    integer input; such raw legs are cast injectively, so the set
+    expression still counts distinct values exactly."""
+    eng = PinotEngine(spark)
+    eng.register(
+        "typed",
+        spark.range(100).selectExpr(
+            "id",
+            "timestamp_micros(id * 1000001) AS ts",
+            "date_add(DATE'2024-01-01', CAST(id AS INT)) AS d",
+            "CAST(id / 4 AS DECIMAL(10, 2)) AS amt",
+            "CAST(id % 50 AS SMALLINT) AS s",
+            "id % 2 = 0 AS b",
+        ),
+    )
+    row = eng.sql(
+        "SELECT "
+        + ", ".join(
+            f"DISTINCTCOUNTTHETASKETCH({c}, 'id < 60', 'id >= 20', 'SET_INTERSECT($1, $2)') AS {c}"
+            for c in ("ts", "d", "amt", "s", "b")
+        )
+        + " FROM typed"
+    ).collect()[0].asDict()
+    assert row == {"ts": 40, "d": 40, "amt": 40, "s": 50, "b": 2}
+
+
+def test_theta_and_datasketches_hll_in_one_select(spark):
+    """Both JVM-native sketch kinds aggregate together in one SELECT,
+    beside Spark's own aggregates."""
+    users = spark.range(2_000).selectExpr("id % 4 AS seg", "id AS uid")
+    segs = users.groupBy("seg").agg(
+        F.expr("theta_sketch_agg(uid)").alias("u_theta"),
+        F.expr("hll_sketch_agg(uid)").alias("u_dshll"),
+    )
+    eng = PinotEngine(spark)
+    eng.register("seg_sketches", segs)
+    eng.apply_sketch_columns({"u_theta": "theta", "u_dshll": "datasketches_hll"})
+    row = eng.sql(
+        "SELECT DISTINCTCOUNTTHETASKETCH(u_theta) AS t, "
+        "DISTINCTCOUNTHLL(u_dshll) AS h, COUNT(*) AS n FROM seg_sketches"
+    ).collect()[0]
+    assert row["t"] == 2_000  # 500 per segment, disjoint: exact mode
+    assert row["h"] == pytest.approx(2_000, rel=0.05)
+    assert row["n"] == 4
